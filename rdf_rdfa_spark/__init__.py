@@ -6,7 +6,6 @@ Layout:
   rdfa/      pure-Python RDFa 1.1 parser (runs inside Arrow/pandas UDFs)
   pipeline/  distributed stages: extract, expand (entailment), fold,
              link (entity linking), canonicalize (MinHash), materialize
-  textops/   training-data ops: dedup, quality, language-ID, similarity
 
 Reference parity is cited per-module as /root/reference/<file>:<line>.
 """

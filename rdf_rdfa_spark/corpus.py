@@ -7,7 +7,7 @@ expressions** that are valid in BOTH Spark SQL and DuckDB. Because
 page HTML is a deterministic SQL function of the document row, the
 expected RDFa triples are themselves expressible as SQL over the same
 table — giving the extraction pipeline a value-level DuckDB oracle
-(driver contract in __spark_entry__.py), not just a row count.
+(tests/test_oracles.py), not just a row count.
 
 Page anatomy (every construct exercises a distinct part of the RDFa
 state machine; citations are to the reference semantics):
@@ -215,66 +215,3 @@ def pages_df(spark, sf_dir: str, repeat: int = 1):
         docs = docs.repartition(parallelism)
     docs.createOrReplaceTempView("documents")
     return spark.sql(pages_sql("spark"))
-
-
-def materialize_scaled_sf(spark, src_sf_dir: str, dst_dir: str,
-                          mult: int = 10) -> str:
-    """Deterministically amplify a testdata sf directory ``mult``× into
-    ``dst_dir`` (e.g. sf0.1 → a synthetic sf1) for scale evidence runs.
-
-    Replicas get disjoint id ranges; document TEXT is re-tokenized per
-    replica (every token suffixed with the replica number) so the
-    near-dup structure scales LINEARLY — without this, replicas would
-    be exact copies of each other and the pairwise dedup workload would
-    grow quadratically by construction of the data rather than by the
-    algorithm. Events shift user ids per replica so session counts
-    scale linearly too. Idempotent: a marker file keyed on (src, mult)
-    makes re-runs free."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    marker = _os.path.join(dst_dir, "_SCALED_OK")
-    want = {"src": src_sf_dir, "mult": mult}
-    if _os.path.exists(marker):
-        try:
-            if _json.load(open(marker)) == want:
-                return dst_dir
-        except (ValueError, OSError):
-            pass
-    _os.makedirs(dst_dir, exist_ok=True)
-    reps = spark.range(mult).withColumnRenamed("id", "_r")
-
-    def amplified(table, shifts, text_retokenize=False):
-        df = spark.read.parquet(_os.path.join(src_sf_dir, table + ".parquet"))
-        out = reps.crossJoin(F.broadcast(df))
-        for col, stride in shifts.items():
-            out = out.withColumn(col, F.col(col) + F.col("_r") * stride)
-        if text_retokenize:
-            out = out.withColumn(
-                "text",
-                F.when(F.col("_r") == 0, F.col("text")).otherwise(
-                    F.expr("regexp_replace(text, '(\\\\S+)', "
-                           "'$1_' || CAST(_r AS STRING))")),
-            )
-        return out.drop("_r").select(*df.columns)
-
-    amplified("documents", {"doc_id": 10 ** 8}, text_retokenize=True) \
-        .repartition(8).write.mode("overwrite") \
-        .parquet(_os.path.join(dst_dir, "documents.parquet"))
-    amplified("events", {"event_id": 10 ** 9, "user_id": 10 ** 6}) \
-        .repartition(8).write.mode("overwrite") \
-        .parquet(_os.path.join(dst_dir, "events.parquet"))
-    amplified("embeddings", {"vec_id": 10 ** 7}) \
-        .repartition(4).write.mode("overwrite") \
-        .parquet(_os.path.join(dst_dir, "embeddings.parquet"))
-    for table in ("region", "nation", "customer", "supplier", "part",
-                  "orders", "lineitem"):
-        src = _os.path.join(src_sf_dir, table + ".parquet")
-        if _os.path.exists(src):
-            spark.read.parquet(src).write.mode("overwrite") \
-                .parquet(_os.path.join(dst_dir, table + ".parquet"))
-    with open(marker, "w") as fh:
-        _json.dump(want, fh)
-    return dst_dir

@@ -116,7 +116,9 @@ def _closure(edges: DataFrame, max_iters: int = 25) -> DataFrame:
         if m == n:
             return nxt
         cur, n = nxt, m
-    return cur
+    raise ValueError(
+        "path closure did not converge within %d rounds (still "
+        "growing) — raise max_iters" % max_iters)
 
 
 def _graph_nodes(triples: DataFrame) -> DataFrame:

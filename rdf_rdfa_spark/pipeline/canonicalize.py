@@ -54,8 +54,8 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     """→ (id, sig array<bigint>). JVM-only expressions.
 
     ``hash_fn`` defaults to the fast JVM xxhash64; pass an
-    SQL-replayable hash (e.g. textops.dedup.md5_60bit) when the
-    output must be value-oracled in DuckDB."""
+    SQL-replayable hash when the signatures themselves must be
+    value-oracled in DuckDB."""
     params = permutation_params(num_hashes)
     if hash_fn is None:
         hash_fn = F.xxhash64

@@ -111,8 +111,9 @@ def entail_fixpoint(triples: DataFrame, tbox: DataFrame,
                     max_iters: int = 20) -> DataFrame:
     """Literal port of the reference's fixpoint loop (expansion.rb:219-232)
     for verification against `entail` — one distributed join per
-    iteration until no growth. Kept for parity testing; `entail` is
-    the production path."""
+    iteration until no growth (ValueError if still growing after
+    ``max_iters``). Kept for parity testing; `entail` is the
+    production path."""
     rows = [(r["sub"], r["rel"], r["sup"]) for r in tbox.collect()]
     prop, cls = set(), set()
     for sub, rel, sup in rows:
@@ -147,7 +148,9 @@ def entail_fixpoint(triples: DataFrame, tbox: DataFrame,
         if nxt_count == count:
             return nxt
         current, count = nxt, nxt_count
-    return current
+    raise ValueError(
+        "entailment fixpoint did not converge within %d rounds (still "
+        "growing) — raise max_iters" % max_iters)
 
 
 # --- vocabulary-driven expansion (reference `expand`, expansion.rb:16-38) --

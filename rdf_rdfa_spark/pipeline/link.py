@@ -44,7 +44,8 @@ def canonical_iri_col(col):
 def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """edges(src, dst) → (node, component) with component = min node id
     (lexicographic). Alternating large-star/small-star; O(log n)
-    rounds, every round a shuffle on node id."""
+    rounds, every round a shuffle on node id.  Raises ValueError when
+    labels still change after ``max_iter`` rounds."""
     # symmetrize + self-loops establish initial labels.
     # localCheckpoint (not just cache) truncates the logical plan each
     # round — iterative joins otherwise grow the lineage exponentially
@@ -63,25 +64,6 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
-    # the driver knows the (materialized) edge count here — size the
-    # per-round shuffles to it, exactly like pagerank: the fixpoint's
-    # many small stages at the session default (2×cores) were pure
-    # scheduling overhead on KB-sized label tables, while a cluster
-    # session's larger default remains the ceiling for web-scale
-    # graphs.  Restored after the loop (every round materializes
-    # eagerly inside it, so the setting covers all execution).
-    sess = edges.sparkSession
-    prev_parts = sess.conf.get("spark.sql.shuffle.partitions")
-    n_edges = e.count()
-    n_parts = max(8, min(int(prev_parts), n_edges // 50_000 + 1))
-    sess.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
-        return _cc_rounds(e, max_iter)
-    finally:
-        sess.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-
-def _cc_rounds(e: DataFrame, max_iter: int) -> DataFrame:
     labels = (
         e.select(F.col("src").alias("node"), F.col("dst"))
         .groupBy("node")
@@ -133,8 +115,10 @@ def _cc_rounds(e: DataFrame, max_iter: int) -> DataFrame:
         changed = jumped.filter(F.col("component") < F.col("old")).limit(1).count()
         labels = jumped.select("node", "component")
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise ValueError(
+        "connected components did not converge within %d rounds "
+        "(labels still changing) — raise max_iter" % max_iter)
 
 
 def sameas_clusters(triples: DataFrame) -> DataFrame:

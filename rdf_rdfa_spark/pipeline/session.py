@@ -1,9 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
-Tuned for the contract environment (local[N], 32 threads, 128 GiB)
-but every knob is the one you'd set on a 1000-executor cluster too:
-AQE (coalesce + skew-join), Arrow batch sizing for page-sized rows,
-and shuffle partitions proportional to parallelism.
+Local mode runs one task thread per CPU unless ``cores`` or
+$SPARK_GRAFT_CPUS says otherwise, but every knob is the one you'd set
+on a 1000-executor cluster too: AQE (coalesce + skew-join), Arrow
+batch sizing for page-sized rows, and shuffle partitions proportional
+to parallelism.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ def get_spark(
     arrow_batch_rows: int = 256,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
     builder = (

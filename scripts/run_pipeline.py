@@ -60,7 +60,8 @@ def main():
                          "DELETE{}INSERT{}WHERE{}) and commit the "
                          "result as a NEW STORE SNAPSHOT")
     ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    help="local task threads (default: $SPARK_GRAFT_CPUS, "
+                         "else every CPU)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession

@@ -1,14 +1,12 @@
 """Spark pipeline tests (slower — one shared session).
 
-Cross-engine value checks live in scripts/oracle_check.py and the
-driver's CORRECTNESS gate; these tests cover the distributed
-algorithms' semantics against in-Python references.
+Cross-engine value checks against DuckDB live in test_oracles.py;
+these tests cover the distributed algorithms' semantics against
+in-Python references.
 """
 
-import json
 import os
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,8 +14,7 @@ from rdf_rdfa_spark import corpus
 from rdf_rdfa_spark.pipeline.expand import entail, entail_fixpoint, tbox_closures
 from rdf_rdfa_spark.pipeline.extract import extract_triples, extract_text
 from rdf_rdfa_spark.pipeline.link import connected_components
-from rdf_rdfa_spark.pipeline import materialize
-from rdf_rdfa_spark.textops import dedup, similarity
+from rdf_rdfa_spark.pipeline import bgpq, canonicalize, materialize
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 SCO = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
@@ -111,6 +108,48 @@ def test_connected_components_long_chain(spark):
     assert set(cc.values()) == {"n000"}
 
 
+# a 7-node chain needs more than one round in every fixpoint loop
+_CHAIN = [("n%d" % i, "n%d" % (i + 1)) for i in range(6)]
+_ONE_ROUND = {
+    "bgpq_closure": lambda spark: bgpq._closure(
+        spark.createDataFrame(_CHAIN, "s string, o string"), max_iters=1),
+    "entail_fixpoint": lambda spark: entail_fixpoint(
+        spark.createDataFrame([("x", "n0", "y")],
+                              "subj string, pred string, obj string"),
+        spark.createDataFrame([(a, SPO, b) for a, b in _CHAIN],
+                              "sub string, rel string, sup string"),
+        max_iters=1),
+    "connected_components": lambda spark: connected_components(
+        spark.createDataFrame(_CHAIN, "src string, dst string"), max_iter=1),
+}
+
+
+@pytest.mark.parametrize("loop", list(_ONE_ROUND))
+def test_fixpoint_loop_raises_at_cap(spark, loop):
+    """A loop that hits its iteration cap fails loudly instead of
+    returning a partial answer."""
+    with pytest.raises(ValueError, match="did not converge"):
+        _ONE_ROUND[loop](spark)
+
+
+def test_link_entities_leaves_session_conf_alone(spark, monkeypatch):
+    """Linking must not change shared session settings: other queries
+    may run on the same session meanwhile."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from rdf_rdfa_spark.pipeline.link import link_entities
+
+    calls = []
+    monkeypatch.setattr(RuntimeConfig, "set",
+                        lambda self, *a, **kw: calls.append(a))
+    triples = spark.createDataFrame(
+        [("u1", "http://e/%d" % i, "http://schema.org/sameAs",
+          "http://e/%d" % (i + 1), "iri") for i in range(5)],
+        "url string, subj string, pred string, obj string, obj_kind string")
+    assert link_entities(triples).count() == 5
+    assert calls == []
+
+
 def test_link_entities_broadcast_and_shuffle_paths(spark):
     """link_entities must rewrite identically whether the cluster map
     is broadcast (default) or falls back to a shuffle join above the
@@ -146,87 +185,12 @@ def test_minhash_lsh_finds_near_dups(spark):
     docs = spark.createDataFrame(
         [(0, base), (1, near), (2, far)], "doc_id long, text string"
     )
-    sigs = dedup.minhash_signatures(docs)
-    pairs = dedup.lsh_candidate_pairs(sigs)
-    verified = dedup.jaccard_verify(pairs, docs, threshold=0.5)
+    sigs = canonicalize.minhash_signatures(docs)
+    pairs = canonicalize.lsh_candidate_pairs(sigs)
+    verified = canonicalize.jaccard_verify(pairs, docs, threshold=0.5)
     got = {(r["a"], r["b"]) for r in verified.collect()}
     assert (0, 1) in got
     assert (0, 2) not in got and (1, 2) not in got
-
-
-def test_simhash_hamming(spark):
-    # needs token diversity: with few distinct tokens most bit votes
-    # tie at 0 and a single extra token flips many bits (verified
-    # offline: these fixtures give hamming 3 and 38)
-    words = ["word%02d" % i for i in range(30)]
-    base = " ".join(words * 3)
-    near = base.replace("word07", "changed", 1)
-    far = " ".join("other%02d" % i for i in range(30))
-    docs = spark.createDataFrame(
-        [(0, base), (1, near), (2, far)], "doc_id long, text string",
-    )
-    pairs = {(r["a"], r["b"]): r["hamming"]
-             for r in dedup.simhash_near_dups(docs, max_hamming=8).collect()}
-    assert (0, 1) in pairs
-    assert (0, 2) not in pairs
-
-
-def test_simhash_bucket_cap_bounds_boilerplate(spark):
-    # boilerplate-heavy corpus: 40 identical template pages share every
-    # signature block → one hot bucket.  The skew cap drops it (no
-    # quadratic reducer); uncapped finds all C(40,2)+1 pairs.
-    tmpl = " ".join("word%02d" % i for i in range(30))
-    rows = [(i, tmpl) for i in range(40)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = dedup.simhash_near_dups(docs, max_hamming=8, max_bucket=8)
-    uncapped = dedup.simhash_near_dups(docs, max_hamming=8, max_bucket=1 << 40)
-    assert capped.count() == 0          # hot bucket (40 > 8) dropped entirely
-    assert uncapped.count() == 40 * 39 // 2
-
-
-def test_ngram_bucket_cap_bounds_skewed_corpus(spark):
-    # single-bucket skew: every doc is same lang + same length decile.
-    # With the cap below the bucket size the self-join sees zero rows.
-    base = "alpha beta gamma delta epsilon zeta eta theta " * 4
-    rows = [(i, base + "tail%d" % i, "en", len(base)) for i in range(30)]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, n_chars long")
-    capped = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5, max_bucket=8)
-    uncapped = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.5,
-                                         max_bucket=1 << 40)
-    assert capped.count() == 0
-    assert uncapped.count() == 30 * 29 // 2
-
-
-def test_cosine_topk_matches_numpy(spark, sf_dir):
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    pdf = emb.toPandas()
-    vecs = np.stack(pdf["embedding"].map(np.asarray).values).astype(np.float64)
-    ids = pdf["vec_id"].values
-    queries = emb.filter("vec_id < 3").selectExpr("vec_id AS qid",
-                                                  "embedding AS qvec")
-    got = similarity.cosine_topk(emb, queries, k=5).toPandas()
-    norms = np.linalg.norm(vecs, axis=1)
-    for qid in range(3):
-        qi = list(ids).index(qid)
-        sims = vecs @ vecs[qi] / (norms * norms[qi])
-        order = sorted(zip(-sims, ids))  # desc score, asc id tiebreak
-        expect = [int(i) for _, i in order[:5]]
-        mine = got[got.qid == qid].sort_values("rank")["vec_id"].tolist()
-        assert mine == expect, f"qid {qid}: {mine} != {expect}"
-
-
-def test_lsh_ann_reasonable_recall(spark, sf_dir):
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    queries = emb.filter("vec_id < 8").selectExpr("vec_id AS qid",
-                                                  "embedding AS qvec")
-    exact = similarity.cosine_topk(emb, queries, k=5).toPandas()
-    approx = similarity.lsh_ann_topk(emb, queries, k=5, n_planes=4,
-                                     dim=64).toPandas()
-    # every query must at least find itself in its own bucket
-    for qid in range(8):
-        mine = set(approx[approx.qid == qid]["vec_id"])
-        assert qid in mine
 
 
 def test_write_triples_append_refuses_modulus_change(spark, tmp_path):
@@ -268,18 +232,6 @@ def test_materialize_resumable(spark, sf_dir, tmp_path):
         materialize.read_triples(spark, root)
         .filter("graph = 'output'").count() > 0
     )
-
-
-def test_multimodal_stub(spark, sf_dir):
-    from rdf_rdfa_spark.textops import multimodal
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).limit(20)
-    feats = multimodal.extract_features(
-        multimodal.documents_as_binary(docs)
-    ).toPandas()
-    assert len(feats) == 20
-    assert feats["n_bytes"].gt(0).all()
-    assert feats["width"].between(16, 79).all()
 
 
 def test_expansion_spec_rules(spark):
@@ -359,90 +311,30 @@ def test_writer_roundtrip(spark, sf_dir):
 
 
 def test_streaming_matches_batch(spark, sf_dir, tmp_path):
-    """The same UDF runs unchanged under Structured Streaming and
-    produces exactly the batch output (availableNow drain)."""
-    from rdf_rdfa_spark.pipeline.streaming import stream_extract
-
+    """The same UDF runs unchanged under Structured Streaming and the
+    store holds exactly the batch output (availableNow drain over
+    several micro-batches)."""
     pages = corpus.pages_df(spark, sf_dir).limit(100).cache()
     in_dir = str(tmp_path / "pages_in")
-    pages.write.parquet(in_dir)
+    pages.repartition(4).write.parquet(in_dir)
 
-    out_dir = str(tmp_path / "triples_out")
-    ckpt = str(tmp_path / "ckpt")
-    q = stream_extract(spark, in_dir, out_dir, ckpt, max_files_per_trigger=2)
+    root, ckpt = str(tmp_path / "store"), str(tmp_path / "ckpt")
+    q = materialize.stream_materialize(spark, in_dir, root, ckpt,
+                                       max_files_per_trigger=2)
     q.awaitTermination(120)
 
-    got = {tuple(r) for r in spark.read.parquet(out_dir).collect()}
-    want = {tuple(r) for r in extract_triples(spark.read.parquet(in_dir)).collect()}
+    # the store names the extractor's NULL default graph "output"
+    want_df = extract_triples(spark.read.parquet(in_dir)).withColumn(
+        "graph", F.coalesce("graph", F.lit("output")))
+    want = {tuple(r) for r in want_df.collect()}
+    got = {tuple(r) for r in materialize.read_triples(spark, root)
+           .select(*want_df.columns).collect()}
     assert got == want and len(got) > 0
 
     # resume: a second availableNow run ingests nothing new
-    q2 = stream_extract(spark, in_dir, out_dir, ckpt)
+    q2 = materialize.stream_materialize(spark, in_dir, root, ckpt)
     q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == len(got)
-
-
-def test_stream_dedup_exact_stateful(spark, sf_dir, tmp_path):
-    """applyInPandasWithState online dedup: each fingerprint emitted
-    exactly once across micro-batches AND across restarts; duplicates
-    appended later never re-emit (state survives in the checkpoint)."""
-    import os
-    from pyspark.sql import functions as F
-    from rdf_rdfa_spark.pipeline.streaming import stream_dedup_exact
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    in_dir = str(tmp_path / "docs_in")
-    out_dir = str(tmp_path / "dedup_out")
-    ckpt = str(tmp_path / "ckpt")
-    docs.write.parquet(in_dir)
-
-    q = stream_dedup_exact(spark, in_dir, out_dir, ckpt)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out_dir)
-    want_fps = {r[0] for r in
-                docs.select(F.md5("text")).distinct().collect()}
-    assert {r["fingerprint"] for r in got.collect()} == want_fps
-    assert got.count() == len(want_fps)
-
-    # append exact duplicates under new ids → nothing new is emitted
-    docs.selectExpr("doc_id + 500000 AS doc_id", "text", "lang",
-                    "source", "n_chars").write.mode("append").parquet(in_dir)
-    q2 = stream_dedup_exact(spark, in_dir, out_dir, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(out_dir).count() == len(want_fps)
-
-
-def test_session_windows_streaming_matches_batch(spark, sf_dir, tmp_path):
-    """session_windows is the streaming-capable sessionizer: the same
-    groupBy(session_window) runs under readStream (stateful session
-    merging + watermark) and drains to exactly the batch output."""
-    import os
-    from pyspark.sql import functions as F
-    from rdf_rdfa_spark.textops.events import session_windows
-
-    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    in_dir = str(tmp_path / "events_in")
-    events.write.parquet(in_dir)
-
-    # watermarks require TIMESTAMP (LTZ); the parquet column is NTZ —
-    # cast identically on both sides
-    cast_ts = lambda df: df.withColumn("ts", F.col("ts").cast("timestamp"))  # noqa: E731
-    events = cast_ts(events)
-    stream = cast_ts(
-        spark.readStream.schema(
-            spark.read.parquet(in_dir).schema).parquet(in_dir)
-    ).withWatermark("ts", "1 hour")
-    q = (
-        session_windows(stream)
-        .writeStream.outputMode("complete")
-        .format("memory").queryName("sess_win")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {tuple(r) for r in spark.sql("SELECT * FROM sess_win").collect()}
-    want = {tuple(r) for r in session_windows(events).collect()}
-    assert got == want and len(got) > 0
+    assert materialize.read_triples(spark, root).count() == len(got)
 
 
 def test_pagerank_deterministic_and_sane(spark):
@@ -497,22 +389,6 @@ def test_split_hot_keys(spark):
     got = split_hot_keys(big, small, "k", hot_threshold=100)
     plain = big.join(small, "k")
     assert got.count() == plain.count() == 520
-
-
-def test_ivf_ann_recall(spark, sf_dir):
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    queries = emb.filter("vec_id < 8").selectExpr("vec_id AS qid",
-                                                  "embedding AS qvec")
-    exact = similarity.cosine_topk(emb, queries, k=10).toPandas()
-    approx = similarity.ivf_ann_topk(emb, queries, k=10, nlist=8,
-                                     nprobe=4).toPandas()
-    recalls = []
-    for qid in range(8):
-        e = set(exact[exact.qid == qid]["vec_id"])
-        a = set(approx[approx.qid == qid]["vec_id"])
-        assert qid in a  # self-retrieval
-        recalls.append(len(e & a) / len(e))
-    assert sum(recalls) / len(recalls) >= 0.5, recalls
 
 
 def test_canonical_iri_col(spark):
@@ -597,21 +473,6 @@ def test_writer_curie_compression():
     assert got == want, (sorted(want - got), sorted(got - want))
 
 
-def test_bpe_token_counts(spark):
-    """GPT-2-style pre-tokenizer classes: contractions split, digits
-    and letters separate, punctuation runs, space-prefixed words."""
-    from rdf_rdfa_spark.textops.quality import bpe_token_counts
-
-    df = spark.createDataFrame(
-        [(1, "It's 42 degrees, isn't it?"), (2, "")],
-        "doc_id long, text string")
-    got = {r["id"]: (r["n_bpe_tokens"], r["n_ws_tokens"])
-           for r in bpe_token_counts(df).collect()}
-    # It |'s | 42 | degrees |, | isn |'t | it |?  -> 9
-    assert got[1] == (9, 5)
-    assert got[2] == (0, 1)
-
-
 def test_register_vocabulary_end_to_end(spark):
     """A user-registered vocabulary (Turtle source) drives distributed
     expansion, mirroring the reference's vocab_repository option."""
@@ -641,16 +502,6 @@ def test_register_vocabulary_end_to_end(spark):
                 "http://upstream.example/Entity") in got
     finally:
         VOCAB_REGISTRY.pop(url, None)
-
-
-def test_auto_bands_matches_threshold_curve():
-    # s50 = (1/b)^(1/r) must sit below threshold - 0.05 with the
-    # largest admissible rows-per-band
-    assert dedup.auto_bands(64, 0.9) == 8      # r=8, s50 ≈ 0.77
-    assert dedup.auto_bands(64, 0.7) == 16     # r=4, s50 = 0.5
-    assert dedup.auto_bands(64, 0.99) == 4     # r=16, s50 ≈ 0.917
-    assert dedup.auto_bands(64, 0.3) == 32     # r=2, s50 ≈ 0.18
-    assert dedup.auto_bands(128, 0.9) == 16    # scales with num_hashes
 
 
 def test_snapshot_time_travel(spark, sf_dir, tmp_path):
@@ -704,51 +555,6 @@ def test_stream_materialize_and_compact(spark, sf_dir, tmp_path):
     for rel in _store_files(root + "/triples"):
         per_part[os.path.dirname(rel)] = per_part.get(os.path.dirname(rel), 0) + 1
     assert max(per_part.values()) == 1
-
-
-def test_strip_boilerplate_semantics(spark):
-    from rdf_rdfa_spark.textops.boilerplate import (
-        boilerplate_lines, strip_boilerplate)
-
-    rows = [
-        (1, "nav\nunique one\nfooter", "h1"),
-        (2, "nav\nunique two\nfooter", "h1"),
-        (3, "nav\nunique three", "h1"),
-        (4, "all alone here", "h2"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    bp = {(r["grp"], r["line"]) for r in boilerplate_lines(docs).collect()}
-    # nav: 3/3 docs; footer: 2/3 ≥ 1/2 → both boilerplate in h1.
-    # h2 has one doc: its single line is trivially 1/1 → stripped too
-    # (min_df applies per group; tiny groups self-identify — callers
-    # gate by group size upstream if that is not wanted)
-    assert ("h1", "nav") in bp and ("h1", "footer") in bp
-    got = {r["id"]: (r["clean_text"], r["n_lines"], r["n_removed"])
-           for r in strip_boilerplate(docs).collect()}
-    assert got[1] == ("unique one", 3, 2)
-    assert got[2] == ("unique two", 3, 2)
-    assert got[3] == ("unique three", 2, 1)
-    assert got[4] == ("", 1, 1)
-
-
-def test_dataset_split_stable_under_growth(spark):
-    """A document's split never changes when the corpus grows — the
-    property that makes hash splits safe for eval-set hygiene."""
-    from rdf_rdfa_spark.textops.filters import dataset_split
-
-    small = spark.createDataFrame([(i,) for i in range(100)], "doc_id long")
-    big = spark.createDataFrame([(i,) for i in range(300)], "doc_id long")
-    s1 = {r["doc_id"]: r["split"] for r in dataset_split(small).collect()}
-    s2 = {r["doc_id"]: r["split"] for r in dataset_split(big).collect()}
-    assert all(s2[k] == v for k, v in s1.items())
-    # ~5/5/90 split, deterministic
-    from collections import Counter
-    c = Counter(s2.values())
-    assert c["train"] > c["val"] > 0 and c["test"] > 0
-    # salt versioning changes assignments
-    s3 = {r["doc_id"]: r["split"]
-          for r in dataset_split(small, salt="v2").collect()}
-    assert s3 != s1
 
 
 def test_bgp_select_semantics(spark):
@@ -828,11 +634,11 @@ def test_lsh_bucket_cap_applied_before_collect(spark):
     tmpl = " ".join("word%02d" % i for i in range(30))
     docs = spark.createDataFrame([(i, tmpl) for i in range(40)],
                                  "doc_id long, text string")
-    sigs = dedup.minhash_signatures(docs)
-    capped = dedup.lsh_candidate_pairs(sigs, max_bucket=8, num_hashes=64)
+    sigs = canonicalize.minhash_signatures(docs)
+    capped = canonicalize.lsh_candidate_pairs(sigs, max_bucket=8, num_hashes=64)
     assert capped.count() == 0          # hot bucket (40 > 8) dropped
-    uncapped = dedup.lsh_candidate_pairs(sigs, max_bucket=1 << 40,
-                                         num_hashes=64)
+    uncapped = canonicalize.lsh_candidate_pairs(sigs, max_bucket=1 << 40,
+                                                num_hashes=64)
     assert uncapped.count() == 40 * 39 // 2
     plan = capped._jdf.queryExecution().executedPlan().toString()
     assert "Window [count(1)" in plan, plan
@@ -840,122 +646,6 @@ def test_lsh_bucket_cap_applied_before_collect(spark):
     # (printed after) the collect aggregate
     assert plan.index("Window [count(1)") > plan.index("collect_list"), plan
     assert plan.count("Exchange hashpartitioning") == 2, plan
-
-
-def test_simhash_bucket_cap_applied_before_collect(spark):
-    tmpl = " ".join("word%02d" % i for i in range(30))
-    docs = spark.createDataFrame([(i, tmpl) for i in range(40)],
-                                 "doc_id long, text string")
-    plan = (dedup.simhash_near_dups(docs, max_bucket=8)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Window [count(1)" in plan, plan
-    assert plan.index("Window [count(1)") > plan.index("collect_list"), plan
-    assert plan.count("Exchange hashpartitioning") == 2, plan
-
-
-def test_emb_lsh_bucket_cap_and_lean_banding(spark):
-    """cosine_near_dup_pairs_lsh production shape: (a) a hot
-    sign-pattern bucket (identical template embeddings) is dropped by
-    the window-count guard BEFORE any pair expansion; (b) the banded
-    exchange carries only (id, tbl, bucket) — embedding vectors never
-    ride it (they used to be exploded n_tables-fold through the
-    self-join and the pair-dedup exchange); (c) guard + collect share
-    one exchange, the pair distinct is the only other."""
-    from pyspark.sql import functions as F
-    from rdf_rdfa_spark.textops.similarity import (
-        cosine_near_dup_pairs_lsh, emb_lsh_candidate_pairs)
-
-    rows = [(i, [1.0] * 64) for i in range(40)]          # one hot bucket
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    assert cosine_near_dup_pairs_lsh(df, max_bucket=8).count() == 0
-    assert (cosine_near_dup_pairs_lsh(df, max_bucket=1 << 20).count()
-            == 40 * 39 // 2)
-    v = df.select(F.col("vec_id").alias("id"),
-                  F.transform(F.col("embedding"),
-                              lambda x: x.cast("double")).alias("v"))
-    plan = (emb_lsh_candidate_pairs(v, 64, 4, 12, 8)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "Window [count(1)" in plan, plan
-    assert plan.index("Window [count(1)") > plan.index("collect_list"), plan
-    assert plan.count("Exchange hashpartitioning") == 2, plan
-    # no vector column above the banded exchange: the first reference
-    # to the cast vector array appears only BELOW it (bucket math)
-    assert plan.index("v#") > plan.index("Exchange hashpartitioning(tbl"), plan
-
-
-def test_ivf_train_releases_vector_cache(spark):
-    """ivf_train caches the vector projection for its Lloyd rounds; a
-    long-lived session must not accumulate one cached corpus per call
-    — after training (centroids eagerly checkpointed) the SQL cache
-    must be empty again.  (pagerank's partitioned edge cache follows
-    the same persist/unpersist discipline.)"""
-    rows = [(i, [float(i % 7), 1.0, float(i % 3)]) for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    spark.catalog.clearCache()
-    cents = similarity.ivf_train(df, nlist=4)
-    assert cents.count() == 4
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def test_exact_duplicates_hot_fingerprint_bounded(spark):
-    """The hottest fingerprint at crawl scale (the empty page) has
-    millions of members: dup_ids must stay capped while n_dups carries
-    the true cardinality; max_ids=None drops membership lists from the
-    plan entirely."""
-    rows = [(i, "same text") for i in range(300)] + [(1000, "unique")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = dedup.exact_duplicates(docs, max_ids=10).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert r["n_dups"] == 300
-    assert r["canonical_id"] == 0
-    assert r["dup_ids"] == list(range(10))   # capped, sorted, smallest-first
-    lean = dedup.exact_duplicates(docs, max_ids=None)
-    assert lean.columns == ["fingerprint", "n_dups", "canonical_id"]
-    assert "collect_list" not in (
-        lean._jdf.queryExecution().executedPlan().toString())
-    # capped path: count window + rank window + collect all cluster on
-    # fingerprint — a single exchange, no guard join
-    plan = (dedup.exact_duplicates(docs, max_ids=10)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
-def test_topk_is_two_phase(spark):
-    """cosine_topk's ranking must be the two-phase plan: a local
-    row_number partitioned by (qid, input-partition) before the global
-    per-qid window, so no single reducer ever sorts the whole scored
-    corpus for a query."""
-    from rdf_rdfa_spark.textops import similarity
-
-    emb = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(50)],
-        "vec_id long, embedding array<double>")
-    q = emb.limit(2).selectExpr("vec_id as qid", "embedding as qvec")
-    topk = similarity.cosine_topk(emb, q, k=3)
-    plan = topk._jdf.queryExecution().executedPlan().toString()
-    windows = [ln for ln in plan.splitlines()
-               if "Window [row_number()" in ln]
-    assert len(windows) == 2, plan
-    # root-first printing: windows[0] is the global phase (qid only),
-    # windows[1] the local phase partitioned by (qid, _part)
-    assert "_part" in windows[1] and "_part" not in windows[0], plan
-    # Spark 4 inserts a map-side Partial WindowGroupLimit below each
-    # exchange, so BOTH shuffles carry ≤ k rows per (group, mapper):
-    # the full scored corpus never crosses the wire
-    assert plan.count("row_number(), 3, Partial") == 2, plan
-    # and the result equals the one-phase answer
-    import numpy as np
-    rows = topk.collect()
-    assert {r["qid"] for r in rows} == {0, 1}
-    for qid in (0, 1):
-        got = [r["vec_id"] for r in sorted(
-            (r for r in rows if r["qid"] == qid), key=lambda r: r["rank"])]
-        qv = np.array([float(qid), 1.0])
-        vs = np.array([[float(i), 1.0] for i in range(50)])
-        cos = (vs @ qv) / (np.linalg.norm(vs, axis=1) * np.linalg.norm(qv))
-        order = sorted(range(50), key=lambda i: (-cos[i], i))[:3]
-        assert got == order
 
 
 def test_bgp_negation_and_modifiers(spark):
