@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .materialize import subject_bucket
+
 _POSITIONS = ("subj", "pred", "obj")
 
 
@@ -453,10 +455,8 @@ def _pattern_df(triples: DataFrame, s_p_o, buckets=None) -> DataFrame:
     part = triples
     if (buckets and "bucket" in triples.columns
             and not isinstance(s_term, tuple)):
-        # same hash the sink used (materialize._bucketed)
         part = part.filter(
-            F.col("bucket") == F.pmod(F.xxhash64(F.lit(s_term)),
-                                      F.lit(buckets)))
+            F.col("bucket") == subject_bucket(F.lit(s_term), buckets))
     for f in filters:
         part = part.filter(f)
     return part.select(*proj).distinct()

@@ -643,15 +643,12 @@ _RAWTEXT_CLOSE = {
 _unescape = _html_mod.unescape
 
 # worker-lifetime token caches shared across _fast_feed calls (see the
-# comment inside); cleared wholesale when a hostile/diverse corpus
-# exceeds the cap — ~64k distinct raw tokens bounds memory to tens of
+# comment inside); each is cleared wholesale when an insert would
+# exceed the cap — ~64k distinct raw tokens bounds memory to tens of
 # MB while a real template crawl stays far below it
 _TOKEN_CACHE_MAX = 1 << 16
 _TAG_CACHE: dict = {}
 _END_CACHE: dict = {}
-# sentinel under a slice key: this start-tag token crosses its first
-# '>' (quoted '>'), so the slice cannot determine it — run the regex
-_XGT = object()
 
 
 def _fast_feed(tb: "_TreeBuilder", text: str) -> None:
@@ -670,7 +667,7 @@ def _fast_feed(tb: "_TreeBuilder", text: str) -> None:
     attr_finditer = _FAST_ATTR.finditer
     closes_get = _CLOSES.get
     rawtext_get = _RAWTEXT_CLOSE.get
-    # WORKER-LIFETIME token caches (module-level, size-capped below):
+    # WORKER-LIFETIME token caches (module-level, size-capped on insert):
     # template-heavy pages repeat identical start-tag strings ~3x
     # WITHIN a page (measured on the reference example corpus) and far
     # more often ACROSS pages of one crawl (one template serves
@@ -683,14 +680,10 @@ def _fast_feed(tb: "_TreeBuilder", text: str) -> None:
     # mutates the cached attrs dicts (the walker's own per-attrs memo
     # relies on exactly that aliasing), so cross-page sharing is safe.
     tag_cache = _TAG_CACHE
-    if len(tag_cache) > _TOKEN_CACHE_MAX:
-        tag_cache.clear()
     tag_cache_get = tag_cache.get
     # end-tag token cache: slice-to-first-'>' → lowercased tag name,
     # or None for a remembered no-match (stray '</ …' text)
     end_cache = _END_CACHE
-    if len(end_cache) > _TOKEN_CACHE_MAX:
-        end_cache.clear()
     end_cache_get = end_cache.get
     while pos < n:
         lt = find("<", pos)
@@ -725,15 +718,13 @@ def _fast_feed(tb: "_TreeBuilder", text: str) -> None:
         # '<div<div<div…' with no '>' is a catastrophic-backtracking
         # bomb (measured minutes for 80 KB) without this guard.
         # The probe's gt also powers two regex-free fast paths:
-        #  - start tags: whether the token ends at the FIRST '>' is a
-        #    pure function of the slice up to it (the regex is
-        #    deterministic and, when it ends there, consumed only the
-        #    slice — same slice, same quote structure, same end), so
-        #    the slice keys the parsed-token cache directly.  The rare
-        #    token that crosses its first '>' (a quoted '>') is
-        #    remembered under the slice key as the _XGT sentinel: those
-        #    occurrences run the regex and cache the attr parse under
-        #    the FULL token string instead.
+        #  - start tags: a QUOTE-FREE slice up to the first '>' is a
+        #    whole token (only a quoted value can carry a '>'), so it
+        #    keys the parsed-token cache directly.  A slice holding a
+        #    quote does not decide where its token ends — the same
+        #    slice ends at its '>' on a truncated page and crosses it
+        #    on a well-formed one — so those tokens always run the
+        #    regex and are memoized under the FULL token string only.
         #  - end tags: an end-tag token is fully determined by the
         #    slice up to the first '>' (its grammar admits no quoting
         #    and cannot cross a '>'), so parse-or-fail is cached.
@@ -742,8 +733,9 @@ def _fast_feed(tb: "_TreeBuilder", text: str) -> None:
                 gt = find(">", lt + 1)
                 if gt != -1:
                     nraw = text[lt:gt + 1]
-                    cached = tag_cache_get(nraw)
-                    if cached is not None and cached is not _XGT:
+                    if '"' not in nraw and "'" not in nraw:
+                        cached = tag_cache_get(nraw)
+                    if cached is not None:
                         m = True
                     else:
                         m = start_match(text, lt)
@@ -756,6 +748,8 @@ def _fast_feed(tb: "_TreeBuilder", text: str) -> None:
                         em = end_match(text, lt)
                         tag_hit = (em.group(1).lower()
                                    if em is not None else None)
+                        if len(end_cache) >= _TOKEN_CACHE_MAX:
+                            end_cache.clear()
                         end_cache[text[lt:gt + 1]] = tag_hit
                     if tag_hit is not None:
                         m = True
@@ -823,16 +817,7 @@ def _fast_feed(tb: "_TreeBuilder", text: str) -> None:
             else:
                 pos = m.end()
                 raw = text[lt:pos]
-                if pos == gt + 1:
-                    # first sighting of a first-'>'-terminated token:
-                    # parse below and cache under raw (== the slice)
-                    cached = None
-                else:
-                    # token crosses its first '>' — mark the slice so
-                    # later occurrences skip straight to the regex, and
-                    # memoize the attr parse under the full token
-                    tag_cache[nraw] = _XGT
-                    cached = tag_cache_get(raw)
+                cached = tag_cache_get(raw)
             if cached is None:
                 start_tag, raw_attrs, selfclose = m.groups()
                 tag = start_tag.lower()
@@ -852,6 +837,8 @@ def _fast_feed(tb: "_TreeBuilder", text: str) -> None:
                             tmpl[name] = val
                 rel = _own_relevance(tag, tmpl)
                 iscope = "itemscope" in tmpl
+                if len(tag_cache) >= _TOKEN_CACHE_MAX:
+                    tag_cache.clear()
                 tag_cache[raw] = (tag, tmpl, selfclose, rel, iscope)
             else:
                 tag, tmpl, selfclose, rel, iscope = cached

@@ -129,8 +129,9 @@ def main():
         # the update is functional: commit it as a NEW bucketed store
         # root (the original store and its snapshots stay intact)
         out_u = os.path.join(args.output, "updated")
-        materialize.write_triples(updated.drop("bucket"), out_u,
-                                  mode="overwrite")
+        materialize.write_triples(
+            updated, out_u, buckets=materialize.store_buckets(args.output),
+            mode="overwrite", kind="update")
         manifest["updated_store"] = out_u
 
     if args.sparql:

@@ -4,8 +4,10 @@ tokenizer byte-equivalent to the stdlib html.parser path on
 adversarial tag soup (the corpus-wide equivalence test covers
 realistic pages; this explores the hostile corners)."""
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
+from rdf_rdfa_spark.rdfa import dom
 from rdf_rdfa_spark.rdfa.dom import parse_html
 from rdf_rdfa_spark.rdfa.walk import RdfaWalker, parse_rdfa
 
@@ -15,7 +17,21 @@ _ATTRS = ["about", "property", "rel", "resource", "typeof", "href",
           "itemprop", "itemtype", "xml:lang", "xmlns:ex", "id", "itemref"]
 _VALS = ["", "x", "schema:name", "[_:b0]", "http://ex.org/a b",
          "ex: http://ex.org/", "&amp;", "<", '"', "rdf:XMLLiteral",
-         "http://schema.org/Thing", "é中", "a" * 300]
+         "http://schema.org/Thing", "é中", "a" * 300, "x>y"]
+
+
+def _reset_token_caches():
+    dom._TAG_CACHE.clear()
+    dom._END_CACHE.clear()
+
+
+@pytest.fixture(autouse=True)
+def cold_token_caches():
+    """Each test starts from empty worker-lifetime tokenizer caches,
+    so its outcome does not depend on what earlier tests parsed."""
+    _reset_token_caches()
+    yield
+    _reset_token_caches()
 
 
 @st.composite
@@ -80,8 +96,8 @@ def test_parse_rdfa_deterministic(soup):
 
 
 @settings(max_examples=80, deadline=None)
-@given(tag_soup(wellformed_attrs=True, hostile=False))
-def test_fast_tokenizer_equivalent_to_stdlib(soup):
+@given(tag_soup(wellformed_attrs=True, hostile=False), st.integers(0, 2000))
+def test_fast_tokenizer_equivalent_to_stdlib(soup, cut):
     doc = "<html><body>%s</body></html>" % soup
 
     def run(fast):
@@ -90,7 +106,38 @@ def test_fast_tokenizer_equivalent_to_stdlib(soup):
         w.parse(root, source_text=doc)
         return list(w.triples)
 
-    assert run(True) == run(False)
+    _reset_token_caches()
+    cold = run(True)
+    assert cold == run(False)
+    # warm-cache ordering: a truncated copy of the page parsed in
+    # between leaves the caches holding its tokens, and the page must
+    # still parse the same afterwards
+    parse_html(doc[:cut % (len(doc) + 1)], html_host=True)
+    assert run(True) == cold
+
+
+def test_token_cache_not_poisoned_by_truncated_page():
+    """A quoted '>' makes the tag's slice up to its first '>' look like
+    a whole token.  A truncated page ending in exactly that slice must
+    not teach the cache that the token ends there."""
+    good = ('<html><body><div vocab="http://schema.org/" typeof="Thing">'
+            '<a title="x>y" href="h" property="url">t</a></div></body></html>')
+    bad = '<html><body><div vocab="http://schema.org/"><a title="x>'
+
+    def preds(doc):
+        return {t[1] for t in parse_rdfa(doc, url="http://example.org/")[0]}
+
+    first = preds(good)
+    assert ("iri", "http://schema.org/url") in first, first
+    preds(bad)
+    assert preds(good) == first
+
+
+def test_token_cache_capped_on_insert(monkeypatch):
+    monkeypatch.setattr(dom, "_TOKEN_CACHE_MAX", 4)
+    doc = "".join("<p id=\"%d\"></p><x%d>" % (i, i) for i in range(20))
+    parse_html(doc, html_host=True)
+    assert len(dom._TAG_CACHE) <= 4 and len(dom._END_CACHE) <= 4
 
 
 def test_stdlib_path_unterminated_constructs_match_fast():

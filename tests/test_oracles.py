@@ -33,11 +33,8 @@ from rdf_rdfa_spark.pipeline.canonicalize import (
 from rdf_rdfa_spark.pipeline.expand import entail
 from rdf_rdfa_spark.pipeline.export import export_rdfa_pages
 from rdf_rdfa_spark.pipeline.extract import extract_text, extract_triples
-from rdf_rdfa_spark.pipeline.graphops import (
-    BASE, DAMP_DEN, DAMP_NUM, SCALE, degrees, pagerank)
 from rdf_rdfa_spark.pipeline.link import sameas_clusters
 from rdf_rdfa_spark.pipeline.materialize import read_triples, stream_materialize
-from rdf_rdfa_spark.pipeline.skew import host_rollup
 from rdf_rdfa_spark.pipeline.sparql import sparql, sparql_update
 from rdf_rdfa_spark.rdfa.terms import RDF_TYPE
 
@@ -318,22 +315,6 @@ def q_entity_link_sameas(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sameas_clusters(q_rdfa_extract(spark, sf_dir))
 
 
-# --- KG analytics and skew ----------------------------------------------------
-
-def q_kg_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return degrees(q_rdfa_extract(spark, sf_dir))
-
-
-def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fixed-point integer PageRank: bit-identical at any parallelism
-    # and exactly replayable in the SQL oracle (10 unrolled rounds)
-    return pagerank(q_rdfa_extract(spark, sf_dir), iters=10)
-
-
-def q_host_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return host_rollup(q_rdfa_extract(spark, sf_dir))
-
-
 # --- MinHash canonicalization -------------------------------------------------
 
 def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,58 +534,6 @@ WHERE len(list_intersect(a.t, b.t)) * 1.0
 """.format(dup=_DUP_CORPUS_SQL)
 
 
-def _kg_degrees_sql(triples_sql: str) -> str:
-    return """
-WITH e AS (SELECT DISTINCT subj AS src, obj AS dst FROM ({t})
-           WHERE obj_kind = 'iri'),
-o AS (SELECT src AS node, COUNT(*) AS out_degree FROM e GROUP BY src),
-i AS (SELECT dst AS node, COUNT(*) AS in_degree FROM e GROUP BY dst)
-SELECT COALESCE(o.node, i.node) AS node,
-       COALESCE(out_degree, 0) AS out_degree,
-       COALESCE(in_degree, 0) AS in_degree
-FROM o FULL JOIN i ON o.node = i.node
-""".format(t=triples_sql)
-
-
-def _kg_pagerank_sql(triples_sql: str, iters: int = 10) -> str:
-    """Integer fixed-point PageRank, the 10 rounds unrolled as chained
-    CTEs — DuckDB SUM(BIGINT) widens to HUGEINT, hence the outer CAST;
-    all arithmetic is exact so the Spark plan matches bit-for-bit."""
-    rounds = []
-    for k in range(1, iters + 1):
-        # d{k}: dangling mass of round k-1 (nodes with no out-edges);
-        # every node receives dang // n_nodes before damping — the
-        # integer teleport, spelled exactly like graphops.pagerank
-        rounds.append("""
-d{k} AS MATERIALIZED (SELECT COALESCE(SUM(pr), 0) AS dang FROM r{km1} r
-         WHERE NOT EXISTS (SELECT 1 FROM od WHERE od.src = r.node)),
-r{k} AS MATERIALIZED (
-  SELECT n.node,
-         CAST({base} + {dn} * (COALESCE(SUM(c.contrib), 0)
-                               + ANY_VALUE(x.dang) // ANY_VALUE(x.n)) // {dd}
-              AS BIGINT) AS pr
-  FROM nodes n
-  CROSS JOIN (SELECT d.dang AS dang, nn.n AS n FROM d{k} d, nn) x
-  LEFT JOIN (
-    SELECT e.dst AS node, r.pr // od.outdeg AS contrib
-    FROM e JOIN r{km1} r ON r.node = e.src
-           JOIN od ON od.src = e.src
-  ) c ON c.node = n.node
-  GROUP BY n.node
-)""".format(k=k, km1=k - 1, base=BASE, dn=DAMP_NUM, dd=DAMP_DEN))
-    return """
-WITH e AS MATERIALIZED (SELECT DISTINCT subj AS src, obj AS dst FROM ({t})
-           WHERE obj_kind = 'iri'),
-nodes AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
-nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM nodes),
-od AS MATERIALIZED (SELECT src, COUNT(*) AS outdeg FROM e GROUP BY src),
-r0 AS MATERIALIZED (SELECT node, CAST({scale} AS BIGINT) AS pr FROM nodes),
-{rounds}
-SELECT node, pr FROM r{iters}
-""".format(t=triples_sql, scale=SCALE, rounds=",".join(rounds),
-           iters=iters)
-
-
 def _dedup_minhash_capped_sql(bands: int = 8, num_hashes: int = 64,
                               max_bucket: int = 64,
                               threshold: float = 0.9) -> str:
@@ -754,12 +683,6 @@ def _queries() -> dict:
         "entail_classes": (q_entail_classes, _ENTAIL_CLASSES_SQL),
         "entail_props": (q_entail_props, _ENTAIL_PROPS_SQL),
         "entity_link_sameas": (q_entity_link_sameas, _ENTITY_LINK_SQL),
-        "kg_degrees": (q_kg_degrees, _kg_degrees_sql(triples)),
-        "kg_pagerank": (q_kg_pagerank, _kg_pagerank_sql(triples)),
-        "host_rollup": (
-            q_host_rollup,
-            "SELECT regexp_extract(url, '^[a-z]+://([^/]+)', 1) AS host, "
-            "COUNT(*) AS n_triples FROM (%s) GROUP BY 1" % triples),
         "dedup_minhash": (q_dedup_minhash, _DEDUP_MINHASH_SQL),
         "dedup_minhash_capped": (q_dedup_minhash_capped,
                                  _dedup_minhash_capped_sql()),

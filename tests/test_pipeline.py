@@ -337,60 +337,6 @@ def test_streaming_matches_batch(spark, sf_dir, tmp_path):
     assert materialize.read_triples(spark, root).count() == len(got)
 
 
-def test_pagerank_deterministic_and_sane(spark):
-    """Integer fixed-point PageRank: identical at different shuffle
-    parallelism (the whole point of the integer formulation) and the
-    hub of a star graph outranks its spokes."""
-    from rdf_rdfa_spark.pipeline.graphops import SCALE, pagerank
-
-    rows = [("u", "http://e/%d" % i, "http://e/p", "http://e/hub", "iri")
-            for i in range(8)]
-    rows.append(("u", "http://e/hub", "http://e/p", "http://e/0", "iri"))
-    triples = spark.createDataFrame(
-        rows, "url string, subj string, pred string, obj string, "
-              "obj_kind string")
-    r1 = {r["node"]: r["pr"] for r in pagerank(triples, iters=5).collect()}
-    r2 = {r["node"]: r["pr"]
-          for r in pagerank(triples.repartition(7), iters=5).collect()}
-    assert r1 == r2
-    assert r1["http://e/hub"] > r1["http://e/1"]
-    # ranks stay in sane fixed-point range
-    assert all(0 < v < 10 * SCALE for v in r1.values())
-
-
-def test_salted_agg_matches_plain(spark, sf_dir):
-    from rdf_rdfa_spark.pipeline.skew import host_rollup
-
-    triples = extract_triples(corpus.pages_df(spark, sf_dir))
-    salted = {(r["host"], r["n_triples"]) for r in host_rollup(triples).collect()}
-    plain = {
-        (r["host"], r["n"])
-        for r in triples.withColumn(
-            "host", F.regexp_extract("url", r"^[a-z]+://([^/]+)", 1)
-        ).groupBy("host").agg(F.count("*").alias("n")).collect()
-    }
-    assert salted == plain
-    # the corpus really is skewed: host0 carries the biggest share
-    top = max(plain, key=lambda t: t[1])
-    assert top[0] == "host0.example.org"
-
-
-def test_split_hot_keys(spark):
-    from rdf_rdfa_spark.pipeline.skew import split_hot_keys
-
-    big = spark.createDataFrame(
-        [("hot", i) for i in range(500)] + [("cold%d" % i, i) for i in range(20)],
-        "k string, v long",
-    )
-    small = spark.createDataFrame(
-        [("hot", "H")] + [("cold%d" % i, "C%d" % i) for i in range(20)],
-        "k string, tag string",
-    )
-    got = split_hot_keys(big, small, "k", hot_threshold=100)
-    plain = big.join(small, "k")
-    assert got.count() == plain.count() == 520
-
-
 def test_canonical_iri_col(spark):
     from rdf_rdfa_spark.pipeline.link import canonical_iri_col
 
@@ -419,7 +365,7 @@ def test_subject_lookup_prunes(spark, sf_dir, tmp_path):
     from rdf_rdfa_spark.pipeline.materialize import read_triples
 
     target = read_triples(spark, root).select("subj").first()["subj"]
-    got = subject_lookup(spark, root, target, buckets=8)
+    got = subject_lookup(spark, root, target)
     rows = got.collect()
     assert rows and all(r["subj"] == target for r in rows)
     # the physical plan must show a partition filter on bucket
@@ -723,7 +669,8 @@ def test_stream_materialize_reconciles_orphan_files(spark, sf_dir, tmp_path):
                                   "*.parquet"))[0]
     orphan = os.path.join(os.path.dirname(some), "part-orphan.c000.parquet")
     shutil.copyfile(some, orphan)
-    assert materialize.read_triples(spark, root).count() > tracked
+    # no manifest lists the orphan, so no read sees it
+    assert materialize.read_triples(spark, root).count() == tracked
     # next stream batch reconciles before appending
     pages.write.parquet(os.path.join(inp, "batch1"))
     q2 = materialize.stream_materialize(
@@ -734,6 +681,123 @@ def test_stream_materialize_reconciles_orphan_files(spark, sf_dir, tmp_path):
     snap = materialize.read_triples(
         spark, root, snapshot=materialize.current_snapshot(root)).count()
     assert plain == snap == 2 * tracked
+
+
+def test_crash_while_writing_head_keeps_previous_snapshot(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A commit that dies after HEAD is opened for writing (the file
+    truncated, then the process gone) must leave the previous snapshot
+    current: it still reads in full, and the next stream batch keeps
+    every committed row."""
+    root, inp = str(tmp_path / "store"), str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    pages = corpus.pages_df(spark, sf_dir).limit(40)
+    pages.write.parquet(os.path.join(inp, "batch0"))
+    materialize.stream_materialize(spark, inp + "/*", root,
+                                   ckpt).awaitTermination()
+    committed = sorted(tuple(r) for r in
+                       materialize.read_triples(spark, root).collect())
+    assert committed
+
+    real_open = open
+
+    def crashing_open(path, mode="r", *a, **kw):
+        if "w" in mode and os.path.basename(path).startswith("HEAD"):
+            real_open(path, mode, *a, **kw).close()
+            raise OSError("simulated crash while writing HEAD")
+        return real_open(path, mode, *a, **kw)
+
+    monkeypatch.setattr(materialize, "open", crashing_open, raising=False)
+    more = corpus.pages_df(spark, sf_dir).limit(80)
+    with pytest.raises(OSError, match="simulated crash"):
+        materialize.materialize_resumable(more, root, chunks=1)
+    monkeypatch.undo()
+
+    assert sorted(tuple(r) for r in
+                  materialize.read_triples(spark, root).collect()) == committed
+    # batch1 repeats batch0's pages: the store ends with both copies,
+    # and nothing of the crashed commit
+    pages.write.parquet(os.path.join(inp, "batch1"))
+    materialize.stream_materialize(spark, inp + "/*", root,
+                                   ckpt).awaitTermination()
+    assert materialize.read_triples(spark, root).count() == 2 * len(committed)
+
+
+def test_read_during_commit_sees_previous_snapshot(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """Between the parquet write and the HEAD swap the new files are on
+    disk but uncommitted: a read then returns the old snapshot."""
+    root = str(tmp_path / "store")
+    materialize.materialize_resumable(
+        corpus.pages_df(spark, sf_dir).limit(40), root, chunks=1)
+    old = materialize.read_triples(spark, root).count()
+    extra = spark.createDataFrame(
+        [("u", "http://x/s%d" % i, "http://x/p", "o", "literal", None, None,
+          None) for i in range(20)],
+        "url string, subj string, pred string, obj string, "
+        "obj_kind string, lang string, datatype string, graph string")
+    seen = []
+    real_replace = os.replace
+
+    def replace(src, dst):
+        if os.path.basename(dst) == "HEAD":
+            seen.append(materialize.read_triples(spark, root).count())
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", replace)
+    materialize.write_triples(extra, root)
+    monkeypatch.undo()
+    assert seen == [old]
+    assert materialize.read_triples(spark, root).count() == old + 20
+
+
+def test_read_triples_memo_under_threads(spark, tmp_path):
+    """Concurrent reads of more roots than the memo keeps: every read
+    returns its own root's live files, and none raises."""
+    import shutil
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    t = spark.createDataFrame(
+        [("u", "http://x/s%d" % i, "p", "o", "literal", None, None, None)
+         for i in range(8)],
+        "url string, subj string, pred string, obj string, "
+        "obj_kind string, lang string, datatype string, graph string")
+    roots = [str(tmp_path / "s0")]
+    materialize.write_triples(t, roots[0], buckets=4)
+    for k in range(1, 2 * materialize._READS_MAX):
+        roots.append(str(tmp_path / ("s%d" % k)))
+        shutil.copytree(roots[0], roots[-1])
+    want = {os.path.basename(f) for f in
+            materialize._manifest(roots[0])["files"]}
+
+    def read(root):
+        files = materialize.read_triples(spark, root).inputFiles()
+        return (all(root in f for f in files)
+                and {os.path.basename(f) for f in files} == want)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            ok = list(pool.map(read, roots * 3, timeout=300))
+    finally:
+        sys.setswitchinterval(old)
+    assert ok == [True] * len(roots) * 3
+
+
+def test_subject_lookup_uses_store_modulus(spark, sf_dir, tmp_path):
+    """subject_lookup hashes with the modulus the store was written
+    with, not a caller-supplied default."""
+    root = str(tmp_path / "store")
+    materialize.materialize_resumable(
+        corpus.pages_df(spark, sf_dir).limit(40), root, chunks=1, buckets=8)
+    subjects = [r["subj"] for r in materialize.read_triples(spark, root)
+                .select("subj").distinct().limit(5).collect()]
+    assert len(subjects) == 5
+    for subj in subjects:
+        rows = materialize.subject_lookup(spark, root, subj).collect()
+        assert rows and all(r["subj"] == subj for r in rows), subj
 
 
 def test_precompaction_snapshot_read_is_partial(spark, sf_dir, tmp_path):
@@ -934,5 +998,5 @@ def test_sparql_bucket_pruning_on_store(spark, sf_dir, tmp_path):
     assert a == b and a
     # and agrees with the dedicated point-lookup helper
     c = {(r["pred"], r["obj"]) for r in materialize.subject_lookup(
-        spark, root, subj, buckets=16).select("pred", "obj").collect()}
+        spark, root, subj).select("pred", "obj").collect()}
     assert a == c

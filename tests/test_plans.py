@@ -27,13 +27,12 @@ _BNLJ_OK = {"entail_props"}
 
 # queries whose page-synthesis step genuinely consumes every
 # documents.parquet column (HTML_EXPR references all five)
-_FULL_DOC_OK = {"rdfa_extract", "writer_roundtrip", "kg_degrees",
-                "kg_pagerank", "kg_bgp", "kg_bgp_minus", "kg_bgp_agg",
-                "kg_sparql", "kg_sparql_meta", "kg_sparql_graph",
-                "kg_sparql_sub", "kg_sparql_update",
+_FULL_DOC_OK = {"rdfa_extract", "writer_roundtrip", "kg_bgp", "kg_bgp_minus",
+                "kg_bgp_agg", "kg_sparql", "kg_sparql_meta",
+                "kg_sparql_graph", "kg_sparql_sub", "kg_sparql_update",
                 "kg_sparql_describe", "rdfa_pred_counts",
                 "rdfa_text_identity", "rdfa_processor_counts",
-                "host_rollup", "entity_link_sameas"}
+                "entity_link_sameas"}
 
 _DOC_FULL = {"doc_id", "text", "lang", "source", "n_chars"}
 
