@@ -1,5 +1,5 @@
-"""Partitioned triple store with snapshot manifests and
-checkpoint-resumable ingest (SURVEY.md S10; north_rule stages 4-5).
+"""Partitioned triple store with snapshot manifests and resumable
+ingest (SURVEY.md S10; north_rule stages 4-5).
 
 Layout (parquet; Iceberg-shaped — bucketed on subject so point lookups
 and subject-grouped joins prune partitions):
@@ -7,21 +7,19 @@ and subject-grouped joins prune partitions):
     <root>/triples/graph=<output|processor>/bucket=<k>/*.parquet
     <root>/_snapshots/v<N>.json        snapshot N's manifest
     <root>/_snapshots/HEAD             the current snapshot id
-    <root>/_progress/chunk-<i>.done    commit markers (idempotent resume)
 
 The manifest is the store: v<N>.json lists every data file live at
-snapshot N, plus the bucketing modulus, parent, kind, chunk and the
-commit's counts.  `write_triples` is the only commit (data files, then
-manifest, then HEAD, each through a temp file and `os.replace`, so a
-crash anywhere leaves the previous snapshot current and whole), and
-`read_triples` the only read (exactly the manifest's files, so files
-of a crashed write are invisible).
+snapshot N and every input consumed by then (``inputs``: batch chunk
+keys ``chunk-<i>/<n>``, stream page file URIs), plus the bucketing
+modulus, parent, kind, chunk and the commit's counts.  `write_triples`
+is the only commit (data files, then manifest, then HEAD, each through
+a temp file and `os.replace`, so a crash anywhere leaves the previous
+snapshot current and whole) and `read_triples` the only read (exactly
+the manifest's files, so a crashed write's files stay invisible).
 
-Resume protocol: input pages are split into `chunks` deterministic
-url-hash chunks, one snapshot each; a chunk's .done marker is written
-only after its snapshot commits, so a re-run skips completed chunks
-and re-runs a crashed one.  With Iceberg available, swap the writer
-for `writeTo(...).append()` and the marker for the snapshot id.
+Resume: `_ingest` commits each batch chunk or group of stream files as
+one snapshot naming it in ``inputs``, so data and "consumed" mark land
+in one HEAD swap, and a re-run ingests what HEAD's ``inputs`` lack.
 """
 
 from __future__ import annotations
@@ -35,11 +33,12 @@ import time
 from functools import reduce
 from urllib.parse import unquote
 
-from pyspark.sql import Column, DataFrame, functions as F
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .extract import extract_triples
-from .schema import TRIPLES_SCHEMA
+from .schema import PAGES_SCHEMA, TRIPLES_SCHEMA
 
 # the columns and types a directory read of the store infers: the data
 # columns, then the graph/bucket partition columns
@@ -53,13 +52,6 @@ def subject_bucket(subj, buckets: int) -> Column:
     (``F.lit(iri)``) Catalyst constant-folds it, so a filter on it
     prunes the scan to one bucket directory at planning time."""
     return F.pmod(F.xxhash64(subj), F.lit(buckets))
-
-
-def _bucketed(triples: DataFrame, buckets: int) -> DataFrame:
-    return (
-        triples.withColumn("graph", F.coalesce("graph", F.lit("output")))
-        .withColumn("bucket", subject_bucket("subj", buckets))
-    )
 
 
 def _store_files(tdir: str) -> set:
@@ -78,7 +70,7 @@ def current_snapshot(root: str) -> int:
 def _manifest(root: str, snapshot: int | None = None) -> dict:
     n = current_snapshot(root) if snapshot is None else snapshot
     if not n:
-        return {"snapshot": 0, "files": [], "buckets": None}
+        return {"snapshot": 0, "files": [], "inputs": [], "buckets": None}
     with open(os.path.join(root, "_snapshots", "v%d.json" % n)) as fh:
         return json.load(fh)
 
@@ -92,15 +84,16 @@ def _replace(path: str, text: str) -> None:
 
 def write_triples(triples: DataFrame, root: str, buckets: int = 64,
                   mode: str = "append", kind: str | None = None,
-                  chunk=None, replaces=(), stats: dict | None = None,
-                  started: float | None = None) -> int:
+                  chunk=None, replaces=(), inputs=(), observed=()) -> int:
     """Write ``triples`` into the store and commit them as a new
     snapshot; returns its id.  ``mode="overwrite"`` replaces the whole
     store; ``"append"`` must keep its bucketing modulus.  ``replaces``
-    lists live files the commit drops (compaction's inputs).  The
-    manifest records ``kind`` (default: the mode), ``chunk``, ``stats``
-    and the seconds since ``started`` (default: this call)."""
-    started = time.time() if started is None else started
+    lists live files the commit drops (compaction's inputs), ``inputs``
+    what it consumed.  The manifest records ``kind`` (default: the
+    mode), ``chunk``, the commit's seconds and, in ``stats``, the
+    ``triples`` written plus the metrics of the ``observed``
+    Observations on the input: the write's one job counts them all."""
+    started = time.time()
     head = _manifest(root)
     # appending with a different modulus than the store was written
     # with would leave old rows in old-modulus partition dirs while
@@ -112,28 +105,41 @@ def write_triples(triples: DataFrame, root: str, buckets: int = 64,
             "with buckets=%d would corrupt bucket pruning — pass "
             "the original modulus" % (root, head["buckets"], buckets))
     tdir = os.path.join(root, "triples")
-    before = _store_files(tdir)
+    live = set(head["files"])
+    # files HEAD does not list are a crashed commit's: with one writer
+    # per store, delete them before adding this commit's
+    for rel in _store_files(tdir) - live:
+        os.remove(os.path.join(tdir, rel))
+    counted = Observation()
     # repartition on the partition key: at most one file per partition
     # per commit.  sortWithinPartitions(pred, subj) clusters each
     # file's row groups by predicate, so a pred-filtered scan (every
     # BGP pattern) skips row groups via min/max stats — the poor man's
     # z-order for the two columns every query filters on
-    (_bucketed(triples, buckets).repartition("graph", "bucket")
-     .sortWithinPartitions("pred", "subj")
+    (triples.observe(counted, F.count(F.lit(1)).alias("triples"))
+     .withColumn("graph", F.coalesce("graph", F.lit("output")))
+     .withColumn("bucket", subject_bucket("subj", buckets))
+     .repartition("graph", "bucket").sortWithinPartitions("pred", "subj")
      .write.mode(mode).partitionBy("graph", "bucket").parquet(tdir))
-    added = _store_files(tdir) - before
-    live = added if mode == "overwrite" else (
-        set(head["files"]) - set(replaces) | added)
+    stats = {"triples": 0}
+    for obs in (counted, *observed):
+        try:
+            stats.update(obs.get)
+        except Py4JJavaError:  # Catalyst pruned an input it proved
+            pass               # empty, and the observation with it
+    added = _store_files(tdir) - live
+    if mode == "overwrite":
+        live, head["inputs"] = set(), []
     n = head["snapshot"] + 1
     sdir = os.path.join(root, "_snapshots")
     os.makedirs(sdir, exist_ok=True)
     _replace(os.path.join(sdir, "v%d.json" % n), json.dumps({
         "snapshot": n, "parent": head["snapshot"] or None,
         "kind": kind or mode, "chunk": chunk, "buckets": buckets,
-        "stats": dict(stats or {},
-                      elapsed_sec=round(time.time() - started, 3)),
+        "stats": dict(stats, elapsed_sec=round(time.time() - started, 3)),
         "files_added": len(added), "files_removed": len(replaces),
-        "files": sorted(live)}))
+        "files": sorted(live - set(replaces) | added),
+        "inputs": sorted(set(head["inputs"]) | set(inputs))}))
     _replace(os.path.join(sdir, "HEAD"), str(n))
     return n
 
@@ -185,34 +191,41 @@ def read_triples(spark, root: str, snapshot: int | None = None) -> DataFrame:
     return hit[2]
 
 
+def _ingest(pages: DataFrame, root: str, buckets: int, chunk, inputs,
+            **extract_kw) -> int:
+    """Extract ``pages`` and commit their triples as one snapshot that
+    records ``inputs`` as consumed, in one Spark action."""
+    seen = Observation()
+    pages = pages.observe(seen, F.count(F.lit(1)).alias("pages"))
+    return write_triples(extract_triples(pages, **extract_kw), root,
+                         buckets=buckets, chunk=chunk, inputs=inputs,
+                         observed=[seen])
+
+
 def materialize_resumable(pages: DataFrame, root: str, chunks: int = 16,
                           buckets: int = 64, **extract_kw) -> dict:
     """Extract + write in url-hash chunks, one snapshot per chunk,
-    skipping chunks whose .done marker exists. Returns a summary
-    dict."""
-    os.makedirs(os.path.join(root, "_progress"), exist_ok=True)
-    done, ran = [], []
+    skipping chunks whose key ``chunk-<i>/<chunks>`` HEAD's ``inputs``
+    already list. Returns a summary dict."""
+    consumed = set(_manifest(root)["inputs"])
+    # resuming under another split would ingest the pages of the chunks
+    # already done a second time — duplicate rows.  Refuse up front.
+    other = {int(k.rsplit("/", 1)[1]) for k in consumed
+             if k.startswith("chunk-")} - {chunks}
+    if other:
+        raise ValueError(
+            "store at %s was ingested with chunks=%d; resuming with "
+            "chunks=%d would ingest pages twice — pass the original "
+            "chunk count" % (root, min(other), chunks))
+    keys = ["chunk-%d/%d" % (i, chunks) for i in range(chunks)]
+    ran = [i for i, key in enumerate(keys) if key not in consumed]
     chunked = pages.withColumn("_chunk", F.pmod(F.xxhash64("url"),
                                                 F.lit(chunks)))
-    for i in range(chunks):
-        marker = os.path.join(root, "_progress", "chunk-%d.done" % i)
-        if os.path.exists(marker):
-            done.append(i)
-            continue
-        t0 = time.time()
-        part = chunked.filter(F.col("_chunk") == i).drop("_chunk")
-        # the commit records per-chunk counts; cache to avoid re-extract
-        triples = extract_triples(part, **extract_kw).cache()
-        stats = {"pages": part.select("url").distinct().count(),
-                 "triples": triples.count()}
-        write_triples(triples, root, buckets=buckets, chunk=i,
-                      stats=stats, started=t0)
-        triples.unpersist()
-        # marker written only after the snapshot committed
-        with open(marker, "w") as f:
-            f.write("ok\n")
-        ran.append(i)
-    return {"chunks": chunks, "skipped": done, "ran": ran}
+    for i in ran:
+        _ingest(chunked.filter(F.col("_chunk") == i).drop("_chunk"), root,
+                buckets, i, [keys[i]], **extract_kw)
+    return {"chunks": chunks, "ran": ran,
+            "skipped": [i for i in range(chunks) if i not in ran]}
 
 
 def lineage_summary(root: str) -> dict:
@@ -243,20 +256,14 @@ def subject_lookup(spark, root: str, subj: str) -> DataFrame:
 
 def compact_store(spark, root: str, max_files_per_partition: int = 1) -> dict:
     """Small-file compaction: every (graph, bucket) partition holding
-    more than ``max_files_per_partition`` live files is rewritten,
-    committed as a ``compact`` snapshot that replaces those files, and
-    the replaced files are physically deleted — the Iceberg
-    rewrite_data_files + expire_snapshots pair collapsed into one
-    maintenance op (time travel to pre-compaction snapshots becomes
-    partial, exactly as after an Iceberg expire).
-
-    ONE Spark job regardless of partition count: the oversized
-    partitions are read together (``read_triples`` plus a partition
-    filter) and rewritten by one ``write_triples`` commit, which writes
-    one file per partition. Incremental micro-batch ingestion
-    (stream_materialize) adds a file per partition per batch, so
-    periodic compaction is what keeps scan task counts flat at crawl
-    scale."""
+    more than ``max_files_per_partition`` live files is rewritten in ONE
+    Spark job (``read_triples`` plus a partition filter, one
+    ``write_triples`` commit of kind ``compact`` that replaces those
+    files), then the replaced files are deleted — Iceberg's
+    rewrite_data_files + expire_snapshots in one op, so time travel to
+    pre-compaction snapshots becomes partial.  Every ingest commit adds
+    a file per partition; periodic compaction keeps scan task counts
+    flat at crawl scale."""
     head = _manifest(root)
     by_part: dict[str, list] = {}
     for rel in head["files"]:
@@ -274,53 +281,44 @@ def compact_store(spark, root: str, max_files_per_partition: int = 1) -> dict:
     snap = write_triples(read_triples(spark, root).filter(cond), root,
                          buckets=head["buckets"], kind="compact",
                          replaces=replaced)
-    tdir = os.path.join(root, "triples")
     for rel in replaced:
-        os.remove(os.path.join(tdir, rel))
+        os.remove(os.path.join(root, "triples", rel))
     return {"rewritten_partitions": oversized, "snapshot": snap,
             "files_removed": len(replaced),
             "files_added": _manifest(root, snap)["files_added"]}
 
 
+class _Finished:  # stream_materialize's handle: the work is done
+    def awaitTermination(self, timeout=None) -> bool:
+        return True
+
+
 def stream_materialize(spark, input_dir: str, root: str,
-                       checkpoint_dir: str, buckets: int = 64,
+                       checkpoint_dir: str | None = None, buckets: int = 64,
                        available_now: bool = True,
                        max_files_per_trigger: int = 16, **extract_kw):
-    """Incremental crawl ingestion: new page files under ``input_dir``
-    stream through the SAME extraction UDF and land in the SAME
-    partitioned store via foreachBatch — each micro-batch commits one
-    snapshot through ``write_triples`` (chunk = ``stream-<batch id>``),
-    so the store stays time-travelable and lineage'd whether it was
-    built by batch chunks, streaming micro-batches, or both.
+    """Incremental crawl ingestion: the page files Spark lists under
+    ``input_dir`` (a directory or a glob) that HEAD's ``inputs`` do not
+    list go through the same `_ingest` as batch chunks, up to
+    ``max_files_per_trigger`` files per snapshot (chunk
+    ``stream-<snapshot>``).  No checkpoint is kept: a re-run ingests
+    what HEAD has not consumed, so a crash anywhere loses or repeats
+    no file.
 
-    foreachBatch is AT-LEAST-once: a crash between the parquet append
-    and the snapshot commit replays the batch, leaving the crashed
-    attempt's files on disk but in no manifest (so no read sees them).
-    Each batch therefore starts by sweeping data files the HEAD
-    manifest does not list before appending — with that reconciliation
-    the store is exactly-once per batch.  This assumes the stream owns
-    the store while it runs (no other writer commits concurrently)."""
-    from .schema import PAGES_SCHEMA
-
-    def _sink(batch_df, batch_id):
-        t0 = time.time()
-        triples = extract_triples(batch_df, **extract_kw).cache()
-        n = triples.count()
-        tdir = os.path.join(root, "triples")
-        for rel in _store_files(tdir) - set(_manifest(root)["files"]):
-            os.remove(os.path.join(tdir, rel))
-        write_triples(triples, root, buckets=buckets,
-                      chunk="stream-%d" % batch_id,
-                      stats={"triples": n}, started=t0)
-        triples.unpersist()
-
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(input_dir)
-    )
-    writer = (pages.writeStream.foreachBatch(_sink)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ``checkpoint_dir`` and ``available_now`` remain only for callers of
+    the former Structured Streaming query: the first is ignored,
+    ``available_now=False`` raises ``ValueError`` (there is no
+    continuous mode), and the return value is a finished handle whose
+    ``awaitTermination`` returns True."""
+    if not available_now:
+        raise ValueError("stream_materialize has no continuous mode")
+    read = spark.read.schema(PAGES_SCHEMA).parquet
+    # Spark lists the leaf files, skipping the hidden _* and .* names
+    new = sorted(set(read(input_dir).inputFiles())
+                 - set(_manifest(root)["inputs"]))
+    for k in range(0, len(new), max_files_per_trigger):
+        group = new[k:k + max_files_per_trigger]
+        _ingest(read(*group), root, buckets,
+                "stream-%d" % (current_snapshot(root) + 1), group,
+                **extract_kw)
+    return _Finished()

@@ -6,9 +6,9 @@
         --chunks 64 [--expand] [--link]
 
 Runs extraction → (optional entailment expansion) → (optional entity
-linking) → checkpoint-resumable materialization with per-chunk
-lineage. Re-running with the same --output resumes: completed chunks
-are skipped via their _progress markers.
+linking) → resumable materialization with per-chunk lineage.
+Re-running with the same --output resumes: chunks the store's HEAD
+manifest lists in its ``inputs`` are skipped.
 
 With --sf-dir instead of --input, synthesizes the deterministic
 CC-style corpus from documents.parquet (testing/bench path).

@@ -81,10 +81,10 @@ def q_writer_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ingest under the value oracle: the same pages go
-    through readStream → extraction → store (availableNow, several
-    micro-batches), and the store must hold exactly the batch oracle's
-    rows — batch ≡ stream."""
+    """Stream ingest under the value oracle: the same pages, written
+    as page files, go through stream_materialize → extraction → store
+    (several commits of up to 3 files), and the store must hold exactly
+    the batch oracle's rows — batch ≡ stream."""
     work = tempfile.mkdtemp(prefix="stream_extract_")
     atexit.register(shutil.rmtree, work, True)
     in_dir = os.path.join(work, "pages")

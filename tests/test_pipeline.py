@@ -212,26 +212,110 @@ def test_write_triples_append_refuses_modulus_change(spark, tmp_path):
     assert materialize.store_buckets(root) == 8
 
 
-def test_materialize_resumable(spark, sf_dir, tmp_path):
+def _rows(spark, root):
+    return sorted(tuple(r) for r in materialize.read_triples(spark, root)
+                  .collect())
+
+
+def _crash_after_commit(monkeypatch, nth):
+    """Make the ``nth`` write_triples call commit, then raise: a process
+    that dies right after its HEAD swap."""
+    real, calls = materialize.write_triples, []
+
+    def write(*a, **kw):
+        calls.append(real(*a, **kw))
+        if len(calls) == nth:
+            raise RuntimeError("simulated crash after commit")
+        return calls[-1]
+
+    monkeypatch.setattr(materialize, "write_triples", write)
+
+
+def test_write_triples_counts_empty_input(spark, tmp_path):
+    """An input Catalyst proves empty is planned away with its
+    observation; the commit still lands and counts 0 triples."""
+    t = spark.createDataFrame([], "url string, subj string, pred string, "
+                              "obj string, obj_kind string, lang string, "
+                              "datatype string, graph string")
+    root = str(tmp_path / "store")
+    n = materialize.write_triples(t, root, buckets=4, inputs=["x"])
+    head = materialize._manifest(root)
+    assert n == 1 and head["stats"]["triples"] == 0
+    assert head["files"] == [] and head["inputs"] == ["x"]
+
+
+def test_materialize_resumable(spark, sf_dir, tmp_path, monkeypatch):
     pages = corpus.pages_df(spark, sf_dir).limit(60).cache()
     root = str(tmp_path / "store")
-    m1 = materialize.materialize_resumable(pages, root, chunks=4)
+    real_write, real_replace = materialize.write_triples, materialize._replace
+
+    def lose_head_swap(path, text):
+        if os.path.basename(path) != "HEAD":
+            real_replace(path, text)
+
+    def write(*a, **kw):
+        if kw.get("chunk") != 2:
+            return real_write(*a, **kw)
+        # chunk 2's commit writes its files and manifest, but the HEAD
+        # swap is lost, as if the process had died there
+        with monkeypatch.context() as m:
+            m.setattr(materialize, "_replace", lose_head_swap)
+            return real_write(*a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(materialize, "write_triples", write)
+        m1 = materialize.materialize_resumable(pages, root, chunks=4)
     assert len(m1["ran"]) == 4 and not m1["skipped"]
-    total1 = materialize.read_triples(spark, root).count()
-    # idempotent resume: nothing re-runs, store unchanged
+    # partial resume: exactly the chunk HEAD's inputs lack re-runs
     m2 = materialize.materialize_resumable(pages, root, chunks=4)
-    assert len(m2["skipped"]) == 4 and not m2["ran"]
-    assert materialize.read_triples(spark, root).count() == total1
-    # partial resume: delete one marker → exactly that chunk re-runs
-    os.remove(os.path.join(root, "_progress", "chunk-2.done"))
+    assert m2["ran"] == [2]
+    total = materialize.read_triples(spark, root).count()
+    # idempotent resume: nothing re-runs, store unchanged
     m3 = materialize.materialize_resumable(pages, root, chunks=4)
-    assert m3["ran"] == [2]
+    assert len(m3["skipped"]) == 4 and not m3["ran"]
+    assert materialize.read_triples(spark, root).count() == total
     lineage = materialize.lineage_summary(root)
-    assert lineage["pages"] >= 60  # chunk-2 counted twice in lineage log
+    assert lineage["pages"] == 60
+    assert lineage["triples"] == total
     assert (
         materialize.read_triples(spark, root)
         .filter("graph = 'output'").count() > 0
     )
+
+
+def test_materialize_resumable_crash_after_commit(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A run that dies right after chunk 0's commit must not ingest
+    chunk 0 again when re-run: the store ends with a clean run's rows,
+    each once."""
+    pages = corpus.pages_df(spark, sf_dir).limit(40).cache()
+    clean, root = str(tmp_path / "clean"), str(tmp_path / "store")
+    materialize.materialize_resumable(pages, clean, chunks=2)
+    _crash_after_commit(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        materialize.materialize_resumable(pages, root, chunks=2)
+    monkeypatch.undo()
+    m = materialize.materialize_resumable(pages, root, chunks=2)
+    assert _rows(spark, root) == _rows(spark, clean)
+    assert m["ran"] == [1] and m["skipped"] == [0]
+
+
+def test_materialize_resumable_refuses_changed_chunk_count(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A chunks=4 run that stopped after chunks 0 and 1 cannot resume
+    as chunks=2: the new split's chunks hold pages already committed,
+    so it must refuse instead of ingesting them twice."""
+    pages = corpus.pages_df(spark, sf_dir).limit(40).cache()
+    root = str(tmp_path / "store")
+    _crash_after_commit(monkeypatch, 2)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        materialize.materialize_resumable(pages, root, chunks=4)
+    monkeypatch.undo()
+    with pytest.raises(ValueError, match="chunks=4"):
+        materialize.materialize_resumable(pages, root, chunks=2)
+    # the original split resumes where it stopped
+    assert materialize.materialize_resumable(
+        pages, root, chunks=4)["ran"] == [2, 3]
 
 
 def test_expansion_spec_rules(spark):
@@ -311,9 +395,8 @@ def test_writer_roundtrip(spark, sf_dir):
 
 
 def test_streaming_matches_batch(spark, sf_dir, tmp_path):
-    """The same UDF runs unchanged under Structured Streaming and the
-    store holds exactly the batch output (availableNow drain over
-    several micro-batches)."""
+    """Stream ingest runs the same UDF and the store holds exactly the
+    batch output (page files ingested over several commits)."""
     pages = corpus.pages_df(spark, sf_dir).limit(100).cache()
     in_dir = str(tmp_path / "pages_in")
     pages.repartition(4).write.parquet(in_dir)
@@ -331,7 +414,7 @@ def test_streaming_matches_batch(spark, sf_dir, tmp_path):
            .select(*want_df.columns).collect()}
     assert got == want and len(got) > 0
 
-    # resume: a second availableNow run ingests nothing new
+    # resume: a second run ingests nothing new
     q2 = materialize.stream_materialize(spark, in_dir, root, ckpt)
     q2.awaitTermination(120)
     assert materialize.read_triples(spark, root).count() == len(got)
@@ -486,11 +569,24 @@ def test_stream_materialize_and_compact(spark, sf_dir, tmp_path):
     n_snaps = materialize.current_snapshot(root)
     assert n_snaps >= 2            # several micro-batches committed
     total = materialize.read_triples(spark, root).count()
+    # each commit counts its pages and triples from its one write
+    stats = [materialize._manifest(root, n)["stats"]
+             for n in range(1, n_snaps + 1)]
+    assert all("pages" in st and "triples" in st for st in stats)
+    assert sum(st["pages"] for st in stats) == 30
+    assert sum(st["triples"] for st in stats) == total
     assert materialize.read_triples(spark, root, snapshot=n_snaps).count() == total
     assert 0 < materialize.read_triples(spark, root, snapshot=1).count() < total
 
+    pre = set(materialize._manifest(root)["files"])
     res = materialize.compact_store(spark, root)
     assert res["rewritten_partitions"]
+    # the compact commit records the rows it rewrote
+    compact = materialize._manifest(root, res["snapshot"])
+    rewritten = spark.read.parquet(*[
+        os.path.join(root, "triples", f)
+        for f in set(compact["files"]) - pre]).count()
+    assert compact["stats"]["triples"] == rewritten > 0
     # plain read, latest-snapshot read, and row content all survive
     assert materialize.read_triples(spark, root).count() == total
     assert materialize.read_triples(
@@ -649,9 +745,9 @@ def test_bgp_optional_rejects_optional_only_shared_vars(spark):
 
 
 def test_stream_materialize_reconciles_orphan_files(spark, sf_dir, tmp_path):
-    """foreachBatch is at-least-once: files appended by a crashed
-    attempt (on disk, in no manifest) must be swept when the batch
-    replays, so plain reads and snapshot reads agree afterwards."""
+    """Files a crashed commit left (on disk, in no manifest) must be
+    swept by the next commit, so plain reads and snapshot reads agree
+    afterwards."""
     import glob
     import shutil
 
@@ -671,7 +767,7 @@ def test_stream_materialize_reconciles_orphan_files(spark, sf_dir, tmp_path):
     shutil.copyfile(some, orphan)
     # no manifest lists the orphan, so no read sees it
     assert materialize.read_triples(spark, root).count() == tracked
-    # next stream batch reconciles before appending
+    # the next commit reconciles before appending
     pages.write.parquet(os.path.join(inp, "batch1"))
     q2 = materialize.stream_materialize(
         spark, inp + "/*", root, str(tmp_path / "ckpt"))
@@ -721,6 +817,35 @@ def test_crash_while_writing_head_keeps_previous_snapshot(
     materialize.stream_materialize(spark, inp + "/*", root,
                                    ckpt).awaitTermination()
     assert materialize.read_triples(spark, root).count() == 2 * len(committed)
+
+
+def test_stream_materialize_crash_after_commit(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A stream run that dies right after its first commit must not
+    ingest that commit's files again when re-run with the same
+    arguments: the store ends with a clean run's rows, each once."""
+    pages = corpus.pages_df(spark, sf_dir).limit(40).cache()
+    in_dir = str(tmp_path / "in")
+    pages.repartition(4).write.parquet(in_dir)
+    clean, root = str(tmp_path / "clean"), str(tmp_path / "store")
+    materialize.stream_materialize(
+        spark, in_dir, clean, str(tmp_path / "ckpt-clean"),
+        max_files_per_trigger=2).awaitTermination()
+    args = (spark, in_dir, root, str(tmp_path / "ckpt"))
+    _crash_after_commit(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        materialize.stream_materialize(
+            *args, max_files_per_trigger=2).awaitTermination()
+    monkeypatch.undo()
+    materialize.stream_materialize(
+        *args, max_files_per_trigger=2).awaitTermination()
+    assert _rows(spark, root) == _rows(spark, clean)
+
+
+def test_stream_materialize_has_no_continuous_mode(spark, tmp_path):
+    with pytest.raises(ValueError, match="continuous"):
+        materialize.stream_materialize(spark, str(tmp_path), str(tmp_path),
+                                       None, available_now=False)
 
 
 def test_read_during_commit_sees_previous_snapshot(
