@@ -4,8 +4,9 @@ ruby-rdf/rdf-rdfa (RDFa 1.1 Core + HTML5 host language).
 
 Layout:
   rdfa/      pure-Python RDFa 1.1 parser (runs inside Arrow/pandas UDFs)
-  pipeline/  distributed stages: extract, expand (entailment), fold,
-             link (entity linking), canonicalize (MinHash), materialize
+  pipeline/  distributed stages: extract, materialize (snapshot store),
+             link (sameAs entity linking), expand (entailment), export,
+             SPARQL
 
 Reference parity is cited per-module as /root/reference/<file>:<line>.
 """
@@ -30,7 +31,6 @@ def _lazy(module, name):
 
 
 extract_triples = _lazy(".pipeline.extract", "extract_triples")
-extract_text = _lazy(".pipeline.extract", "extract_text")
 serialize_rdfa = _lazy(".writer", "serialize_rdfa")
 read_warc_pages = _lazy(".sources.warc", "read_warc_pages")
 read_jsonl_pages = _lazy(".sources.jsonl", "read_jsonl_pages")

@@ -1,7 +1,8 @@
 """Distributed pipeline stages (Spark-side).
 
-extract → (expand) → link → canonicalize → materialize, per SURVEY.md
-§3.1's Spark lifecycle: the only JVM→Python boundary is the Arrow
-batch exchange inside ``extract``; everything after it is built-in
-DataFrame ops (joins/aggregations) that Catalyst plans.
+extract → materialize → link → (expand) → export, and SPARQL over the
+store, per SURVEY.md §3.1's Spark lifecycle: the only JVM→Python
+boundary is the Arrow batch exchange inside ``extract`` (and the
+writer inside ``export``); everything else is built-in DataFrame ops
+(joins/aggregations) that Catalyst plans.
 """

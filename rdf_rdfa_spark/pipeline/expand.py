@@ -22,53 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..rdfa.terms import (
-    OWL_EQUIVCLASS,
-    OWL_EQUIVPROP,
-    RDFS_SUBCLASSOF,
-    RDFS_SUBPROPERTYOF,
-    RDF_TYPE,
-)
-
-SCHEMA_PREDICATES = (
-    RDFS_SUBCLASSOF,
-    RDFS_SUBPROPERTYOF,
-    OWL_EQUIVCLASS,
-    OWL_EQUIVPROP,
-)
-
-
-def _closure(pairs: set) -> set:
-    """Transitive closure of a small driver-side relation."""
-    out = set(pairs)
-    while True:
-        new = {(a, d) for (a, b) in out for (c, d) in out if b == c} - out
-        if not new:
-            return out
-        out |= new
-
-
-def tbox_closures(tbox_rows):
-    """tbox rows (sub, rel, sup) → (prop_map, class_map) as closed
-    super-sets: {p1: {p2, ...}}, {c1: {c2, ...}} (reflexive edges
-    excluded). Equivalence contributes both directions."""
-    prop, cls = set(), set()
-    for sub, rel, sup in tbox_rows:
-        if rel == RDFS_SUBPROPERTYOF:
-            prop.add((sub, sup))
-        elif rel == OWL_EQUIVPROP:
-            prop.add((sub, sup))
-            prop.add((sup, sub))
-        elif rel == RDFS_SUBCLASSOF:
-            cls.add((sub, sup))
-        elif rel == OWL_EQUIVCLASS:
-            cls.add((sub, sup))
-            cls.add((sup, sub))
-    prop, cls = _closure(prop), _closure(cls)
-    return (
-        [(a, b) for (a, b) in prop if a != b],
-        [(a, b) for (a, b) in cls if a != b],
-    )
+from ..rdfa.terms import RDF_TYPE
+from ..rdfa.vocab import VOCAB_REGISTRY, tbox_closures
 
 
 def entail(triples: DataFrame, tbox: DataFrame) -> DataFrame:
@@ -107,57 +62,7 @@ def entail(triples: DataFrame, tbox: DataFrame) -> DataFrame:
     return out.distinct()
 
 
-def entail_fixpoint(triples: DataFrame, tbox: DataFrame,
-                    max_iters: int = 20) -> DataFrame:
-    """Literal port of the reference's fixpoint loop (expansion.rb:219-232)
-    for verification against `entail` — one distributed join per
-    iteration until no growth (ValueError if still growing after
-    ``max_iters``). Kept for parity testing; `entail` is the
-    production path."""
-    rows = [(r["sub"], r["rel"], r["sup"]) for r in tbox.collect()]
-    prop, cls = set(), set()
-    for sub, rel, sup in rows:
-        if rel == RDFS_SUBPROPERTYOF:
-            prop.add((sub, sup))
-        elif rel == OWL_EQUIVPROP:
-            prop.update([(sub, sup), (sup, sub)])
-        elif rel == RDFS_SUBCLASSOF:
-            cls.add((sub, sup))
-        elif rel == OWL_EQUIVCLASS:
-            cls.update([(sub, sup), (sup, sub)])
-    spark = triples.sparkSession
-    pm = spark.createDataFrame(list(prop) or [("", "")], "p1 string, p2 string")
-    cm = spark.createDataFrame(list(cls) or [("", "")], "c1 string, c2 string")
-
-    current = triples.distinct().localCheckpoint()
-    count = current.count()
-    for _ in range(max_iters):
-        inf_p = (
-            current.join(F.broadcast(pm), current["pred"] == pm["p1"])
-            .drop("pred", "p1").withColumnRenamed("p2", "pred")
-            .select(*current.columns)
-        )
-        typed = current.filter(F.col("pred") == RDF_TYPE)
-        inf_c = (
-            typed.join(F.broadcast(cm), typed["obj"] == cm["c1"])
-            .drop("obj", "c1").withColumnRenamed("c2", "obj")
-            .select(*current.columns)
-        )
-        nxt = current.unionByName(inf_p).unionByName(inf_c).distinct().localCheckpoint()
-        nxt_count = nxt.count()
-        if nxt_count == count:
-            return nxt
-        current, count = nxt, nxt_count
-    raise ValueError(
-        "entailment fixpoint did not converge within %d rounds (still "
-        "growing) — raise max_iters" % max_iters)
-
-
 # --- vocabulary-driven expansion (reference `expand`, expansion.rb:16-38) --
-
-# Offline vocabulary registry shared with the per-document walker
-# (rdfa/vocab.py is the single source of truth)
-from ..rdfa.vocab import VOCAB_REGISTRY  # noqa: F401
 
 RDFA_USESVOCABULARY = "http://www.w3.org/ns/rdfa#usesVocabulary"
 

@@ -21,9 +21,8 @@ from typing import Iterator
 
 import pandas as pd
 
-from ..rdfa.dom import decode_html, parse_html
 from ..rdfa.walk import parse_rdfa
-from .schema import TEXT_SCHEMA, TRIPLES_SCHEMA
+from .schema import TRIPLES_SCHEMA
 
 _COLS = ["url", "subj", "pred", "obj", "obj_kind", "lang", "datatype", "graph"]
 
@@ -93,24 +92,3 @@ def extract_triples(pages_df, skolemize: bool = True,
                 yield pd.DataFrame({c: [] for c in _COLS})
 
     return pages_df.select("url", "html").mapInPandas(fn, TRIPLES_SCHEMA)
-
-
-def extract_text_value(html) -> str:
-    """The byte-identical text invariant (BASELINE.json input_hint):
-    entity-decoded concatenation of text nodes of the document, as the
-    reference's inner_text does (nokogiri.rb:96-101, rexml.rb:109-114)."""
-    if isinstance(html, bytes):
-        html = decode_html(html)
-    root, _, _ = parse_html(html)
-    return root.inner_text
-
-
-def extract_text(pages_df):
-    """pages(url, html) → (url, text) via the same tokenizer."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = [extract_text_value(h) for h in pdf["html"].values]
-            yield pd.DataFrame({"url": pdf["url"].values, "text": texts})
-
-    return pages_df.select("url", "html").mapInPandas(fn, TEXT_SCHEMA)

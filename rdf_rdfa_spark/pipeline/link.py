@@ -1,20 +1,15 @@
-"""Distributed entity linking (SURVEY.md J3; north_rule stage 2).
+"""Distributed entity linking (SURVEY.md J3; north_rule stage 2) —
+absent from the single-document reference, which never sees two
+documents at once.
 
-Two mechanisms, both absent from the single-document reference (it
-never sees two documents at once):
-
-1. **IRI canonicalization** — syntactic co-reference: scheme/host
-   case, default ports, empty-path vs '/'. Pure JVM-side column
-   expressions (whole-stage codegen; no Python).
-
-2. **sameAs clustering** — semantic co-reference over
-   owl:sameAs/schema:sameAs edges, via alternating small-star /
-   large-star connected components (Kiveris et al., "Connected
-   Components in MapReduce and Beyond", SoCC'14). Each iteration is a
-   groupBy-min + join; converges in O(log n) rounds. Skewed hub
-   entities are handled by AQE skew-join splitting (enabled in
-   session.py) — the min-label tree never funnels through a single
-   reducer key thanks to the star-splitting.
+One mechanism: **sameAs clustering**, semantic co-reference over
+owl:sameAs/schema:sameAs edges, via min-label propagation with pointer
+jumping (the star-contraction family of Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14).  Each round is a
+groupBy-min + join; converges in O(log diameter) rounds.  Skewed hub
+entities are handled by AQE skew-join splitting (enabled in
+session.py).  `link_entities` rewrites subj/obj to each cluster's
+canonical (lexicographic-min) IRI.
 """
 
 from __future__ import annotations
@@ -27,25 +22,11 @@ SAMEAS_PREDICATES = (
 )
 
 
-def canonical_iri_col(col):
-    """Syntactic IRI canonicalization as JVM expressions: lowercase
-    scheme+authority, strip default http/https ports, add the root
-    slash to authority-only URLs. Non-absolute identifiers (bnodes,
-    urns without //) pass through unchanged."""
-    c = F.concat(
-        F.lower(F.regexp_extract(col, r"^([A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*)", 1)),
-        F.regexp_replace(col, r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*", ""),
-    )
-    c = F.regexp_replace(c, r"^(https?://[^/?#:]+):(?:80|443)($|[/?#])", r"$1$2")
-    c = F.regexp_replace(c, r"^(https?://[^/?#]+)$", r"$1/")
-    return F.when(col.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://"), c).otherwise(col)
-
-
 def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     """edges(src, dst) → (node, component) with component = min node id
-    (lexicographic). Alternating large-star/small-star; O(log n)
-    rounds, every round a shuffle on node id.  Raises ValueError when
-    labels still change after ``max_iter`` rounds."""
+    (lexicographic). Min-label propagation with pointer jumping;
+    O(log diameter) rounds, every round a shuffle on node id.  Raises
+    ValueError when labels still change after ``max_iter`` rounds."""
     # symmetrize + self-loops establish initial labels.
     # localCheckpoint (not just cache) truncates the logical plan each
     # round — iterative joins otherwise grow the lineage exponentially
@@ -53,8 +34,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
     # swap for df.checkpoint() to also survive executor loss.
     # symmetrize in ONE pass over the input (explode, not
     # union-with-swap: a union references `edges` twice and recomputes
-    # the entire upstream plan — e.g. a fused minhash+LSH+verify
-    # pipeline — twice before the checkpoint)
+    # the entire upstream plan — the sameAs filter over the store —
+    # twice before the checkpoint)
     e = (
         edges.select(F.explode(F.array(
             F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
@@ -94,9 +75,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
         )
         # pointer jump: follow the fresh label one more hop
         # (component := min(component, label(component))).  Pure
-        # neighbor-min needs O(diameter) rounds — measured 15 rounds
-        # (5s) on the near-dup chain graph at bench scale; the jump
-        # halves every label chain per round, so convergence is
+        # neighbor-min needs O(diameter) rounds; the jump halves every
+        # label chain per round, so convergence is
         # O(log diameter).  Every component value is itself a node id
         # (min over seen labels), so the left lookup always hits;
         # labels still only ever decrease toward the component min —
@@ -134,7 +114,7 @@ def sameas_clusters(triples: DataFrame) -> DataFrame:
                      F.col("component").alias("canonical"))
 
 
-def link_entities(triples: DataFrame, use_sameas: bool = True,
+def link_entities(triples: DataFrame,
                   max_broadcast_rows: int | None = 10_000_000) -> DataFrame:
     """Rewrite subj/obj to canonical entity IRIs.
 
@@ -149,27 +129,25 @@ def link_entities(triples: DataFrame, use_sameas: bool = True,
     to shuffle hash joins — slower, but they can't OOM an executor.
     Pass None to force the broadcast unconditionally.
     """
-    out = triples
-    if use_sameas:
-        cmap = sameas_clusters(triples)
-        side = F.broadcast
-        if max_broadcast_rows is not None:
-            # the CC fixpoint materialized `cmap` via localCheckpoint,
-            # so this count reuses that work rather than recomputing
-            if cmap.count() > max_broadcast_rows:
-                side = lambda df: df.hint("shuffle_hash")  # noqa: E731
-        out = (
-            out.join(side(cmap), out["subj"] == cmap["entity"], "left")
-            .withColumn("subj", F.coalesce("canonical", "subj"))
-            .drop("entity", "canonical")
-        )
-        cmap2 = cmap.withColumnRenamed("entity", "entity2").withColumnRenamed(
-            "canonical", "canonical2")
-        out = (
-            out.join(side(cmap2),
-                     (out["obj"] == cmap2["entity2"]) & (out["obj_kind"] == "iri"),
-                     "left")
-            .withColumn("obj", F.coalesce("canonical2", "obj"))
-            .drop("entity2", "canonical2")
-        )
+    cmap = sameas_clusters(triples)
+    side = F.broadcast
+    if max_broadcast_rows is not None:
+        # the CC fixpoint materialized `cmap` via localCheckpoint,
+        # so this count reuses that work rather than recomputing
+        if cmap.count() > max_broadcast_rows:
+            side = lambda df: df.hint("shuffle_hash")  # noqa: E731
+    out = (
+        triples.join(side(cmap), triples["subj"] == cmap["entity"], "left")
+        .withColumn("subj", F.coalesce("canonical", "subj"))
+        .drop("entity", "canonical")
+    )
+    cmap2 = cmap.withColumnRenamed("entity", "entity2").withColumnRenamed(
+        "canonical", "canonical2")
+    out = (
+        out.join(side(cmap2),
+                 (out["obj"] == cmap2["entity2"]) & (out["obj_kind"] == "iri"),
+                 "left")
+        .withColumn("obj", F.coalesce("canonical2", "obj"))
+        .drop("entity2", "canonical2")
+    )
     return out

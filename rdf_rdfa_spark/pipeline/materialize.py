@@ -12,10 +12,12 @@ The manifest is the store: v<N>.json lists every data file live at
 snapshot N and every input consumed by then (``inputs``: batch chunk
 keys ``chunk-<i>/<n>``, stream page file URIs), plus the bucketing
 modulus, parent, kind, chunk and the commit's counts.  `write_triples`
-is the only commit (data files, then manifest, then HEAD, each through
-a temp file and `os.replace`, so a crash anywhere leaves the previous
-snapshot current and whole) and `read_triples` the only read (exactly
-the manifest's files, so a crashed write's files stay invisible).
+is the only commit (new data files beside the live ones, then manifest,
+then HEAD, each through a temp file and `os.replace`, and only then the
+deletion of the files it replaces, so a crash anywhere leaves the
+previous snapshot current and whole) and `read_triples` the only read
+(exactly the manifest's files, so a crashed write's files stay
+invisible).
 
 Resume: `_ingest` commits each batch chunk or group of stream files as
 one snapshot naming it in ``inputs``, so data and "consumed" mark land
@@ -87,12 +89,19 @@ def write_triples(triples: DataFrame, root: str, buckets: int = 64,
                   chunk=None, replaces=(), inputs=(), observed=()) -> int:
     """Write ``triples`` into the store and commit them as a new
     snapshot; returns its id.  ``mode="overwrite"`` replaces the whole
-    store; ``"append"`` must keep its bucketing modulus.  ``replaces``
-    lists live files the commit drops (compaction's inputs), ``inputs``
-    what it consumed.  The manifest records ``kind`` (default: the
-    mode), ``chunk``, the commit's seconds and, in ``stats``, the
-    ``triples`` written plus the metrics of the ``observed``
-    Observations on the input: the write's one job counts them all."""
+    store (every live file, and ``inputs`` start over); ``"append"``
+    must keep its bucketing modulus.  ``replaces`` lists live files the
+    commit drops (compaction's inputs), ``inputs`` what it consumed.
+    The manifest records ``kind`` (default: the mode), ``chunk``, the
+    commit's seconds and, in ``stats``, the ``triples`` written plus
+    the metrics of the ``observed`` Observations on the input: the
+    write's one job counts them all.
+
+    New files are always added beside the live ones; the replaced files
+    are deleted only after the HEAD swap, so readers and a crash before
+    it see the previous snapshot whole.  A crash after the swap leaves
+    the replaced files on disk, in no manifest: the next commit's sweep
+    deletes them."""
     started = time.time()
     head = _manifest(root)
     # appending with a different modulus than the store was written
@@ -120,7 +129,7 @@ def write_triples(triples: DataFrame, root: str, buckets: int = 64,
      .withColumn("graph", F.coalesce("graph", F.lit("output")))
      .withColumn("bucket", subject_bucket("subj", buckets))
      .repartition("graph", "bucket").sortWithinPartitions("pred", "subj")
-     .write.mode(mode).partitionBy("graph", "bucket").parquet(tdir))
+     .write.mode("append").partitionBy("graph", "bucket").parquet(tdir))
     stats = {"triples": 0}
     for obs in (counted, *observed):
         try:
@@ -129,7 +138,7 @@ def write_triples(triples: DataFrame, root: str, buckets: int = 64,
             pass               # empty, and the observation with it
     added = _store_files(tdir) - live
     if mode == "overwrite":
-        live, head["inputs"] = set(), []
+        replaces, head["inputs"] = live, []
     n = head["snapshot"] + 1
     sdir = os.path.join(root, "_snapshots")
     os.makedirs(sdir, exist_ok=True)
@@ -141,6 +150,8 @@ def write_triples(triples: DataFrame, root: str, buckets: int = 64,
         "files": sorted(live - set(replaces) | added),
         "inputs": sorted(set(head["inputs"]) | set(inputs))}))
     _replace(os.path.join(sdir, "HEAD"), str(n))
+    for rel in replaces:
+        os.remove(os.path.join(tdir, rel))
     return n
 
 
@@ -243,23 +254,12 @@ def lineage_summary(root: str) -> dict:
             "triples": sum(c.get("triples", 0) for c in chunks)}
 
 
-def subject_lookup(spark, root: str, subj: str) -> DataFrame:
-    """Point lookup on the materialized store: filter on the subject's
-    bucket under the store's own modulus, a partition filter, so the
-    scan prunes to one bucket directory (1/buckets of the store) before
-    touching row groups — the reason the sink buckets on subject
-    (SURVEY S10)."""
-    bucket = subject_bucket(F.lit(subj), store_buckets(root))
-    return (read_triples(spark, root)
-            .filter((F.col("bucket") == bucket) & (F.col("subj") == subj)))
-
-
 def compact_store(spark, root: str, max_files_per_partition: int = 1) -> dict:
     """Small-file compaction: every (graph, bucket) partition holding
     more than ``max_files_per_partition`` live files is rewritten in ONE
     Spark job (``read_triples`` plus a partition filter, one
     ``write_triples`` commit of kind ``compact`` that replaces those
-    files), then the replaced files are deleted — Iceberg's
+    files and deletes them after its HEAD swap) — Iceberg's
     rewrite_data_files + expire_snapshots in one op, so time travel to
     pre-compaction snapshots becomes partial.  Every ingest commit adds
     a file per partition; periodic compaction keeps scan task counts
@@ -281,8 +281,6 @@ def compact_store(spark, root: str, max_files_per_partition: int = 1) -> dict:
     snap = write_triples(read_triples(spark, root).filter(cond), root,
                          buckets=head["buckets"], kind="compact",
                          replaces=replaced)
-    for rel in replaced:
-        os.remove(os.path.join(root, "triples", rel))
     return {"rewritten_partitions": oversized, "snapshot": snap,
             "files_removed": len(replaced),
             "files_added": _manifest(root, snap)["files_added"]}

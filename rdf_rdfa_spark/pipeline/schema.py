@@ -39,10 +39,3 @@ TRIPLES_SCHEMA = StructType(
         StructField("graph", StringType(), True),
     ]
 )
-
-TEXT_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("text", StringType(), True),
-    ]
-)

@@ -580,28 +580,6 @@ def decode_html(raw: bytes) -> str:
         return raw.decode("utf-8", "replace")
 
 
-# --- format detection (S1; /root/reference/lib/rdf/rdfa/format.rb:38-42) --
-
-_RDFA_MARKER_RE = re.compile(
-    r'<[^>]*(about|resource|prefix|typeof|property|vocab)\s*="[^>]*>', re.S)
-_DOCTYPE_XMLNS_RE = re.compile(r"<[^>]*DOCTYPE\s+html[^>]*>.*xmlns:", re.I | re.S)
-_RDFXML_RE = re.compile(r"<(\w+:)?(RDF)")
-
-
-def looks_like_rdfa(sample) -> bool:
-    """Sniff ~1KB for RDFa markers vs RDF/XML, mirroring the
-    reference's Format.detect. Used as a cheap JVM-side-prefilterable
-    predicate when the corpus is not a declared-RDFa crawl."""
-    if isinstance(sample, bytes):
-        sample = sample[:1024].decode("utf-8", "replace")
-    else:
-        sample = sample[:1024]
-    return bool(
-        (_RDFA_MARKER_RE.search(sample) or _DOCTYPE_XMLNS_RE.search(sample))
-        and not _RDFXML_RE.search(sample)
-    )
-
-
 # --- fast scanner: single-regex HTML tokenizer -------------------------
 # Drives the same _TreeBuilder handlers as html.parser but with one
 # compiled scanner pass; ~2x faster on real pages. Equivalence with

@@ -73,7 +73,6 @@ from .terms import (
     bnode,
     iri,
     is_iri,
-    is_resource,
     literal,
 )
 
@@ -254,7 +253,8 @@ class RdfaWalker:
     def add_triple(self, subject, predicate, object_):
         if subject is None or predicate is None or object_ is None:
             return
-        # inlined is_resource/is_iri: this runs once per emitted triple
+        # resource subject, IRI predicate — checked inline: this runs
+        # once per emitted triple
         if subject[0] not in (IRI, BNODE) or predicate[0] != IRI:
             self.add_error(None, "invalid statement (%r %r %r)" % (subject, predicate, object_))
             return

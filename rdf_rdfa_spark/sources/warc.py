@@ -296,9 +296,9 @@ def read_warc_pages(spark: SparkSession, path: str,
                     batch_rows: int = 256) -> DataFrame:
     """WARC file glob → pages(url, warc_ts, html, text, lang).
 
-    `text`/`lang` are NULL here (they come from extract_text /
-    lang-id downstream); the columns exist so every source lands on
-    the same input_hint schema.
+    `text`/`lang` are NULL here (the pipeline reads only url and
+    html); the columns exist so every source lands on the same
+    input_hint schema.
 
     Pages are emitted in ``batch_rows``-sized Arrow batches as the
     record stream is consumed, and the file's BYTES are streamed from

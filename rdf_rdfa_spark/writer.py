@@ -1,172 +1,41 @@
-"""XHTML+RDFa serializer (SURVEY.md S11).
+"""XHTML+RDFa serializer (SURVEY.md S11): `serialize_rdfa`.
 
-The reference Writer is an 824-line Haml-template engine
-(/root/reference/lib/rdf/rdfa/writer.rb) — a single-node debug tool,
-not a distributed stage. This keeps its contract (graph → XHTML+RDFa
-whose re-parse is isomorphic to the input) in a compact form that
-mirrors the reference's observable output behaviors:
+A re-implementation of the reference's default Haml template pipeline
+(lib/rdf/rdfa/writer.rb:121-824, haml_templates.rb BASE_HAML), keeping
+its contract — graph → XHTML+RDFa whose re-parse is isomorphic to the
+input — and its observable output:
 
-  - prefix declarations minted from the RDFa initial context and used
-    to compress predicates/datatypes/types to CURIEs, with only the
-    prefixes actually used declared in @prefix (writer.rb:366-390
-    preprocess + writer.rb:171 prefix attribute).
-  - subjects ordered IRIs-first then bnodes, lexicographic within
-    (writer.rb:397-427 order_subjects' spirit).
-  - rdf:type statements folded into @typeof on the subject element
-    (writer.rb:273-283 subject template).
-  - predicates sorted within a subject (writer.rb:434-450).
+  - predicates, datatypes and types compressed to CURIEs minted from
+    the RDFa initial context, with only the prefixes actually used
+    declared in html/@prefix (writer.rb:366-390 preprocess);
+  - ordered subjects, rdf:type folded into @typeof (writer.rb:273-283),
+    heading-predicate h1s, div.property/span.label leaves, nested
+    resource recursion under div[@rel];
+  - rdf:List rendering with @inlist, humanized date/time/dateTime
+    values with the machine form in @content.
 
-Round-trip is tested through OUR OWN reader (writer_spec.rb does the
-same, writer_spec.rb:546).
-
-Driver-side only by design: serialize small graphs (debug, goldens,
-samples), never the corpus.
+Verified against the xpath assertions the reference's writer_spec.rb
+makes (tests/test_writer_spec.py) and by round-trip through our own
+reader (writer_spec.rb:546 does the same).  `export_rdfa_pages` runs it
+per url as a Spark stage.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import re
-from collections import defaultdict
 
-from .rdfa.contexts import RDFA_CORE_PREFIXES
+from .rdfa.contexts import initial_context
 from .rdfa.dom import c14n_fragment
-from .rdfa.terms import RDF_TYPE
+from .rdfa.terms import RDF_NS, RDF_TYPE, RDF_XMLLITERAL, XSD_NS
 
 _ESC = {"&": "&amp;", "<": "&lt;", ">": "&gt;", '"': "&quot;"}
 _ESC_TRANS = str.maketrans(_ESC)
-
-# suffix that survives CURIE round-tripping (conservative NCName-ish)
-_SUFFIX_OK = re.compile(r"^[A-Za-z_][A-Za-z0-9_.\-]*$")
 
 
 def _esc(s: str) -> str:
     return s.translate(_ESC_TRANS)
 
-
-class _CurieMinter:
-    """uri → CURIE against the initial-context prefixes, tracking
-    which prefixes were actually used (reference: @uri_to_prefix +
-    options[:prefixes] accumulation, writer.rb:383-390)."""
-
-    def __init__(self, extra_prefixes: dict | None = None):
-        self.ns_to_prefix = {}
-        for pfx, ns in RDFA_CORE_PREFIXES.items():
-            # prefer 'dc' over 'dcterms' for the same namespace, like
-            # the reference (writer.rb:373)
-            if pfx == "dcterms":
-                continue
-            self.ns_to_prefix.setdefault(ns, pfx)
-        for pfx, ns in (extra_prefixes or {}).items():
-            self.ns_to_prefix[ns] = pfx
-        self.used: dict[str, str] = {}  # prefix -> ns
-
-    def curie(self, iri: str) -> str:
-        for cut in (iri.rfind("#"), iri.rfind("/")):
-            if cut <= 0:
-                continue
-            ns, suffix = iri[: cut + 1], iri[cut + 1:]
-            pfx = self.ns_to_prefix.get(ns)
-            if pfx and _SUFFIX_OK.match(suffix):
-                self.used[pfx] = ns
-                return "%s:%s" % (pfx, suffix)
-        return iri
-
-    def prefix_attr(self) -> str:
-        return " ".join("%s: %s" % (p, ns)
-                        for p, ns in sorted(self.used.items()))
-
-
-def to_rdfa_html(rows, title: str = "RDFa export",
-                 prefixes: dict | None = None) -> str:
-    """rows: iterables of (subj, pred, obj, obj_kind, lang, datatype)
-    — e.g. ``df.select(...).collect()`` on a small triples DataFrame.
-    Returns an XHTML+RDFa 1.1 document string."""
-    minter = _CurieMinter(prefixes)
-    by_subj: dict[str, list] = defaultdict(list)
-    types: dict[str, list] = defaultdict(list)
-    for r in rows:
-        subj, pred, obj, obj_kind, lang, datatype = r[:6]
-        if pred == RDF_TYPE and obj_kind == "iri":
-            types[subj].append(obj)
-            by_subj[subj]  # ensure type-only subjects still emit a div
-        else:
-            by_subj[subj].append((pred, obj, obj_kind, lang, datatype))
-
-    # IRIs first then bnodes, lexicographic within (writer.rb:397-427)
-    subjects = sorted(by_subj, key=lambda s: (s.startswith("_:"), s))
-
-    body = []
-    for subj in subjects:
-        # bnodes as SafeCURIEs ([_:b0]) — the RDFa-grammar form for
-        # blank nodes in @about/@resource
-        attrs = 'about="%s"' % _esc(
-            "[%s]" % subj if subj.startswith("_:") else subj)
-        if types.get(subj):
-            attrs += ' typeof="%s"' % _esc(
-                " ".join(minter.curie(t) for t in sorted(types[subj])))
-        body.append("<div %s>" % attrs)
-        for pred, obj, obj_kind, lang, datatype in sorted(by_subj[subj]):
-            p = _esc(minter.curie(pred))
-            if obj_kind == "iri":
-                body.append('<link rel="%s" href="%s"/>' % (p, _esc(obj)))
-            elif obj_kind == "bnode":
-                body.append('<link rel="%s" resource="[%s]"/>'
-                            % (p, _esc(obj if obj.startswith("_:")
-                                       else "_:" + obj)))
-            elif datatype:
-                body.append(
-                    '<span property="%s" datatype="%s" content="%s"></span>'
-                    % (p, _esc(minter.curie(datatype)), _esc(obj)))
-            elif lang:
-                body.append(
-                    '<span property="%s" lang="%s" content="%s"></span>'
-                    % (p, _esc(lang), _esc(obj)))
-            else:
-                # empty @datatype forces a plain literal even for
-                # text that looks like something else
-                body.append(
-                    '<span property="%s" datatype="" content="%s"></span>'
-                    % (p, _esc(obj)))
-        body.append("</div>")
-
-    prefix_attr = minter.prefix_attr()
-    parts = [
-        "<!DOCTYPE html>",
-        '<html xmlns="http://www.w3.org/1999/xhtml"%s>'
-        % ((' prefix="%s"' % _esc(prefix_attr)) if prefix_attr else ""),
-        "<head><title>%s</title></head>" % _esc(title),
-        "<body>",
-        *body,
-        "</body></html>",
-    ]
-    return "\n".join(parts)
-
-
-def df_to_rdfa_html(triples_df, limit: int = 10000, **kw) -> str:
-    rows = (
-        triples_df.select("subj", "pred", "obj", "obj_kind", "lang", "datatype")
-        .limit(limit)
-        .collect()
-    )
-    return to_rdfa_html(rows, **kw)
-
-
-# === Full default-template writer (writer.rb + haml_templates.rb BASE) ====
-#
-# A faithful re-implementation of the reference's default Haml
-# template pipeline (writer.rb:121-824, haml_templates.rb BASE_HAML):
-# ordered subjects, heading-predicate h1s, div.property/span.label
-# leaves, nested resource recursion under div[@rel], rdf:List
-# rendering with @inlist, humanized date/time/dateTime values with the
-# machine form in @content, used-prefix accumulation into
-# html/@prefix.  Verified against the xpath assertions the reference's
-# writer_spec.rb makes (tests/test_writer_spec.py) and by round-trip
-# through our own reader.
-
-import datetime as _dt
-
-from .rdfa.contexts import initial_context
-from .rdfa.terms import RDF_NS, RDF_XMLLITERAL, XSD_NS
 
 _RDF_FIRST = RDF_NS + "first"
 _RDF_REST = RDF_NS + "rest"

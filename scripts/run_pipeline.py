@@ -37,7 +37,6 @@ def main():
     ap.add_argument("--output", required=True)
     ap.add_argument("--chunks", type=int, default=16)
     ap.add_argument("--buckets", type=int, default=64)
-    ap.add_argument("--repeat", type=int, default=1)
     ap.add_argument("--expand", action="store_true",
                     help="apply vocabulary-expansion entailment to the store")
     ap.add_argument("--link", action="store_true",
@@ -92,7 +91,7 @@ def main():
 
         pages = read_jsonl_pages(spark, args.input_jsonl)
     else:
-        pages = corpus.pages_df(spark, args.sf_dir, repeat=args.repeat)
+        pages = corpus.pages_df(spark, args.sf_dir)
 
     manifest = materialize.materialize_resumable(
         pages, args.output, chunks=args.chunks, buckets=args.buckets)

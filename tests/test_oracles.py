@@ -27,16 +27,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from rdf_rdfa_spark import corpus
 from rdf_rdfa_spark.pipeline.bgpq import (
     bgp_aggregate, bgp_select, one_or_more, var)
-from rdf_rdfa_spark.pipeline.canonicalize import (
-    _PRIME, canonical_clusters, jaccard_verify, lsh_candidate_pairs,
-    minhash_signatures, permutation_params)
 from rdf_rdfa_spark.pipeline.expand import entail
 from rdf_rdfa_spark.pipeline.export import export_rdfa_pages
-from rdf_rdfa_spark.pipeline.extract import extract_text, extract_triples
+from rdf_rdfa_spark.pipeline.extract import extract_triples
 from rdf_rdfa_spark.pipeline.link import sameas_clusters
 from rdf_rdfa_spark.pipeline.materialize import read_triples, stream_materialize
 from rdf_rdfa_spark.pipeline.sparql import sparql, sparql_update
 from rdf_rdfa_spark.rdfa.terms import RDF_TYPE
+
+from reference_oracles import triples_oracle_sql
 
 CLASS_NS = "http://kg.example.org/class/"
 PROP_NS = "http://kg.example.org/prop/"
@@ -103,18 +102,6 @@ def q_rdfa_pred_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         q_rdfa_extract(spark, sf_dir)
         .groupBy("pred")
         .agg(F.count("*").alias("n"))
-    )
-
-
-def q_rdfa_text_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Byte-identical extracted text invariant: mismatches (MUST be empty)."""
-    pages = corpus.pages_df(spark, sf_dir)
-    extracted = extract_text(pages).withColumnRenamed("text", "extracted")
-    return (
-        extracted.join(pages.select("url", "text"), "url")
-        .filter((F.col("extracted") != F.col("text"))
-                | F.col("extracted").isNull())
-        .select("url")
     )
 
 
@@ -315,73 +302,6 @@ def q_entity_link_sameas(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sameas_clusters(q_rdfa_extract(spark, sf_dir))
 
 
-# --- MinHash canonicalization -------------------------------------------------
-
-def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ exact copies of every 10th doc under shifted ids, as
-    ONE scan plus a per-row id-shift generator (a union would read the
-    ``text`` column twice)."""
-    return _docs(spark, sf_dir).select(
-        F.explode(
-            F.when(F.expr("doc_id % 10 = 0"),
-                   F.array(F.col("doc_id"), F.col("doc_id") + 1000000))
-            .otherwise(F.array(F.col("doc_id")))
-        ).alias("doc_id"),
-        "text", "lang", "source", "n_chars",
-    )
-
-
-def _md5_60bit(t):
-    """Token hash DuckDB can replay: the top 15 hex chars of md5 as a
-    60-bit int (16^15 < 2^63, ANSI-safe).  The library default is the
-    faster JVM xxhash64."""
-    return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-
-
-def _verified_pairs(docs: DataFrame, bands: int, max_bucket: int,
-                    hash_fn=None) -> DataFrame:
-    """Signatures → LSH candidates → exact verify at threshold 0.9."""
-    sigs = minhash_signatures(docs, hash_fn=hash_fn)
-    pairs = lsh_candidate_pairs(sigs, bands=bands, max_bucket=max_bucket,
-                                num_hashes=64)
-    # lazy barrier: gives AQE size stats for the pair side of the join
-    pairs = pairs.localCheckpoint(eager=False)
-    return jaccard_verify(pairs, docs, threshold=0.9)
-
-
-def _jaccard_bp(pairs: DataFrame) -> DataFrame:
-    return pairs.select(
-        "a", "b",
-        F.floor(F.col("jaccard") * 10000).cast("long").alias("jaccard_bp"))
-
-
-def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bands=16 (r=4) with uncapped buckets gives P(miss) ~ 4e-8 per
-    pair at threshold 0.9, so the output equals the exact-Jaccard pair
-    set."""
-    return _jaccard_bp(_verified_pairs(_dup_corpus(spark, sf_dir),
-                                       bands=16, max_bucket=1 << 40))
-
-
-def q_dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production banding for threshold 0.9 (b=8/r=8) AND the
-    max_bucket=64 skew cap, with the md5-60bit token hash so DuckDB can
-    replay the exact signatures, band keys, bucket-size drops and
-    verify join."""
-    return _jaccard_bp(_verified_pairs(_dup_corpus(spark, sf_dir), bands=8,
-                                       max_bucket=64, hash_fn=_md5_60bit))
-
-
-def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over q_dedup_minhash's exhaustive pair set,
-    i.e. over the exact-Jaccard graph."""
-    verified = _verified_pairs(_dup_corpus(spark, sf_dir), bands=16,
-                               max_bucket=1 << 40)
-    return canonical_clusters(verified).select(
-        F.col("id").cast("long").alias("id"),
-        F.col("canonical").cast("long").alias("canonical"))
-
-
 # --- DuckDB oracles ---------------------------------------------------------
 
 _ENTAIL_CLASSES_SQL = """
@@ -505,129 +425,9 @@ SELECT pred, n FROM (
 ) WHERE n > 0
 """.format(t=RDF_TYPE)
 
-# documents ∪ copies of every 10th doc, as _dup_corpus builds it
-_DUP_CORPUS_SQL = """
-SELECT * FROM documents
-UNION ALL
-SELECT doc_id + 1000000 AS doc_id, text, lang, source, n_chars
-FROM documents WHERE doc_id % 10 = 0
-"""
-
-# exact token-set Jaccard over all pairs: the uncapped b=16/r=4 LSH
-# banding at threshold 0.9 misses no pair, and the verify step uses the
-# same tokenization
-_DEDUP_MINHASH_SQL = """
-WITH toks AS (
-  SELECT doc_id AS id,
-         list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')) AS t
-  FROM ({dup})
-)
-SELECT a.id AS a, b.id AS b,
-       -- same float op order as the Spark side ((inter/union)*10000)
-       -- so FLOOR never disagrees by one ulp
-       CAST(FLOOR((len(list_intersect(a.t, b.t)) * 1.0
-            / (len(a.t) + len(b.t) - len(list_intersect(a.t, b.t))))
-            * 10000) AS BIGINT) AS jaccard_bp
-FROM toks a JOIN toks b ON a.id < b.id
-WHERE len(list_intersect(a.t, b.t)) * 1.0
-      / (len(a.t) + len(b.t) - len(list_intersect(a.t, b.t))) >= 0.9
-""".format(dup=_DUP_CORPUS_SQL)
-
-
-def _dedup_minhash_capped_sql(bands: int = 8, num_hashes: int = 64,
-                              max_bucket: int = 64,
-                              threshold: float = 0.9) -> str:
-    """Exact SQL replay of the PRODUCTION LSH path: md5-60bit token
-    hashes mod the Mersenne prime, the 64 SplitMix64 permutations
-    (a*h+b mod p — a,h < 2^31 so products stay in BIGINT), r-row band
-    keys, bucket-size window [2, max_bucket], in-bucket pair
-    generation, and the exact-Jaccard verify with the Spark float op
-    order.  Band grouping uses the raw r-tuple string where Spark
-    groups on xxhash64 of it — identical partitions (a Spark-side hash
-    collision could only merge two buckets, P ~ 2^-64)."""
-    r = num_hashes // bands
-    params = permutation_params(num_hashes)
-    mins = ",\n    ".join(
-        "list_min(list_transform(h, x -> (%d * x + %d) %% %d))"
-        % (a, b, _PRIME) for a, b in params)
-    band_keys = ",\n    ".join(
-        "array_to_string(list_slice(sig, %d, %d), ',')"
-        % (j * r + 1, j * r + r) for j in range(bands))
-    return """
-WITH toks AS (
-  SELECT doc_id AS id,
-         list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+')) AS t
-  FROM ({dup})
-),
-hashed AS (
-  SELECT id, t,
-    list_transform(t, tok ->
-      list_sum(list_transform(range(1, 16), i ->
-        CAST(strpos('0123456789abcdef', substring(md5(tok), i, 1)) - 1
-             AS BIGINT) << ((15 - i) * 4))) % {prime}) AS h
-  FROM toks
-),
-sigs AS (
-  SELECT id, t, [
-    {mins}
-  ] AS sig FROM hashed
-),
-banded AS (
-  SELECT id, t, b.b AS band,
-         [{band_keys}][b.b + 1] AS key
-  FROM sigs, (SELECT unnest(range(0, {bands})) AS b) b
-),
-buckets AS (
-  SELECT band, key, list_sort(list(id)) AS ids
-  FROM banded GROUP BY band, key
-  HAVING len(list(id)) BETWEEN 2 AND {max_bucket}
-),
-cand AS (
-  SELECT DISTINCT ids[i.i] AS a, ids[j.j] AS b
-  FROM buckets,
-       (SELECT unnest(range(1, {cap})) AS i) i,
-       (SELECT unnest(range(2, {cap1})) AS j) j
-  WHERE i.i < j.j AND j.j <= len(ids)
-)
-SELECT c.a, c.b,
-       CAST(FLOOR((len(list_intersect(ta.t, tb.t)) * 1.0
-            / (len(ta.t) + len(tb.t) - len(list_intersect(ta.t, tb.t))))
-            * 10000) AS BIGINT) AS jaccard_bp
-FROM cand c JOIN toks ta ON ta.id = c.a JOIN toks tb ON tb.id = c.b
-WHERE len(list_intersect(ta.t, tb.t)) * 1.0
-      / (len(ta.t) + len(tb.t) - len(list_intersect(ta.t, tb.t)))
-      >= {thr}
-""".format(dup=_DUP_CORPUS_SQL, prime=_PRIME, mins=mins,
-           band_keys=band_keys, bands=bands, max_bucket=max_bucket,
-           cap=max_bucket + 1, cap1=max_bucket + 2, thr=threshold)
-
-
-# connected components over the exact near-dup graph as a recursive
-# CTE: labels propagate along edges; the `comp < d` prune is safe
-# because the component minimum is smaller than every intermediate
-# node, so it always survives to reach the whole component. canonical
-# matches Spark's connected_components (LEXICOGRAPHIC min over the
-# stringified ids — both sides compare as VARCHAR).
-_DEDUP_CLUSTERS_SQL = """
-WITH RECURSIVE
-pairs AS (SELECT a, b FROM ({mh})),
-e AS (SELECT CAST(a AS VARCHAR) AS s, CAST(b AS VARCHAR) AS d FROM pairs
-      UNION SELECT CAST(b AS VARCHAR), CAST(a AS VARCHAR) FROM pairs),
-n AS (SELECT DISTINCT s AS node FROM e),
-cc AS (
-  SELECT node, node AS comp FROM n
-  UNION
-  SELECT e.d AS node, cc.comp FROM cc JOIN e ON cc.node = e.s
-  WHERE cc.comp < e.d
-)
-SELECT CAST(node AS BIGINT) AS id, CAST(MIN(comp) AS BIGINT) AS canonical
-FROM cc GROUP BY node
-""".format(mh=_DEDUP_MINHASH_SQL)
-
-
 def _queries() -> dict:
     """name → (builder, DuckDB SQL)."""
-    triples = corpus.triples_oracle_sql()
+    triples = triples_oracle_sql()
     kg = {"t": triples, "rdf_type": RDF_TYPE,
           "article_genre": _ARTICLE_GENRE_SQL}
     return {
@@ -641,9 +441,6 @@ def _queries() -> dict:
         "rdfa_pred_counts": (
             q_rdfa_pred_counts,
             "SELECT pred, COUNT(*) AS n FROM (%s) GROUP BY pred" % triples),
-        "rdfa_text_identity": (
-            q_rdfa_text_identity,
-            "SELECT CAST(NULL AS VARCHAR) AS url WHERE 1=0"),
         "rdfa_processor_counts": (q_rdfa_processor_counts,
                                   _PROCESSOR_COUNTS_SQL),
         "kg_bgp": (q_kg_bgp, _KG_BGP_SQL.format(**kg)),
@@ -683,10 +480,6 @@ def _queries() -> dict:
         "entail_classes": (q_entail_classes, _ENTAIL_CLASSES_SQL),
         "entail_props": (q_entail_props, _ENTAIL_PROPS_SQL),
         "entity_link_sameas": (q_entity_link_sameas, _ENTITY_LINK_SQL),
-        "dedup_minhash": (q_dedup_minhash, _DEDUP_MINHASH_SQL),
-        "dedup_minhash_capped": (q_dedup_minhash_capped,
-                                 _dedup_minhash_capped_sql()),
-        "dedup_clusters": (q_dedup_clusters, _DEDUP_CLUSTERS_SQL),
     }
 
 

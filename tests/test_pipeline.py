@@ -11,10 +11,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdf_rdfa_spark import corpus
-from rdf_rdfa_spark.pipeline.expand import entail, entail_fixpoint, tbox_closures
-from rdf_rdfa_spark.pipeline.extract import extract_triples, extract_text
+from rdf_rdfa_spark.pipeline.expand import entail
+from rdf_rdfa_spark.pipeline.extract import extract_triples
 from rdf_rdfa_spark.pipeline.link import connected_components
-from rdf_rdfa_spark.pipeline import bgpq, canonicalize, materialize
+from rdf_rdfa_spark.pipeline import bgpq, materialize
+from rdf_rdfa_spark.rdfa.terms import bnode, iri, literal
+from rdf_rdfa_spark.rdfa.vocab import tbox_closures
+
+from reference_oracles import entail_fixpoint, triples_oracle_sql
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 SCO = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
@@ -29,19 +33,22 @@ def test_extract_matches_oracle_sample(spark, sf_dir):
     got = {tuple(r) for r in extract_triples(pages).collect()}
     con = duckdb.connect()
     con.sql("CREATE VIEW documents AS SELECT * FROM '%s/documents.parquet'" % sf_dir)
-    want = {tuple(r) for r in con.sql(corpus.triples_oracle_sql()).fetchall()}
+    want = {tuple(r) for r in con.sql(triples_oracle_sql()).fetchall()}
     assert got == want
 
 
 def test_text_byte_identity(spark, sf_dir):
-    pages = corpus.pages_df(spark, sf_dir)
-    extracted = extract_text(pages).withColumnRenamed("text", "extracted")
-    bad = (
-        extracted.join(pages.select("url", "text"), "url")
-        .filter("extracted <> text OR extracted IS NULL")
-        .count()
-    )
-    assert bad == 0
+    """The byte-identical text invariant (BASELINE.json input_hint):
+    the tokenizer's inner_text — the text walk.py takes literals from —
+    is each corpus page's `text`, entity-decoded, for every page."""
+    from rdf_rdfa_spark.rdfa.dom import decode_html, parse_html
+
+    pages = corpus.pages_df(spark, sf_dir).select("url", "html", "text")
+    rows = pages.collect()
+    assert rows
+    bad = [r["url"] for r in rows
+           if parse_html(decode_html(r["html"]))[0].inner_text != r["text"]]
+    assert bad == []
 
 
 def test_extract_handles_broken_page(spark):
@@ -176,21 +183,6 @@ def test_link_entities_broadcast_and_shuffle_paths(spark):
     # a and b collapse to the lexicographic min (http://e/a)
     assert ("http://e/a", "http://e/p", "val") in broadcast
     assert ("http://e/c", "http://e/p", "http://e/a") in broadcast
-
-
-def test_minhash_lsh_finds_near_dups(spark):
-    base = "the quick brown fox jumps over the lazy dog " * 8
-    near = base.replace("lazy", "sleepy", 1)
-    far = "completely different words entirely unrelated content here " * 8
-    docs = spark.createDataFrame(
-        [(0, base), (1, near), (2, far)], "doc_id long, text string"
-    )
-    sigs = canonicalize.minhash_signatures(docs)
-    pairs = canonicalize.lsh_candidate_pairs(sigs)
-    verified = canonicalize.jaccard_verify(pairs, docs, threshold=0.5)
-    got = {(r["a"], r["b"]) for r in verified.collect()}
-    assert (0, 1) in got
-    assert (0, 2) not in got and (1, 2) not in got
 
 
 def test_write_triples_append_refuses_modulus_change(spark, tmp_path):
@@ -370,17 +362,30 @@ def test_vocab_expansion_end_to_end(spark):
     assert ("http://example/#me", FOAF + "name", "Gregg") in expanded
 
 
+def _graph(rows):
+    """(subj, pred, obj, obj_kind, lang, datatype) rows → term triples,
+    the shape serialize_rdfa takes."""
+    def node(v):
+        return bnode(v[2:]) if v.startswith("_:") else iri(v)
+
+    return [(node(s), iri(p),
+             literal(o, lang, dt) if k == "literal" else node(o))
+            for s, p, o, k, lang, dt in rows]
+
+
 def test_writer_roundtrip(spark, sf_dir):
     """Serialize a graph to XHTML+RDFa and re-parse with our reader —
     the result must be identical (the reference's writer round-trip
     strategy, writer_spec.rb:546)."""
     from rdf_rdfa_spark.pipeline.extract import rows_for_document
-    from rdf_rdfa_spark.writer import df_to_rdfa_html
+    from rdf_rdfa_spark.writer import serialize_rdfa
 
     pages = corpus.pages_df(spark, sf_dir)
     triples = extract_triples(pages).filter(
         "url = 'http://host0.example.org/page/1'")
-    html = df_to_rdfa_html(triples)
+    html = serialize_rdfa(_graph(
+        triples.select("subj", "pred", "obj", "obj_kind", "lang",
+                       "datatype").collect()))
     reparsed = {
         (r[1], r[2], r[3], r[4], r[5] or None, r[6] or None)
         for r in rows_for_document(html, "http://roundtrip.example/",
@@ -420,51 +425,40 @@ def test_streaming_matches_batch(spark, sf_dir, tmp_path):
     assert materialize.read_triples(spark, root).count() == len(got)
 
 
-def test_canonical_iri_col(spark):
-    from rdf_rdfa_spark.pipeline.link import canonical_iri_col
+def _lookup(spark, root, subj):
+    """Constant-subject SPARQL at the store's own modulus: the point
+    lookup every caller uses."""
+    from rdf_rdfa_spark.pipeline.sparql import sparql
 
-    cases = [
-        ("HTTP://Example.COM/Path?Q=1", "http://example.com/Path?Q=1"),
-        ("https://example.com:443/x", "https://example.com/x"),
-        ("http://example.com:80", "http://example.com/"),
-        ("http://example.com:8080/x", "http://example.com:8080/x"),
-        ("http://example.com", "http://example.com/"),
-        ("_:b0", "_:b0"),
-        ("urn:ex:s001", "urn:ex:s001"),
-    ]
-    df = spark.createDataFrame([(a,) for a, _ in cases], "iri string")
-    got = [r["c"] for r in
-           df.select(canonical_iri_col(F.col("iri")).alias("c")).collect()]
-    assert got == [b for _, b in cases], got
+    return sparql(materialize.read_triples(spark, root),
+                  "SELECT ?p ?o WHERE { <%s> ?p ?o }" % subj,
+                  buckets=materialize.store_buckets(root))
 
 
 def test_subject_lookup_prunes(spark, sf_dir, tmp_path):
-    from rdf_rdfa_spark.pipeline.materialize import (
-        materialize_resumable, subject_lookup)
-
     pages = corpus.pages_df(spark, sf_dir).limit(80)
     root = str(tmp_path / "store2")
-    materialize_resumable(pages, root, chunks=2, buckets=8)
-    from rdf_rdfa_spark.pipeline.materialize import read_triples
-
-    target = read_triples(spark, root).select("subj").first()["subj"]
-    got = subject_lookup(spark, root, target)
-    rows = got.collect()
-    assert rows and all(r["subj"] == target for r in rows)
+    materialize.materialize_resumable(pages, root, chunks=2, buckets=8)
+    store = materialize.read_triples(spark, root)
+    target = store.select("subj").first()["subj"]
+    got = _lookup(spark, root, target)
+    rows = {(r["p"], r["o"]) for r in got.collect()}
+    assert rows and rows == {
+        (r["pred"], r["obj"]) for r in
+        store.filter(F.col("subj") == target).collect()}
     # the physical plan must show a partition filter on bucket
-    plan = got._sc._jvm.PythonSQLUtils.explainString(
-        got._jdf.queryExecution(), "formatted") if False else \
-        got._jdf.queryExecution().executedPlan().toString()
-    assert "bucket" in plan
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "PartitionFilters" in plan and "bucket" in plan.split(
+        "PartitionFilters", 1)[1][:200], plan
 
 
 def test_writer_curie_compression():
     """Writer mints CURIEs from the initial-context prefixes, declares
     only used prefixes in @prefix, folds rdf:type into @typeof, and
-    emits bnodes as SafeCURIEs — all round-trip through our reader
+    emits bnodes as _: CURIEs — all round-trip through our reader
     (writer.rb:366-390 preprocess, :273-283 typeof, writer_spec.rb:546)."""
     from rdf_rdfa_spark.rdfa.walk import parse_rdfa
-    from rdf_rdfa_spark.writer import to_rdfa_html
+    from rdf_rdfa_spark.writer import serialize_rdfa
 
     FOAF = "http://xmlns.com/foaf/0.1/"
     rows = [
@@ -478,11 +472,11 @@ def test_writer_curie_compression():
         ("http://example.org/a", FOAF + "knows", "_:b0", "bnode", None, None),
         ("_:b0", FOAF + "name", "Bob", "literal", "en", None),
     ]
-    html = to_rdfa_html(rows)
+    html = serialize_rdfa(_graph(rows))
     assert 'typeof="foaf:Person"' in html
     assert 'property="foaf:name"' in html
     assert 'datatype="xsd:date"' in html
-    assert 'resource="[_:b0]"' in html
+    assert 'resource="_:b0"' in html
     # only used prefixes declared
     assert "foaf: http://xmlns.com/foaf/0.1/" in html
     assert "schema:" not in html
@@ -663,31 +657,6 @@ def test_bgp_union(spark):
         [(var("d"), "type", "Book")],
     ]).collect()}
     assert got == {"a", "b", "c"}
-
-
-def test_lsh_bucket_cap_applied_before_collect(spark):
-    """A mega-bucket (40 identical docs → every band key shared) must
-    be dropped by the skew guard BEFORE collect_list ever sees it: the
-    plan carries a WINDOW count + filter BELOW the collect_list
-    aggregate (WindowExec buffers a group in a spillable sorter, never
-    a single-group agg buffer), and the window preserves the
-    (band, key) partitioning so guard + collect share ONE exchange
-    (pairs-distinct adds the only other one)."""
-    tmpl = " ".join("word%02d" % i for i in range(30))
-    docs = spark.createDataFrame([(i, tmpl) for i in range(40)],
-                                 "doc_id long, text string")
-    sigs = canonicalize.minhash_signatures(docs)
-    capped = canonicalize.lsh_candidate_pairs(sigs, max_bucket=8, num_hashes=64)
-    assert capped.count() == 0          # hot bucket (40 > 8) dropped
-    uncapped = canonicalize.lsh_candidate_pairs(sigs, max_bucket=1 << 40,
-                                                num_hashes=64)
-    assert uncapped.count() == 40 * 39 // 2
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "Window [count(1)" in plan, plan
-    # physical plans print root-first: the guard window must be BELOW
-    # (printed after) the collect aggregate
-    assert plan.index("Window [count(1)") > plan.index("collect_list"), plan
-    assert plan.count("Exchange hashpartitioning") == 2, plan
 
 
 def test_bgp_negation_and_modifiers(spark):
@@ -876,6 +845,45 @@ def test_read_during_commit_sees_previous_snapshot(
     assert materialize.read_triples(spark, root).count() == old + 20
 
 
+def test_overwrite_crash_before_head_keeps_previous_snapshot(
+        spark, tmp_path, monkeypatch):
+    """An overwrite that dies before its HEAD swap must leave the
+    previous snapshot current and whole: the files it replaces are
+    deleted only after the swap.  A completed overwrite then leaves
+    exactly its own files, and its ``inputs`` start over."""
+    def triples(obj, n):
+        return spark.createDataFrame(
+            [("u", "http://x/s%d" % i, "http://x/p", obj, "literal", None,
+              None, None) for i in range(n)],
+            "url string, subj string, pred string, obj string, "
+            "obj_kind string, lang string, datatype string, graph string")
+
+    root = str(tmp_path / "store")
+    materialize.write_triples(triples("old", 30), root, buckets=4,
+                              inputs=["chunk-0/1"])
+    before = _rows(spark, root)
+    extra = triples("new", 20)
+    real_replace = materialize._replace
+
+    def crash_at_head(path, text):
+        if os.path.basename(path) == "HEAD":
+            raise OSError("simulated crash before the HEAD swap")
+        real_replace(path, text)
+
+    monkeypatch.setattr(materialize, "_replace", crash_at_head)
+    with pytest.raises(OSError, match="simulated crash"):
+        materialize.write_triples(extra, root, buckets=4, mode="overwrite")
+    monkeypatch.undo()
+    assert _rows(spark, root) == before
+
+    materialize.write_triples(extra, root, buckets=4, mode="overwrite")
+    head = materialize._manifest(root)
+    assert materialize.read_triples(spark, root).count() == 20
+    assert materialize._store_files(os.path.join(root, "triples")) == set(
+        head["files"])
+    assert head["inputs"] == []
+
+
 def test_read_triples_memo_under_threads(spark, tmp_path):
     """Concurrent reads of more roots than the memo keeps: every read
     returns its own root's live files, and none raises."""
@@ -912,7 +920,7 @@ def test_read_triples_memo_under_threads(spark, tmp_path):
 
 
 def test_subject_lookup_uses_store_modulus(spark, sf_dir, tmp_path):
-    """subject_lookup hashes with the modulus the store was written
+    """A point lookup hashes with the modulus the store was written
     with, not a caller-supplied default."""
     root = str(tmp_path / "store")
     materialize.materialize_resumable(
@@ -921,8 +929,10 @@ def test_subject_lookup_uses_store_modulus(spark, sf_dir, tmp_path):
                 .select("subj").distinct().limit(5).collect()]
     assert len(subjects) == 5
     for subj in subjects:
-        rows = materialize.subject_lookup(spark, root, subj).collect()
-        assert rows and all(r["subj"] == subj for r in rows), subj
+        want = {(r["pred"], r["obj"]) for r in materialize.read_triples(
+            spark, root).filter(F.col("subj") == subj).collect()}
+        rows = {(r["p"], r["o"]) for r in _lookup(spark, root, subj).collect()}
+        assert rows and rows == want, subj
 
 
 def test_precompaction_snapshot_read_is_partial(spark, sf_dir, tmp_path):
@@ -1101,8 +1111,8 @@ def test_path_closure_matches_python_reference(spark):
 def test_sparql_bucket_pruning_on_store(spark, sf_dir, tmp_path):
     """Constant-subject SPARQL over the materialized store prunes to
     ONE bucket partition directory: the partition filter on `bucket`
-    reaches the scan, exactly like materialize.subject_lookup — a
-    point lookup on a 100 TB store reads 1/buckets of it."""
+    reaches the scan — a point lookup on a 100 TB store reads
+    1/buckets of it."""
     from rdf_rdfa_spark.pipeline import materialize
     from rdf_rdfa_spark.pipeline.sparql import sparql
 
@@ -1121,7 +1131,6 @@ def test_sparql_bucket_pruning_on_store(spark, sf_dir, tmp_path):
     a = {tuple(r) for r in pruned.collect()}
     b = {tuple(r) for r in sparql(store, q).collect()}
     assert a == b and a
-    # and agrees with the dedicated point-lookup helper
-    c = {(r["pred"], r["obj"]) for r in materialize.subject_lookup(
-        spark, root, subj).select("pred", "obj").collect()}
+    # and agrees with a lookup at the store's own modulus
+    c = {tuple(r) for r in _lookup(spark, root, subj).collect()}
     assert a == c

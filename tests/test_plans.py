@@ -5,9 +5,7 @@ comments promise, enforced by CI:
   reads every documents column),
 - no CartesianProduct anywhere in production query plans (broadcast
   nested-loop against a broadcast-small side is allowed; an
-  unbroadcast cartesian of two big sides never is),
-- the big joins stay shuffled hash joins where the optimizer's size
-  estimates would otherwise broadcast a big side.
+  unbroadcast cartesian of two big sides never is).
 
 The queries are the oracle-checked builders of test_oracles.py.  Plan
 construction only — nothing executes."""
@@ -31,8 +29,7 @@ _FULL_DOC_OK = {"rdfa_extract", "writer_roundtrip", "kg_bgp", "kg_bgp_minus",
                 "kg_bgp_agg", "kg_sparql", "kg_sparql_meta",
                 "kg_sparql_graph", "kg_sparql_sub", "kg_sparql_update",
                 "kg_sparql_describe", "rdfa_pred_counts",
-                "rdfa_text_identity", "rdfa_processor_counts",
-                "entity_link_sameas"}
+                "rdfa_processor_counts", "entity_link_sameas"}
 
 _DOC_FULL = {"doc_id", "text", "lang", "source", "n_chars"}
 
@@ -69,16 +66,3 @@ def test_plan_shape(spark, sf_dir, name):
             assert cols < _DOC_FULL, \
                 "%s: unpruned documents scan reads %s" % (name, sorted(cols))
 
-
-def test_minhash_joins_are_hash_not_broadcast_corpus(spark, sf_dir):
-    """The verify joins must be SHUFFLED hash joins: parquet stats
-    underestimate token-array columns, so without the hint the
-    optimizer broadcasts the tokenized corpus (driver-side build,
-    unbounded at scale)."""
-    plan = _plan(spark, sf_dir, "dedup_minhash")
-    assert "CartesianProduct" not in plan
-    assert "ShuffledHashJoin" in plan, plan
-    # the token side must never be a broadcast build
-    assert "BroadcastHashJoin" not in plan or "toks" not in [
-        ln for ln in plan.splitlines() if "BroadcastExchange" in ln
-    ], plan

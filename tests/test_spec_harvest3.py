@@ -1,12 +1,11 @@
-"""Harvested tables from the reference's expansion_spec.rb,
-format_spec.rb and context_spec.rb, evaluated at test time (same
-pattern as test_spec_harvest.py over reader_spec.rb).
+"""Harvested tables from the reference's expansion_spec.rb and
+context_spec.rb, evaluated at test time (same pattern as
+test_spec_harvest.py over reader_spec.rb).
 
 - expansion_spec :entailment / :expand / :copy_properties hash tables
-  → our T-box closure entailment (pipeline.expand.tbox_closures) and
+  → our T-box closure entailment (rdfa.vocab.tbox_closures) and
   the walker's rdfa:copy fold, checked with the BGP ASK evaluator the
   reference's pass_query matcher implies (expansion_spec.rb:56-67).
-- format_spec ".detect" positive/negative tables → dom.looks_like_rdfa.
 - context_spec initial-context cardinalities → rdfa.contexts.
 """
 
@@ -22,14 +21,12 @@ from spec_harvest import harvest_hash_table
 
 from rdf_rdfa_spark.rdfa.bgp import ask
 from rdf_rdfa_spark.rdfa.contexts import initial_context
-from rdf_rdfa_spark.rdfa.dom import looks_like_rdfa
 from rdf_rdfa_spark.rdfa.ntriples import parse_turtle
 from rdf_rdfa_spark.rdfa.terms import RDF_TYPE
+from rdf_rdfa_spark.rdfa.vocab import tbox_closures
 from rdf_rdfa_spark.rdfa.walk import RdfaWalker
-from rdf_rdfa_spark.pipeline.expand import tbox_closures
 
 EXPANSION = "/root/reference/spec/expansion_spec.rb"
-FORMAT = "/root/reference/spec/format_spec.rb"
 
 pytestmark = pytest.mark.skipif(
     not os.path.exists(EXPANSION), reason="reference spec not available")
@@ -149,22 +146,6 @@ def test_copy_properties_case(name):
     # fold also REMOVES the pattern machinery (expansion.rb:181-190)
     assert not any("rdfa#copy" in p[1] or "rdfa#Pattern" in o[1]
                    for (s, p, o) in got if o[0] == "iri"), sorted(got, key=repr)
-
-
-# --- format_spec ".detect" tables ------------------------------------------
-
-_DETECT_POS = dict(harvest_hash_table('describe ".detect"', FORMAT))
-_DETECT_NEG = dict(harvest_hash_table('describe ".detect"', FORMAT, nth=1))
-
-
-@pytest.mark.parametrize("name", sorted(_DETECT_POS))
-def test_format_detects(name):
-    assert looks_like_rdfa(_DETECT_POS[name]), _DETECT_POS[name]
-
-
-@pytest.mark.parametrize("name", sorted(_DETECT_NEG))
-def test_format_does_not_detect(name):
-    assert not looks_like_rdfa(_DETECT_NEG[name]), _DETECT_NEG[name]
 
 
 # --- context_spec cardinalities (context_spec.rb:27-87) ---------------------
