@@ -35,12 +35,17 @@ def lit(value: str, lang: str | None = None,
 
 
 # --- property paths (SPARQL 1.1 §9) -------------------------------------
-# A path expression evaluates to a DISTINCT (s, o) edge relation; a
-# triple pattern whose predicate position is a Path joins against that
-# relation instead of a pred-filtered scan.  Closures (p+ / p*) run as
-# iterative DOUBLING — log(diameter) rounds, one shuffle per round,
-# lineage truncated per round with a lazy localCheckpoint — the same
-# distributed-fixpoint shape as connected_components/entail.
+# A path evaluates from a FRONTIER of (seed, n) rows to the (seed, n)
+# rows one application of the path reaches — SPARQL 1.1 §9.3 defines
+# arbitrary-length paths from a start node, which is this shape.  A
+# bound endpoint seeds the frontier with (term, term), so the work is
+# proportional to the set reachable from it, never the full closure; a
+# bound OBJECT runs the inverted path forward.  A ``None`` frontier is
+# unseeded: a step from it yields the path's whole edge relation, so a
+# pattern with two free endpoints runs through the same evaluator.
+# Closures (p+ / p*) iterate one semi-naive loop to fixpoint: one
+# frontier ⋈ edges shuffle and one anti-join against the visited set
+# per round, lineage truncated per round with a lazy localCheckpoint.
 
 class Path:
     __slots__ = ("op", "parts")
@@ -72,7 +77,8 @@ def one_or_more(part) -> Path:
 
 def zero_or_more(part) -> Path:
     """p* — reflexive-transitive closure.  The zero-length component
-    relates every graph node (distinct subj/obj term) to itself."""
+    relates a bound term to itself, and with both endpoints free every
+    graph node (distinct subj/obj term) to itself."""
     return Path("star", (part,))
 
 
@@ -102,100 +108,9 @@ def negated(*preds, inverse=()) -> Path:
     return parts[0] if len(parts) == 1 else Path("alt", tuple(parts))
 
 
-def _closure(edges: DataFrame, max_iters: int = 25) -> DataFrame:
-    cur = edges.distinct().localCheckpoint(eager=False)
-    n = cur.count()
-    if n == 0:
-        return cur
-    for _ in range(max_iters):
-        left = cur
-        right = (cur.withColumnRenamed("s", "_m")
-                 .withColumnRenamed("o", "_o2"))
-        step = (left.join(right, left["o"] == right["_m"])
-                .select(left["s"], F.col("_o2").alias("o")))
-        nxt = cur.unionByName(step).distinct().localCheckpoint(eager=False)
-        m = nxt.count()
-        if m == n:
-            return nxt
-        cur, n = nxt, m
-    raise ValueError(
-        "path closure did not converge within %d rounds (still "
-        "growing) — raise max_iters" % max_iters)
-
-
-def _graph_nodes(triples: DataFrame) -> DataFrame:
-    return (triples.select(F.col("subj").alias("n"))
-            .unionByName(triples.select(F.col("obj").alias("n")))
-            .distinct())
-
-
-def path_edges(triples: DataFrame, path) -> DataFrame:
-    """Path expression → DISTINCT (s, o) DataFrame."""
-    if isinstance(path, str):
-        return (triples.filter(F.col("pred") == path)
-                .select(F.col("subj").alias("s"), F.col("obj").alias("o"))
-                .distinct())
-    if not isinstance(path, Path):
-        raise TypeError("not a path: %r" % (path,))
-    if path.op == "seq":
-        out = None
-        for i, part in enumerate(path.parts):
-            nxt = path_edges(triples, part)
-            if out is None:
-                out = nxt
-            else:
-                mid = (nxt.withColumnRenamed("s", "_m")
-                       .withColumnRenamed("o", "_o2"))
-                out = (out.join(mid, out["o"] == mid["_m"])
-                       .select(out["s"], F.col("_o2").alias("o"))
-                       .distinct())
-        if out is None:
-            raise ValueError("empty seq path")
-        return out
-    if path.op == "alt":
-        outs = [path_edges(triples, p) for p in path.parts]
-        out = outs[0]
-        for nxt in outs[1:]:
-            out = out.unionByName(nxt)
-        return out.distinct()
-    if path.op == "inv":
-        e = path_edges(triples, path.parts[0])
-        return e.select(F.col("o").alias("s"), F.col("s").alias("o"))
-    if path.op == "plus":
-        return _closure(path_edges(triples, path.parts[0]))
-    if path.op == "star":
-        nodes = _graph_nodes(triples).select(
-            F.col("n").alias("s"), F.col("n").alias("o"))
-        return (_closure(path_edges(triples, path.parts[0]))
-                .unionByName(nodes).distinct())
-    if path.op == "opt":
-        nodes = _graph_nodes(triples).select(
-            F.col("n").alias("s"), F.col("n").alias("o"))
-        return path_edges(triples, path.parts[0]).unionByName(
-            nodes).distinct()
-    if path.op in ("neg", "neginv"):
-        src, dst = (("subj", "obj") if path.op == "neg"
-                    else ("obj", "subj"))
-        return (triples.filter(~F.col("pred").isin(list(path.parts)))
-                .select(F.col(src).alias("s"), F.col(dst).alias("o"))
-                .distinct())
-    raise ValueError("unknown path op %r" % path.op)
-
-
-# --- seed-restricted path evaluation ------------------------------------
-# When a pattern binds a CONSTANT at either endpoint of a path —
-# ``<x> p+ ?y`` is the most common reachability shape — materializing
-# the full unrestricted closure and then filtering is quadratic-ish in
-# reachable pairs and a scale-killer on a web KG.  Instead the
-# evaluation seeds a frontier from the bound term and iterates
-# ``frontier ⋈ edges`` to fixpoint: work proportional to the REACHABLE
-# set, one shuffle per BFS round, lineage truncated per round exactly
-# like the unseeded doubling closure.  A bound OBJECT reuses the same
-# machinery on the inverted path.
-
-#: diagnostics from the most recent seeded closure run (rounds taken,
-#: total rows ever added to the visited set) — lets tests pin that a
-#: seeded query never explores beyond its reachable component.
+#: diagnostics from the most recent closure run (rounds taken, total
+#: rows ever added to the visited set) — lets tests pin that a seeded
+#: query never explores beyond its reachable component.
 last_seeded_stats: dict = {}
 
 
@@ -217,29 +132,48 @@ def _invert(path):
     return Path(path.op, (_invert(path.parts[0]),))
 
 
-def _pred_edges(triples: DataFrame, pred: str, forward: bool) -> DataFrame:
+def _hop(frontier, rows: DataFrame, forward: bool) -> DataFrame:
+    """One edge step over the triples ``rows`` (already filtered by
+    predicate) from ``frontier``; unseeded, the edge relation itself."""
     src, dst = ("subj", "obj") if forward else ("obj", "subj")
-    return (triples.filter(F.col("pred") == pred)
-            .select(F.col(src).alias("_s"), F.col(dst).alias("_o")))
+    if frontier is None:
+        return (rows.select(F.col(src).alias("seed"), F.col(dst).alias("n"))
+                .distinct())
+    e = rows.select(F.col(src).alias("_s"), F.col(dst).alias("_o"))
+    return (frontier.join(e, frontier["n"] == e["_s"])
+            .select("seed", F.col("_o").alias("n")).distinct())
 
 
-def _step(triples: DataFrame, path, frontier: DataFrame) -> DataFrame:
-    """Apply ``path`` once from ``frontier`` (seed, n) → (seed, n).
-    Bare predicates join the (small) frontier against a pred-filtered
-    scan; closures recurse into the seeded BFS."""
+def _identity(triples: DataFrame, frontier) -> DataFrame:
+    """The zero-length step: the frontier itself; unseeded, every graph
+    node (distinct subj/obj term) paired with itself."""
+    if frontier is not None:
+        return frontier.distinct()
+    nodes = (triples.select(F.col("subj").alias("n"))
+             .unionByName(triples.select(F.col("obj").alias("n")))
+             .distinct())
+    return nodes.select(F.col("n").alias("seed"), "n")
+
+
+def _step(triples: DataFrame, path, frontier) -> DataFrame:
+    """Apply ``path`` once from ``frontier`` (seed, n) → (seed, n);
+    ``frontier=None`` is unseeded and yields the path's full edge
+    relation.  Bare predicates join the frontier against a
+    pred-filtered scan; closures run the fixpoint loop."""
     if isinstance(path, str) or (isinstance(path, Path)
                                  and path.op == "inv"
                                  and isinstance(path.parts[0], str)):
         forward = isinstance(path, str)
         pred = path if forward else path.parts[0]
-        e = _pred_edges(triples, pred, forward)
-        return (frontier.join(e, frontier["n"] == e["_s"])
-                .select("seed", F.col("_o").alias("n")).distinct())
+        return _hop(frontier, triples.filter(F.col("pred") == pred),
+                    forward)
     if not isinstance(path, Path):
         raise TypeError("not a path: %r" % (path,))
     if path.op == "inv":
         return _step(triples, _invert(path.parts[0]), frontier)
     if path.op == "seq":
+        if not path.parts:
+            raise ValueError("empty seq path")
         cur = frontier
         for part in path.parts:
             cur = _step(triples, part, cur)
@@ -250,44 +184,30 @@ def _step(triples: DataFrame, path, frontier: DataFrame) -> DataFrame:
         for nxt in outs[1:]:
             out = out.unionByName(nxt)
         return out.distinct()
-    if path.op == "plus":
-        return _seeded_closure(triples, path.parts[0], frontier,
-                               reflexive=False)
-    if path.op == "star":
-        return _seeded_closure(triples, path.parts[0], frontier,
-                               reflexive=True)
+    if path.op in ("plus", "star"):
+        return _closure(triples, path.parts[0], frontier,
+                        reflexive=path.op == "star")
     if path.op == "opt":
-        return (frontier.distinct()
+        return (_identity(triples, frontier)
                 .unionByName(_step(triples, path.parts[0], frontier))
                 .distinct())
     if path.op in ("neg", "neginv"):
-        src, dst = (("subj", "obj") if path.op == "neg"
-                    else ("obj", "subj"))
-        e = (triples.filter(~F.col("pred").isin(list(path.parts)))
-             .select(F.col(src).alias("_s"), F.col(dst).alias("_o")))
-        return (frontier.join(e, frontier["n"] == e["_s"])
-                .select("seed", F.col("_o").alias("n")).distinct())
+        return _hop(frontier,
+                    triples.filter(~F.col("pred").isin(list(path.parts))),
+                    path.op == "neg")
     raise ValueError("unknown path op %r" % path.op)
 
 
-def _has_closure(path) -> bool:
-    """Does the path contain a closure operator (p+/p*/p?) anywhere?
-    Only those materialize an unbounded relation when unseeded."""
-    if isinstance(path, str):
-        return False
-    if path.op in ("plus", "star", "opt"):
-        return True
-    return any(_has_closure(p) for p in path.parts)
-
-
-def _seeded_closure(triples: DataFrame, inner, seeds: DataFrame,
-                    reflexive: bool, max_iters: int = 64) -> DataFrame:
-    """BFS from the seed set: per round one frontier ⋈ edges shuffle
-    plus an anti-join against the visited set — total work ∝ edges of
-    the reachable component, rounds = its diameter (web-KG diameters
-    are small; contrast the unseeded doubling closure, which touches
-    the WHOLE edge relation every round)."""
-    seeds = seeds.distinct().localCheckpoint(eager=False)
+def _closure(triples: DataFrame, inner, seeds, reflexive: bool,
+             max_iters: int = 64) -> DataFrame:
+    """``inner``+ (``inner``* when ``reflexive``) from ``seeds``, by
+    semi-naive BFS: per round one frontier ⋈ edges shuffle plus an
+    anti-join against the visited set — total work ∝ edges of the
+    reachable component, rounds = its diameter + 1 (web-KG diameters
+    are small).  Unseeded (``seeds=None``), the first round is the
+    edge relation itself."""
+    if seeds is not None:
+        seeds = seeds.distinct().localCheckpoint(eager=False)
     visited = None
     frontier = seeds
     rounds = added = 0
@@ -310,20 +230,44 @@ def _seeded_closure(triples: DataFrame, inner, seeds: DataFrame,
         # truncating would silently return WRONG (partial) answers —
         # a graph with diameter beyond the cap must fail loudly
         raise ValueError(
-            "seeded path closure did not converge within %d rounds "
-            "(frontier still growing) — raise max_iters for graphs "
-            "of this diameter" % max_iters)
+            "path closure did not converge within %d rounds (frontier "
+            "still growing) — raise max_iters for graphs of this "
+            "diameter" % max_iters)
     last_seeded_stats.clear()
     last_seeded_stats.update({"rounds": rounds, "visited_rows": added})
     if visited is None:
-        visited = seeds.limit(0)
+        visited = step  # converged in round one: the empty relation
     if reflexive:
-        # zero-length component: the SEED relates to itself (per the
+        # zero-length component: a SEED relates to itself (per the
         # SPARQL zero-length-path semantics for a bound term — note
         # this holds even when the term has no edges in the graph,
         # where the unseeded all-nodes evaluation would drop it)
-        visited = visited.unionByName(seeds).distinct()
+        visited = visited.unionByName(_identity(triples, seeds)).distinct()
     return visited
+
+
+def _seeds(triples: DataFrame, terms) -> DataFrame:
+    """Constant start terms → the frontier pairing each with itself."""
+    return triples.sparkSession.createDataFrame(
+        [(t, t) for t in terms], "seed string, n string")
+
+
+def _bind_path(reach: DataFrame, seed_term, n_term) -> DataFrame:
+    """(seed, n) path rows → solutions over the pattern's endpoint
+    terms: a variable binds its column (a repeated one filters to
+    equality), a constant filters it (0 columns when both are)."""
+    proj, seen = [], {}
+    for col, term in (("seed", seed_term), ("n", n_term)):
+        if not isinstance(term, tuple):
+            reach = reach.filter(F.col(col) == F.lit(term))
+            continue
+        name = _check_var_name(term[1])
+        if name in seen:
+            reach = reach.filter(F.col(col) == F.col(seen[name]))
+        else:
+            seen[name] = col
+            proj.append(F.col(col).alias(name))
+    return reach.select(*proj).distinct()
 
 
 # object-term metadata columns (present in the extraction/store
@@ -386,42 +330,14 @@ def _pattern_df(triples: DataFrame, s_p_o, buckets=None) -> DataFrame:
                 raise ValueError(
                     "tagged-literal endpoints are not supported on "
                     "property-path patterns (paths bind lexical terms)")
-        s_is_const = not isinstance(s_term, tuple)
-        o_is_const = not isinstance(o_term, tuple)
-        if s_is_const or o_is_const:
-            # SEEDED evaluation: iterate a frontier from the bound
-            # endpoint — work ∝ the reachable set, never the full
-            # closure (bound object runs the inverted path forward)
-            spark = triples.sparkSession
-            if s_is_const:
-                seed_val, path_fwd, other = s_term, p_term, o_term
-            else:
-                seed_val, path_fwd, other = (o_term, _invert(p_term),
-                                             s_term)
-            seeds = spark.createDataFrame(
-                [(seed_val, seed_val)], "seed string, n string")
-            reach = _step(triples, path_fwd, seeds)
-            if isinstance(other, tuple):  # the free endpoint is a var
-                name = _check_var_name(other[1])
-                return reach.select(F.col("n").alias(name)).distinct()
-            # both endpoints constant (ASK-style): 0-column solutions
-            return (reach.filter(F.col("n") == F.lit(other))
-                    .select().distinct())
-        # var-var (or repeated-var) pattern: bind against the full
-        # path edge relation
-        part = path_edges(triples, p_term)
-        proj, filters, seen = [], [], {}
-        for pos, term in zip(("s", "o"), (s_term, o_term)):
-            col = F.col(pos)
-            name = _check_var_name(term[1])
-            if name in seen:
-                filters.append(col == F.col(seen[name]))
-            else:
-                seen[name] = pos
-                proj.append(col.alias(name))
-        for f in filters:
-            part = part.filter(f)
-        return part.select(*proj).distinct()
+        if isinstance(s_term, tuple) and not isinstance(o_term, tuple):
+            # a bound OBJECT seeds the inverted path
+            s_term, p_term, o_term = o_term, _invert(p_term), s_term
+        # a bound subject seeds the frontier; two free endpoints step
+        # unseeded, from the path's whole edge relation
+        seeds = (None if isinstance(s_term, tuple)
+                 else _seeds(triples, [s_term]))
+        return _bind_path(_step(triples, p_term, seeds), s_term, o_term)
     proj, filters, seen = [], [], {}
     have_meta = all(src in triples.columns for src, _sfx in _META_SRC)
     positions = _POSITIONS if g_term is None else _POSITIONS + ("graph",)
@@ -555,11 +471,11 @@ def bgp_select(triples: DataFrame, patterns, select=None,
     no variable cross-joins, like a disjoint pattern group)."""
     if not patterns and not subselects:
         raise ValueError("empty BGP")
-    # VALUES-seeded closure paths: when the inline binding table fixes
-    # one endpoint of a closure path to a SMALL literal set, seed the
-    # frontier from those values instead of materializing the full
-    # closure — the constant-endpoint optimization generalized to
-    # bound sets (<x> p+ ?y via VALUES ?x { ... })
+    # VALUES-seeded paths: when the inline binding table fixes one
+    # endpoint of a path to a SMALL literal set, seed the frontier from
+    # those values instead of evaluating the path unseeded — the
+    # constant-endpoint case generalized to bound sets
+    # (<x> p+ ?y via VALUES ?x { ... })
     prebuilt = []
     if values is not None and patterns:
         v_names, v_rows = values
@@ -575,25 +491,17 @@ def bgp_select(triples: DataFrame, patterns, select=None,
         kept = []
         for pat in patterns:
             if (len(pat) == 3 and isinstance(pat[1], Path)
-                    and _has_closure(pat[1])
                     and isinstance(pat[0], tuple) and pat[0][0] == "var"
                     and isinstance(pat[2], tuple) and pat[2][0] == "var"
                     and pat[0][1] != pat[2][1]
                     and (pat[0][1] in col_vals
                          or pat[2][1] in col_vals)):
-                if pat[0][1] in col_vals:
-                    sname, oname = pat[0][1], pat[2][1]
-                    path_fwd = pat[1]
-                else:
-                    sname, oname = pat[2][1], pat[0][1]
-                    path_fwd = _invert(pat[1])
-                seeds = triples.sparkSession.createDataFrame(
-                    [(v, v) for v in col_vals[sname]],
-                    "seed string, n string")
-                prebuilt.append(
-                    _step(triples, path_fwd, seeds)
-                    .select(F.col("seed").alias(sname),
-                            F.col("n").alias(oname)).distinct())
+                s_term, path, o_term = pat
+                if s_term[1] not in col_vals:
+                    s_term, path, o_term = o_term, _invert(path), s_term
+                reach = _step(triples, path,
+                              _seeds(triples, col_vals[s_term[1]]))
+                prebuilt.append(_bind_path(reach, s_term, o_term))
                 continue
             kept.append(pat)
         patterns = kept

@@ -60,4 +60,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # a file read of a glob makes Spark probe it as a streaming sink's
+    # output directory first, and log a WARN with a full stack trace
+    # when that literal path does not exist; no streaming sink runs here
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+        jvm.org.apache.logging.log4j.Level.ERROR)
+    return spark

@@ -168,10 +168,6 @@ class _Env:
         return _Env(ns, base, lang)
 
 
-class RdfXmlError(ValueError):
-    pass
-
-
 class _Reader:
     def __init__(self, bnode_factory):
         self.bnode = bnode_factory

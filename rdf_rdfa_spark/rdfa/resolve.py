@@ -21,7 +21,6 @@ from .terms import (
     XHV_NS,
     RDFA_UNRESOLVED_CURIE,
     RDFA_UNRESOLVED_TERM,
-    bnode,
     iri,
 )
 

@@ -52,7 +52,6 @@ XSD_NS = "http://www.w3.org/2001/XMLSchema#"
 XHV_NS = "http://www.w3.org/1999/xhtml/vocab#"
 RDFA_NS = "http://www.w3.org/ns/rdfa#"
 XHTML_NS = "http://www.w3.org/1999/xhtml"
-XML_NS = "http://www.w3.org/XML/1998/namespace"
 DC_NS = "http://purl.org/dc/terms/"
 
 RDF_TYPE = RDF_NS + "type"
@@ -61,7 +60,6 @@ RDF_REST = RDF_NS + "rest"
 RDF_NIL = RDF_NS + "nil"
 RDF_XMLLITERAL = RDF_NS + "XMLLiteral"
 RDF_HTML = RDF_NS + "HTML"
-RDF_LANGSTRING = RDF_NS + "langString"
 
 RDFS_SUBCLASSOF = RDFS_NS + "subClassOf"
 RDFS_SUBPROPERTYOF = RDFS_NS + "subPropertyOf"

@@ -49,7 +49,6 @@ from .terms import (
     RDFA_NS,
     BNODE,
     IRI,
-    LITERAL,
     RDFA_CONTEXT_PRED,
     DC_DESCRIPTION,
     DC_NS,
@@ -77,7 +76,6 @@ from .terms import (
 )
 
 _HTML_HOSTS = ("xhtml1", "xhtml5", "html4", "html5")
-_HEAD_BODY_RE = re.compile(r"^(head|body)$")
 _CDATA_OPEN_RE = re.compile(r"\A\s*<!\[CDATA\[", re.S)
 _CDATA_CLOSE_RE = re.compile(r"\]\]>\s*\Z", re.S)
 _XMLNS_ATTR_RE = re.compile(r"^xmlns(?::(.+))?$")

@@ -158,9 +158,11 @@ def q_kg_bgp_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_kg_bgp_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``x basedOn+ y`` — transitive closure by distributed iterative
-    doubling; the output scales linearly with the corpus (45 pairs per
-    decade).  Oracle: a DuckDB recursive CTE."""
+    """``x basedOn+ y`` — transitive closure with both endpoints free:
+    the semi-naive frontier loop starts from the whole edge relation
+    and takes one round per chain hop; the output scales linearly with
+    the corpus (45 pairs per decade).  Oracle: a DuckDB recursive
+    CTE."""
     return bgp_select(
         _based_on_chain(spark, sf_dir),
         [(var("x"), one_or_more(PROP_NS + "basedOn"), var("y"))])
