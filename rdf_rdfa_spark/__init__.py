@@ -37,9 +37,5 @@ read_jsonl_pages = _lazy(".sources.jsonl", "read_jsonl_pages")
 materialize_resumable = _lazy(".pipeline.materialize", "materialize_resumable")
 read_triples = _lazy(".pipeline.materialize", "read_triples")
 bgp_select = _lazy(".pipeline.bgpq", "bgp_select")
-bgp_ask = _lazy(".pipeline.bgpq", "bgp_ask")
-bgp_aggregate = _lazy(".pipeline.bgpq", "bgp_aggregate")
-bgp_construct = _lazy(".pipeline.bgpq", "bgp_construct")
-bgp_union = _lazy(".pipeline.bgpq", "bgp_union")
 sparql = _lazy(".pipeline.sparql", "sparql")
 sparql_update = _lazy(".pipeline.sparql", "sparql_update")

@@ -1,6 +1,9 @@
-"""Distributed basic-graph-pattern queries over the triple store —
-the "query the constructed KG" surface (the in-memory ASK evaluator
-in rdfa/bgp.py is its per-document little sibling).
+"""Distributed basic-graph-pattern evaluation over the triple store:
+``bgp_select`` evaluates ONE SPARQL WHERE group (triple patterns,
+property paths, OPTIONAL, MINUS, FILTER [NOT] EXISTS, FILTER, BIND,
+VALUES, subselects) to its DISTINCT solutions.  The query forms and
+solution modifiers (projection of aggregates, ORDER BY / LIMIT /
+OFFSET, UNION, ASK, CONSTRUCT, DESCRIBE) live in :mod:`.sparql`.
 
 A BGP compiles to relational algebra: each triple pattern is a
 filtered projection of the triples table with its variables as
@@ -13,6 +16,8 @@ join prunes to co-located buckets.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, functions as F
 
 from .materialize import subject_bucket
@@ -21,7 +26,7 @@ _POSITIONS = ("subj", "pred", "obj")
 
 
 def var(name: str):
-    """A pattern variable (mirrors rdfa.bgp.v)."""
+    """A pattern variable."""
     return ("var", name)
 
 
@@ -246,6 +251,15 @@ def _closure(triples: DataFrame, inner, seeds, reflexive: bool,
     return visited
 
 
+def _endpoint_seeds(term, seeded):
+    """A path endpoint's seed set: a constant is a one-element set, a
+    variable VALUES binds to constants is that set, otherwise None
+    (a free endpoint)."""
+    if not isinstance(term, tuple):
+        return [term]
+    return (seeded or {}).get(term[1])
+
+
 def _seeds(triples: DataFrame, terms) -> DataFrame:
     """Constant start terms → the frontier pairing each with itself."""
     return triples.sparkSession.createDataFrame(
@@ -283,6 +297,11 @@ _META_SRC = (("lang", "__lang"), ("datatype", "__dt"),
 _META_SUFFIXES = tuple(sfx for _src, sfx in _META_SRC)
 
 
+def has_term_meta(df: DataFrame) -> bool:
+    """Does ``df`` carry the store's lang/datatype/obj_kind columns?"""
+    return all(src in df.columns for src, _sfx in _META_SRC)
+
+
 def _is_meta(col_name: str) -> bool:
     return col_name.endswith(_META_SUFFIXES)
 
@@ -295,7 +314,8 @@ def _check_var_name(name: str) -> str:
     return name
 
 
-def _pattern_df(triples: DataFrame, s_p_o, buckets=None) -> DataFrame:
+def _pattern_df(triples: DataFrame, s_p_o, buckets=None,
+                seeded=None) -> DataFrame:
     """A pattern is (s, p, o) or (s, p, o, g): the optional 4th term
     scopes the pattern to the store's ``graph`` column (SPARQL GRAPH —
     the store routes processor diagnostics to a named graph exactly
@@ -306,7 +326,12 @@ def _pattern_df(triples: DataFrame, s_p_o, buckets=None) -> DataFrame:
     (materialize.store_buckets) — a CONSTANT-subject pattern then also
     filters the ``bucket`` PARTITION column, so the scan prunes to one
     bucket directory (1/buckets of the store) before touching a row
-    group.  Point lookups on a 100 TB store read 1/64th of it."""
+    group.  Point lookups on a 100 TB store read 1/64th of it.
+
+    ``seeded``: {variable: constants} for variables the group's VALUES
+    binds to a fixed set; a path endpoint bound that way seeds the
+    frontier from the set, exactly as a constant endpoint seeds it
+    from its one term."""
     g_term = None
     if len(s_p_o) == 4:
         s_term, p_term, o_term, g_term = s_p_o
@@ -330,16 +355,18 @@ def _pattern_df(triples: DataFrame, s_p_o, buckets=None) -> DataFrame:
                 raise ValueError(
                     "tagged-literal endpoints are not supported on "
                     "property-path patterns (paths bind lexical terms)")
-        if isinstance(s_term, tuple) and not isinstance(o_term, tuple):
+        s_seeds = _endpoint_seeds(s_term, seeded)
+        o_seeds = _endpoint_seeds(o_term, seeded)
+        if s_seeds is None and o_seeds is not None:
             # a bound OBJECT seeds the inverted path
             s_term, p_term, o_term = o_term, _invert(p_term), s_term
+            s_seeds = o_seeds
         # a bound subject seeds the frontier; two free endpoints step
         # unseeded, from the path's whole edge relation
-        seeds = (None if isinstance(s_term, tuple)
-                 else _seeds(triples, [s_term]))
+        seeds = None if s_seeds is None else _seeds(triples, s_seeds)
         return _bind_path(_step(triples, p_term, seeds), s_term, o_term)
     proj, filters, seen = [], [], {}
-    have_meta = all(src in triples.columns for src, _sfx in _META_SRC)
+    have_meta = has_term_meta(triples)
     positions = _POSITIONS if g_term is None else _POSITIONS + ("graph",)
     for pos, term in zip(positions, s_p_o):
         col = F.col(pos)
@@ -368,21 +395,24 @@ def _pattern_df(triples: DataFrame, s_p_o, buckets=None) -> DataFrame:
                 filters.append(F.col("datatype") == datatype)
         else:
             filters.append(col == F.lit(term))
-    part = triples
     if (buckets and "bucket" in triples.columns
             and not isinstance(s_term, tuple)):
-        part = part.filter(
-            F.col("bucket") == subject_bucket(F.lit(s_term), buckets))
-    for f in filters:
-        part = part.filter(f)
-    return part.select(*proj).distinct()
+        filters.insert(
+            0, F.col("bucket") == subject_bucket(F.lit(s_term), buckets))
+    if filters:
+        # one filter call (each DataFrame call is a Py4J round trip that
+        # re-runs analysis), nested right to left: the conjunction
+        # Catalyst builds from stacked filters, so the plan is the same
+        triples = triples.filter(functools.reduce(
+            lambda rest, f: f & rest, reversed(filters)))
+    return triples.select(*proj).distinct()
 
 
-def _join_patterns(triples: DataFrame, patterns,
-                   buckets=None) -> DataFrame:
+def _join_patterns(triples: DataFrame, patterns, buckets=None,
+                   seeded=None) -> DataFrame:
     out = None
     for s_p_o in patterns:
-        part = _pattern_df(triples, s_p_o, buckets=buckets)
+        part = _pattern_df(triples, s_p_o, buckets=buckets, seeded=seeded)
         if out is None:
             out = part
         else:
@@ -416,22 +446,10 @@ def _group_df(triples: DataFrame, group, buckets=None) -> DataFrame:
     return df
 
 
-def bgp_union(triples: DataFrame, groups, select=None) -> DataFrame:
-    """SPARQL UNION: solutions of several pattern groups combined.
-    Groups must bind the same variables (or pass ``select`` to project
-    the common subset); result is DISTINCT across groups."""
-    outs = [bgp_select(triples, g, select=select) for g in groups]
-    out = outs[0]
-    for nxt in outs[1:]:
-        out = out.unionByName(nxt)
-    return out.distinct()
-
-
 def bgp_select(triples: DataFrame, patterns, select=None,
                filters=None, optional=None, minus=None,
-               not_exists=None, exists=None, order_by=None, limit=None,
-               values=None, bind=None, subselects=None,
-               buckets=None) -> DataFrame:
+               not_exists=None, exists=None, values=None, bind=None,
+               subselects=None, buckets=None) -> DataFrame:
     """patterns: [(s, p, o)] where each position is a concrete string
     or var('name'). → one column per variable (or ``select``'s subset),
     one row per solution (DISTINCT — set semantics like SPARQL
@@ -455,59 +473,33 @@ def bgp_select(triples: DataFrame, patterns, select=None,
     with no shared variable removes EVERY solution when the group has
     any match at all (the spec's divergence between the two negation
     forms).
-    ``order_by`` / ``limit``: solution modifiers.  ``order_by`` takes
-    column names or Column expressions; with ``limit`` set, Catalyst
-    compiles the pair to TakeOrderedAndProject — a per-partition top-k
-    plus a driver merge of k·P rows, never a global sort of the
-    solution set.
+    ``exists``: SPARQL FILTER EXISTS — keeps the solutions with a
+    compatible match (left-semi join).
     ``values``: SPARQL VALUES — ``(var_names, rows)``: an inline
     binding table (broadcast — it is literal data) inner-joined on its
-    variables.  ``bind``: SPARQL BIND — dict of new variable name →
-    Column expression over the solution columns, applied before
-    ``filters`` so FILTER can reference bound variables.
+    variables.  A column with no UNDEF cell also seeds the frontier of
+    any path endpoint it binds (``?x p+ ?y . VALUES ?x { ... }``).
+    ``bind``: SPARQL BIND — dict of new variable name → Column
+    expression over the solution columns, applied before ``filters``
+    so FILTER can reference bound variables.
     ``subselects``: SPARQL subqueries — already-compiled solution
     DataFrames ({ SELECT ... } groups) inner-joined on their shared
     variables (evaluated bottom-up per the spec; a subselect sharing
     no variable cross-joins, like a disjoint pattern group)."""
     if not patterns and not subselects:
         raise ValueError("empty BGP")
-    # VALUES-seeded paths: when the inline binding table fixes one
-    # endpoint of a path to a SMALL literal set, seed the frontier from
-    # those values instead of evaluating the path unseeded — the
-    # constant-endpoint case generalized to bound sets
-    # (<x> p+ ?y via VALUES ?x { ... })
-    prebuilt = []
-    if values is not None and patterns:
-        v_names, v_rows = values
-        col_vals = {}
-        for i, n in enumerate(v_names):
-            cells = [r[i] for r in v_rows]
-            # a single UNDEF row leaves the var unconstrained — it
-            # must NOT narrow the seed set
-            if any(c is None or isinstance(c, tuple) for c in cells):
-                continue
-            if cells:
-                col_vals[n] = sorted(set(cells))
-        kept = []
-        for pat in patterns:
-            if (len(pat) == 3 and isinstance(pat[1], Path)
-                    and isinstance(pat[0], tuple) and pat[0][0] == "var"
-                    and isinstance(pat[2], tuple) and pat[2][0] == "var"
-                    and pat[0][1] != pat[2][1]
-                    and (pat[0][1] in col_vals
-                         or pat[2][1] in col_vals)):
-                s_term, path, o_term = pat
-                if s_term[1] not in col_vals:
-                    s_term, path, o_term = o_term, _invert(path), s_term
-                reach = _step(triples, path,
-                              _seeds(triples, col_vals[s_term[1]]))
-                prebuilt.append(_bind_path(reach, s_term, o_term))
-                continue
-            kept.append(pat)
-        patterns = kept
-    out = (_join_patterns(triples, patterns, buckets=buckets)
+    # VALUES columns without UNDEF cells are bound SETS: they seed the
+    # path endpoints they bind (an UNDEF cell leaves the var free)
+    seeded = {}
+    for i, name in enumerate(values[0] if values is not None else ()):
+        cells = [r[i] for r in values[1]]
+        if cells and not any(c is None or isinstance(c, tuple)
+                             for c in cells):
+            seeded[name] = sorted(set(cells))
+    out = (_join_patterns(triples, patterns, buckets=buckets,
+                          seeded=seeded)
            if patterns else None)
-    for sub in list(prebuilt) + list(subselects or ()):
+    for sub in subselects or ():
         if out is None:
             out = sub
             continue
@@ -577,32 +569,21 @@ def bgp_select(triples: DataFrame, patterns, select=None,
     # nothing extra.
     for flt in (filters or ()):
         out = out.filter(flt)
-    for group in (minus or ()):
-        neg = _group_df(triples, group, buckets=buckets)
-        shared = [c for c in neg.columns
-                  if c in out.columns and not _is_meta(c)]
-        if shared:
-            out = out.join(neg.select(*shared), shared, "left_anti")
-        # no shared variables → MINUS removes nothing (SPARQL spec)
-    for group in (not_exists or ()):
-        neg = _group_df(triples, group, buckets=buckets)
-        shared = [c for c in neg.columns
-                  if c in out.columns and not _is_meta(c)]
-        if shared:
-            out = out.join(neg.select(*shared), shared, "left_anti")
-        else:
-            # NOT EXISTS with a disjoint group: any match at all
-            # empties the solution set (anti join on a TRUE condition)
-            out = out.join(neg.limit(1), F.lit(True), "left_anti")
-    for group in (exists or ()):
-        pos = _group_df(triples, group, buckets=buckets)
-        shared = [c for c in pos.columns
-                  if c in out.columns and not _is_meta(c)]
-        if shared:
-            # FILTER EXISTS: keep solutions with a compatible match
-            out = out.join(pos.select(*shared), shared, "left_semi")
-        else:
-            out = out.join(pos.limit(1), F.lit(True), "left_semi")
+    # MINUS / FILTER NOT EXISTS / FILTER EXISTS join on the shared
+    # variables.  A group sharing none removes nothing under MINUS
+    # (disjoint domains are never compatible); under [NOT] EXISTS it
+    # tests whether the group has any match at all (a join on TRUE).
+    for groups, how, disjoint in ((minus, "left_anti", False),
+                                  (not_exists, "left_anti", True),
+                                  (exists, "left_semi", True)):
+        for group in groups or ():
+            sub = _group_df(triples, group, buckets=buckets)
+            shared = [c for c in sub.columns
+                      if c in out.columns and not _is_meta(c)]
+            if shared:
+                out = out.join(sub.select(*shared), shared, how)
+            elif disjoint:
+                out = out.join(sub.limit(1), F.lit(True), how)
     if select:
         out = out.select(*select)
     else:
@@ -611,91 +592,4 @@ def bgp_select(triples: DataFrame, patterns, select=None,
         meta = [c for c in out.columns if _is_meta(c)]
         if meta:
             out = out.drop(*meta)
-    out = out.distinct()
-    if order_by:
-        out = out.orderBy(*order_by)
-    if limit is not None:
-        out = out.limit(limit)
-    return out
-
-
-def bgp_aggregate(triples: DataFrame, patterns, group_by, aggs,
-                  **kwargs) -> DataFrame:
-    """SPARQL GROUP BY + aggregates over BGP solutions.  ``group_by``
-    is a list of variable names; ``aggs`` maps output column name →
-    aggregate Column (e.g. ``{"n": F.count("*")}``).  Aggregates run
-    over the DISTINCT solution set (this engine's SELECT DISTINCT
-    contract), i.e. SPARQL's ``SELECT (COUNT(DISTINCT ...) ...)``
-    family.  The groupBy partial-aggregates map-side, so the shuffle
-    carries one row per (group, mapper), not the solutions."""
-    sol = bgp_select(triples, patterns, **kwargs)
-    return sol.groupBy(*group_by).agg(
-        *[expr.alias(name) for name, expr in aggs.items()])
-
-
-def bgp_construct(triples: DataFrame, patterns, template,
-                  **kwargs) -> DataFrame:
-    """SPARQL CONSTRUCT: each solution instantiates every template
-    triple (s, p, o) — var('name') positions take the solution's
-    binding, strings stay constant.  Output is a DISTINCT
-    (subj, pred, obj) DataFrame ready for write_triples /
-    entailment — KG derivation rules as one declarative plan."""
-    sol = bgp_select(triples, patterns, **kwargs)
-    outs = []
-    for s, p, o in template:
-        cols = []
-        for pos, term in zip(_POSITIONS, (s, p, o)):
-            if isinstance(term, tuple) and term[0] == "var":
-                cols.append(F.col(term[1]).alias(pos))
-            else:
-                cols.append(F.lit(term).alias(pos))
-        outs.append(sol.select(*cols))
-    out = outs[0]
-    for nxt in outs[1:]:
-        out = out.unionByName(nxt)
-    # drop solutions with unbound (NULL) template vars, per SPARQL
-    for pos in _POSITIONS:
-        out = out.filter(F.col(pos).isNotNull())
     return out.distinct()
-
-
-def bgp_describe(triples: DataFrame, targets, patterns=None,
-                 **kwargs) -> DataFrame:
-    """SPARQL DESCRIBE: all store triples whose SUBJECT is a
-    described resource.  ``targets`` mixes constant IRIs and
-    var('name') entries resolved against the WHERE group's solutions.
-    (Subject-scoped description — the reference ecosystem's default
-    DESCRIBE is implementation-defined; blank-node closure is not
-    chased, matching the store's skolemized-label model.)"""
-    spark = triples.sparkSession
-    consts = [t for t in targets if not isinstance(t, tuple)]
-    vars_ = [t[1] for t in targets if isinstance(t, tuple)]
-    subs = None
-    if consts:
-        subs = spark.createDataFrame([(c,) for c in consts], "subj string")
-    if vars_:
-        if not patterns:
-            raise ValueError("DESCRIBE ?var needs a WHERE group")
-        sol = bgp_select(triples, patterns, **kwargs)
-        for v in vars_:
-            part = sol.select(F.col(v).alias("subj")).distinct()
-            subs = part if subs is None else subs.unionByName(part)
-    if subs is None:
-        raise ValueError("DESCRIBE needs at least one target")
-    # constant target lists are tiny by construction — broadcast them.
-    # Var-derived target sets come from an ARBITRARY bgp_select
-    # (DESCRIBE ?d WHERE {?d rdf:type :Article} can be web-scale): a
-    # forced broadcast there overrides the optimizer's size estimate
-    # and OOMs the driver/executors, so use a plain left_semi and let
-    # AQE pick broadcast at runtime when the solution set is actually
-    # small.
-    subs = subs.distinct()
-    if not vars_:
-        subs = F.broadcast(subs)
-    return triples.join(subs, "subj", "left_semi")
-
-
-def bgp_ask(triples: DataFrame, patterns, **kwargs) -> bool:
-    """SPARQL ASK over the distributed store: does at least one
-    solution exist?  LIMIT 1 keeps the scan short-circuiting."""
-    return bool(bgp_select(triples, patterns, **kwargs).limit(1).take(1))

@@ -1,11 +1,17 @@
 """Textual SPARQL front end for the distributed KG query engine.
 
-Parses a practical SPARQL 1.1 subset and compiles it onto the
-declarative operators in :mod:`bgpq` (everything executes as Catalyst
-plans — this module only builds ASTs):
+Parses a practical SPARQL 1.1 subset (everything executes as Catalyst
+plans — nothing is evaluated in Python).  The layering is:
+:func:`bgpq.bgp_select` evaluates one WHERE group to its solutions;
+this module owns every query form on top of it — the SELECT
+projection and aggregates, UNION, ASK, DESCRIBE, and the solution
+modifiers (``_apply_modifiers``, the only place they apply) — and
+one triples-template path (``_parse_update_block`` + ``_kinded_df``)
+shared by CONSTRUCT and INSERT/DELETE.  The subset:
 
   - SELECT [DISTINCT] ?vars|* / ASK / CONSTRUCT {template} (and the
-    CONSTRUCT WHERE { } shorthand) /
+    CONSTRUCT WHERE { } shorthand; templates are plain triples — no
+    property paths or [ ] lists) /
     DESCRIBE <iri>|?var [WHERE { }] (subject-scoped description)
   - PREFIX declarations, ``a`` → rdf:type
   - basic graph patterns with ``;`` predicate and ``,`` object lists
@@ -15,7 +21,8 @@ plans — this module only builds ASTs):
   - ``[ p o ; ... ]`` blank-node property lists (fresh existential
     variables, stripped from SELECT * output)
   - OPTIONAL { }, MINUS { }, FILTER [NOT] EXISTS { },
-    ``{ } UNION { }`` (of plain pattern groups)
+    ``{ } UNION { }`` (of plain pattern groups, as a group's whole
+    body)
   - GRAPH <iri> { } / GRAPH ?g { }: scopes patterns to the store's
     ``graph`` column (output vs processor diagnostics, mirroring the
     reference's rdfagraph routing, reader.rb:311-317,459-466)
@@ -52,15 +59,15 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..rdfa.terms import RDF_TYPE
 from .bgpq import (
+    _META_SUFFIXES,
     Path,
     alt,
-    negated,
-    bgp_aggregate,
-    bgp_construct,
     bgp_select,
-    bgp_union,
+    has_term_meta,
     inv,
+    negated,
     lit,
     one_or_more,
     seq,
@@ -68,9 +75,6 @@ from .bgpq import (
     zero_or_more,
     zero_or_one,
 )
-
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-
 
 class SparqlSyntaxError(ValueError):
     pass
@@ -138,6 +142,14 @@ def _tokenize(text: str):
             out.append(("op", m.group("op")))
     out.append(("eof", ""))
     return out
+
+
+def _new_group(patterns=None) -> dict:
+    """A parsed WHERE group: its triple patterns plus one entry per
+    group clause (empty when absent)."""
+    return {"patterns": patterns or [], "optional": [], "minus": [],
+            "not_exists": [], "exists": [], "filters": [], "bind": {},
+            "values": None, "union": None, "subqueries": []}
 
 
 class _Parser:
@@ -397,10 +409,7 @@ class _Parser:
         """→ dict(patterns, optional, minus, not_exists, exists,
         filters, bind, values, union)"""
         self.eat_op("{")
-        g = {"patterns": [], "optional": [], "minus": [],
-             "not_exists": [], "exists": [], "filters": [],
-             "bind": {}, "values": None, "union": None,
-             "subqueries": []}
+        g = _new_group()
         while not self.at_op("}"):
             if self.at_op("{") and self.peek(1)[0] == "word" \
                     and self.peek(1)[1].upper() == "SELECT":
@@ -750,27 +759,14 @@ class _Parser:
         if self.at_word("CONSTRUCT"):
             self.next()
             if self.at_word("WHERE"):
-                # CONSTRUCT WHERE { ... } shorthand: the pattern group
-                # doubles as the template (plain triple patterns only)
                 self.next()
-                g = self.parse_group()
-                for pat in g["patterns"]:
-                    if len(pat) == 4 or isinstance(pat[1], Path):
-                        raise SparqlSyntaxError(
-                            "CONSTRUCT WHERE supports plain triple "
-                            "patterns (no GRAPH scoping or paths)")
-                q = {"form": "construct", "template": g["patterns"],
-                     "group": g}
-                self._parse_modifiers(q)
-                return q
-            tmpl_group: list = []
-            self.eat_op("{")
-            while not self.at_op("}"):
-                self.parse_triples(tmpl_group)
-            self.eat_op("}")
-            self.eat_word("WHERE")
-            q = {"form": "construct", "template": tmpl_group,
-                 "group": self.parse_group()}
+                template, group = _template_where(self)
+            else:
+                template = _parse_update_block(self, allow_vars=True)
+                self.eat_word("WHERE")
+                group = self.parse_group()
+            q = {"form": "construct", "template": template,
+                 "group": group}
             self._parse_modifiers(q)
             return q
         raise SparqlSyntaxError("expected SELECT/ASK/CONSTRUCT")
@@ -922,7 +918,6 @@ _IDENT_RE = re.compile(r"`([^`]+)`")
 # escapes active) — stripped before the identifier scan so a backtick
 # INSIDE a string constant is never misread as a variable reference
 _SQL_STR_RE = re.compile(r"'(?:[^'\\]|\\.)*'")
-_META_SFX = ("__lang", "__dt", "__kind")
 
 
 def _idents(sql: str):
@@ -958,7 +953,7 @@ def _validate_filter_scope(filters, patterns, where, extra_vars=(),
     for sql in filters:
         for ident in _idents(sql):
             base = None
-            for sfx in _META_SFX:
+            for sfx in _META_SUFFIXES:
                 if ident.endswith(sfx):
                     base = ident[: -len(sfx)]
                     break
@@ -994,6 +989,10 @@ def _subq_vars(q) -> set:
 
 
 def _apply_modifiers(out: DataFrame, q) -> DataFrame:
+    """The solution modifiers ORDER BY / OFFSET / LIMIT — applied here
+    and nowhere else.  ORDER BY with LIMIT compiles to
+    TakeOrderedAndProject: a per-partition top-k plus a driver merge,
+    never a global sort of the solutions."""
     order = q.get("order") or ()
     if order:
         out = out.orderBy(*[F.expr(v).desc() if d else F.expr(v)
@@ -1005,11 +1004,35 @@ def _apply_modifiers(out: DataFrame, q) -> DataFrame:
     return out
 
 
-def _group_kwargs(triples: DataFrame, g, store_meta: bool,
-                  buckets=None) -> dict:
-    """A parsed group dict → bgp_select keyword arguments (subqueries
-    compiled recursively, filter/bind scope validated)."""
-    subs = [_compile_select(triples, sq, store_meta, buckets=buckets)
+def _where(triples: DataFrame, g, buckets=None,
+           select=None) -> DataFrame:
+    """A parsed WHERE group → its DISTINCT solutions (``select``
+    projects them): a UNION of plain arms, or one bgp_select with the
+    group's subqueries compiled bottom-up and its FILTER/BIND scope
+    validated."""
+    if g["union"] is not None:
+        # raise rather than silently drop (same convention as
+        # _sub_group): group-level clauses alongside a UNION are not
+        # compiled into the union arms
+        dropped = [name for name, val in (
+            ("patterns", g["patterns"]), ("subqueries", g["subqueries"]),
+            ("FILTER", g["filters"]), ("OPTIONAL", g["optional"]),
+            ("MINUS", g["minus"]), ("FILTER NOT EXISTS", g["not_exists"]),
+            ("FILTER EXISTS", g["exists"]), ("BIND", g["bind"]),
+            ("VALUES", g["values"]),
+        ) if val]
+        if dropped:
+            raise SparqlSyntaxError(
+                "UNION is supported as the entire group body (group "
+                "also carries: %s)" % ", ".join(dropped))
+        arms = [bgp_select(triples, arm, select=select, buckets=buckets)
+                for arm in g["union"]]
+        out = arms[0]
+        for nxt in arms[1:]:
+            out = out.unionByName(nxt)
+        return out.distinct()
+    have_meta = has_term_meta(triples)
+    subs = [_compile_select(triples, sq, buckets=buckets)
             for sq in g["subqueries"]]
     extra = set(g["bind"]) | (set(g["values"][0]) if g["values"]
                               else set())
@@ -1018,15 +1041,13 @@ def _group_kwargs(triples: DataFrame, g, store_meta: bool,
     # group-level FILTERs run after the OPTIONAL joins, so optional-
     # bound variables are in scope (BOUND(?m) over OPTIONAL works);
     # BINDs run before them, so only required/VALUES vars for those
-    scope = list(g["patterns"])
-    for og in g["optional"]:
-        scope += og["patterns"] if isinstance(og, dict) else og
-    _validate_filter_scope(list(g["filters"]), scope, "WHERE",
-                           extra_vars=extra, have_meta=store_meta)
+    _validate_filter_scope(list(g["filters"]), _group_scope(g), "WHERE",
+                           extra_vars=extra, have_meta=have_meta)
     _validate_filter_scope(list(g["bind"].values()), g["patterns"],
                            "WHERE", extra_vars=extra,
-                           have_meta=store_meta)
-    return dict(
+                           have_meta=have_meta)
+    return bgp_select(
+        triples, g["patterns"], select=select,
         filters=[F.expr(e) for e in g["filters"]],
         optional=g["optional"], minus=g["minus"],
         not_exists=g["not_exists"], exists=g["exists"],
@@ -1037,52 +1058,25 @@ def _group_kwargs(triples: DataFrame, g, store_meta: bool,
     )
 
 
-def _compile_select(triples: DataFrame, q, store_meta: bool,
-                    buckets=None) -> DataFrame:
+def _group_scope(g) -> list:
+    """The patterns whose variables reach the group's solutions: the
+    required ones, the OPTIONAL groups' and the UNION arms'."""
+    scope = list(g["patterns"])
+    for og in g["optional"]:
+        scope += og["patterns"] if isinstance(og, dict) else og
+    for arm in g["union"] or ():
+        scope += arm
+    return scope
+
+
+def _compile_select(triples: DataFrame, q, buckets=None) -> DataFrame:
     """A SELECT-form query dict (top level or subquery) → DataFrame
     with its own solution modifiers applied."""
     g = q["group"]
-    if g["union"] is not None:
-        # raise rather than silently drop (same convention as
-        # _sub_group): group-level clauses alongside a UNION are not
-        # compiled into the union branches
-        dropped = [name for name, val in (
-            ("patterns", g["patterns"]), ("subqueries", g["subqueries"]),
-            ("FILTER", g["filters"]), ("OPTIONAL", g["optional"]),
-            ("MINUS", g["minus"]), ("FILTER NOT EXISTS", g["not_exists"]),
-            ("FILTER EXISTS", g["exists"]), ("BIND", g["bind"]),
-            ("VALUES", g["values"]),
-        ) if val]
-        if dropped:
-            raise SparqlSyntaxError(
-                "UNION is supported as the entire SELECT body (group "
-                "also carries: %s)" % ", ".join(dropped))
-        return _apply_modifiers(
-            bgp_union(triples, g["union"], select=q.get("vars")), q)
-    kwargs = _group_kwargs(triples, g, store_meta, buckets=buckets)
-    order_cols = [F.expr(v).desc() if d else F.expr(v)
-                  for v, d in q.get("order", [])]
-    if q["aggs"] or q["group_by"] or q.get("having"):
+    if q["aggs"] or q.get("having"):
         aggs = {}
         for out_name, spec in q["aggs"].items():
             aggs[out_name] = _agg_col(*spec)
-        if not aggs and not q.get("having"):
-            # GROUP BY with no aggregates ≡ DISTINCT projection of the
-            # grouped variables (the engine is set-semantics already).
-            # The SELECT projection still applies: it must be a subset
-            # of the GROUP BY variables, and a strict subset needs its
-            # own distinct.
-            sel = q.get("vars") or q["group_by"]
-            bad = [v for v in sel if v not in q["group_by"]]
-            if bad:
-                raise SparqlSyntaxError(
-                    "SELECT ?%s is neither a GROUP BY variable nor an "
-                    "aggregate" % bad[0])
-            out = bgp_select(triples, g["patterns"],
-                             select=q["group_by"], **kwargs)
-            if list(sel) != list(q["group_by"]):
-                out = out.select(*sel).distinct()
-            return _apply_modifiers(out, q)
         hexpr, hidden = None, []
         if q.get("having"):
             hexpr, haggs = q["having"]
@@ -1104,85 +1098,101 @@ def _compile_select(triples: DataFrame, q, store_meta: bool,
                     raise SparqlSyntaxError(
                         "HAVING references ?%s, which is neither a "
                         "GROUP BY variable nor an aggregate" % ident)
-        out = bgp_aggregate(triples, g["patterns"],
-                            group_by=q["group_by"], aggs=aggs, **kwargs)
+        # aggregates run over the DISTINCT solutions; the groupBy
+        # partial-aggregates map-side, so the shuffle carries one row
+        # per (group, mapper), not the solutions
+        out = _where(triples, g, buckets).groupBy(*q["group_by"]).agg(
+            *[expr.alias(name) for name, expr in aggs.items()])
         if hexpr:
             out = out.filter(F.expr(hexpr))
         if hidden:
             out = out.drop(*hidden)
-        return _apply_modifiers(out, q)
-    anons = ()
-    if q.get("vars") is None:
-        # anon existentials from [] in the required patterns AND in
-        # OPTIONAL groups (whose columns join the solution set)
-        scope = list(g["patterns"])
-        for og in g["optional"]:
-            scope += og["patterns"] if isinstance(og, dict) else og
-        all_vars, _ = _pattern_var_info(scope)
-        anons = sorted(v for v in all_vars if v.startswith("_anon"))
-    if anons:
-        # [] blank nodes are existentials: strip them from SELECT *
-        # output (and re-dedup) BEFORE the solution modifiers apply
-        out = bgp_select(triples, g["patterns"], **kwargs)
-        out = out.drop(*anons).distinct()
-        return _apply_modifiers(out, q)
-    if q.get("offset"):
-        out = bgp_select(triples, g["patterns"], select=q.get("vars"),
-                         order_by=order_cols or None, **kwargs)
-        out = out.offset(q["offset"])
-        if q.get("limit") is not None:
-            out = out.limit(q["limit"])
-        return out
-    return bgp_select(
-        triples, g["patterns"], select=q.get("vars"),
-        order_by=order_cols or None, limit=q.get("limit"), **kwargs)
+    elif q["group_by"]:
+        # GROUP BY with no aggregates ≡ DISTINCT projection of the
+        # grouped variables (the engine is set-semantics already).
+        # The SELECT projection still applies: it must be a subset of
+        # the GROUP BY variables, and a strict subset needs its own
+        # distinct.
+        sel = q.get("vars") or q["group_by"]
+        bad = [v for v in sel if v not in q["group_by"]]
+        if bad:
+            raise SparqlSyntaxError(
+                "SELECT ?%s is neither a GROUP BY variable nor an "
+                "aggregate" % bad[0])
+        out = _where(triples, g, buckets, select=q["group_by"])
+        if list(sel) != list(q["group_by"]):
+            out = out.select(*sel).distinct()
+    else:
+        out = _where(triples, g, buckets, select=q.get("vars"))
+        if q.get("vars") is None:
+            # [] blank nodes are existentials: strip them from SELECT *
+            # output (and re-dedup) BEFORE the solution modifiers apply
+            all_vars, _ = _pattern_var_info(_group_scope(g))
+            anons = sorted(v for v in all_vars if v.startswith("_anon"))
+            if anons:
+                out = out.drop(*anons).distinct()
+    return _apply_modifiers(out, q)
+
+
+def _describe(triples: DataFrame, targets, sol) -> DataFrame:
+    """SPARQL DESCRIBE: all store triples whose SUBJECT is a
+    described resource.  ``targets`` mixes constant IRIs and
+    var('name') entries resolved against the WHERE solutions ``sol``.
+    (Subject-scoped description — the reference ecosystem's default
+    DESCRIBE is implementation-defined; blank-node closure is not
+    chased, matching the store's skolemized-label model.)"""
+    consts = [t for t in targets if not isinstance(t, tuple)]
+    vars_ = [t[1] for t in targets if isinstance(t, tuple)]
+    subs = None
+    if consts:
+        subs = triples.sparkSession.createDataFrame(
+            [(c,) for c in consts], "subj string")
+    for v in vars_:
+        if sol is None:
+            raise SparqlSyntaxError("DESCRIBE ?var needs a WHERE group")
+        part = sol.select(F.col(v).alias("subj")).distinct()
+        subs = part if subs is None else subs.unionByName(part)
+    # constant target lists are tiny by construction — broadcast them.
+    # Var-derived target sets come from an ARBITRARY WHERE group
+    # (DESCRIBE ?d WHERE {?d rdf:type :Article} can be web-scale): a
+    # forced broadcast there overrides the optimizer's size estimate
+    # and OOMs the driver/executors, so use a plain left_semi and let
+    # AQE pick broadcast at runtime when the solution set is actually
+    # small.
+    subs = subs.distinct()
+    if not vars_:
+        subs = F.broadcast(subs)
+    return triples.join(subs, "subj", "left_semi")
 
 
 def sparql(triples: DataFrame, query: str, buckets: int | None = None):
     """Execute a SPARQL query (see module docstring for the subset)
     over a (subj, pred, obj) triples DataFrame.  Returns a DataFrame
-    for SELECT/CONSTRUCT, bool for ASK.
+    for SELECT/CONSTRUCT/DESCRIBE, bool for ASK.  CONSTRUCT returns
+    the input frame's columns, filled like an INSERT (see _kinded_df).
 
     ``buckets``: the materialized store's subject-bucketing modulus
     (``materialize.store_buckets(root)``) — constant-subject patterns
     then prune the scan to one bucket PARTITION directory."""
-    p = _Parser(query)
-    q = p.parse_query()
+    q = _Parser(query).parse_query()
     g = q["group"]
-    store_meta = all(c in triples.columns
-                     for c in ("lang", "datatype", "obj_kind"))
     if q["form"] == "select":
-        return _compile_select(triples, q, store_meta, buckets=buckets)
+        return _compile_select(triples, q, buckets=buckets)
+    sol = None if g is None else _where(triples, g, buckets)
     if q["form"] == "describe":
-        from .bgpq import bgp_describe
-
-        if g is None:
-            return bgp_describe(triples, q["targets"])
-        kwargs = _group_kwargs(triples, g, store_meta, buckets=buckets)
-        return bgp_describe(triples, q["targets"], g["patterns"],
-                            **kwargs)
-    if g["union"] is not None:
-        raise SparqlSyntaxError(
-            "UNION is supported as the entire SELECT body")
-    kwargs = _group_kwargs(triples, g, store_meta, buckets=buckets)
+        return _describe(triples, q["targets"], sol)
     if q["form"] == "ask":
-        from .bgpq import bgp_ask
-
-        return bgp_ask(triples, g["patterns"], **kwargs)
-    # construct
-    return _apply_modifiers(
-        bgp_construct(triples, g["patterns"], q["template"], **kwargs), q)
+        # LIMIT 1 keeps the scan short-circuiting
+        return bool(sol.limit(1).take(1))
+    return _apply_modifiers(_kinded_df(triples, q["template"], sol), q)
 
 
-# --- SPARQL 1.1 UPDATE (functional) --------------------------------------
-# The store is immutable (snapshot manifests); an update therefore
-# RETURNS the updated triples DataFrame — pair with write_triples /
-# materialize to commit it as a new snapshot.  Supported forms:
-# INSERT DATA { ... } / DELETE DATA { ... } (ground triples),
-# DELETE WHERE { patterns }, and [DELETE {tmpl}] [INSERT {tmpl}]
-# WHERE { group }.  Deletion matches on lexical (subj, pred, obj)
-# across all graphs/urls; inserted rows land in the output graph with
-# obj_kind derived from the template term (var-bound objects: NULL).
+# --- triples templates: CONSTRUCT and INSERT/DELETE ---------------------
+# SPARQL 1.1 gives both the same grammar (ConstructTriples /
+# TriplesTemplate: triples with ;/, lists, no property paths and no
+# [ ] lists), so one parser and one instantiator serve both.  Each
+# template term carries its kind (var / iri / literal), which fills
+# the store's obj_kind column.
 
 def _parse_kinded_term(p: _Parser):
     k, v = p.peek()
@@ -1203,21 +1213,25 @@ def _parse_kinded_term(p: _Parser):
     if k == "number":
         p.next()
         return v, "literal"
-    raise SparqlSyntaxError("expected term in update block, got %r" % (v,))
+    raise SparqlSyntaxError(
+        "expected a term in a triples template (plain triple patterns: "
+        "no property paths, [ ] lists or GRAPH), got %r" % (v,))
 
 
 def _parse_update_block(p: _Parser, allow_vars: bool):
-    """{ s p o ; p2 o2 , o3 . ... } → [(term, kind) triples]."""
+    """{ s p o ; p2 o2 , o3 . ... } → [(term, kind) triples]: a
+    CONSTRUCT or INSERT/DELETE template (ground for the DATA forms)."""
     out = []
     p.eat_op("{")
     while not p.at_op("}"):
         s, sk = _parse_kinded_term(p)
         if sk == "literal":
-            raise SparqlSyntaxError("literal subject in update block")
+            raise SparqlSyntaxError("literal subject in a triples template")
         while True:
             pr, pk = _parse_kinded_term(p)
             if pk == "literal":
-                raise SparqlSyntaxError("literal predicate in update block")
+                raise SparqlSyntaxError(
+                    "literal predicate in a triples template")
             while True:
                 o, ok = _parse_kinded_term(p)
                 if not allow_vars and "var" in (sk, pk, ok):
@@ -1240,10 +1254,19 @@ def _parse_update_block(p: _Parser, allow_vars: bool):
     return out
 
 
+def _template_where(p: _Parser):
+    """CONSTRUCT WHERE { } / DELETE WHERE { } shorthand: one triples
+    template doubles as the WHERE group → (template, group)."""
+    template = _parse_update_block(p, allow_vars=True)
+    return template, _new_group(
+        [tuple(term for term, _kind in tr) for tr in template])
+
+
 def _kinded_df(triples: DataFrame, kinded, sol: DataFrame | None) -> DataFrame:
-    """Instantiate a kinded template into the STORE's schema: one
-    select per template triple over the solutions (or a literal row
-    for ground data), unioned.  Extra store columns get defaults:
+    """Instantiate a kinded template into the STORE's schema — the one
+    template instantiation, for CONSTRUCT and INSERT/DELETE: one select
+    per template triple over the solutions (or a literal row for
+    ground data), unioned.  Extra store columns get defaults:
     obj_kind from the template term, tag metadata from tagged
     literals, graph='output', url NULL."""
     cols = triples.columns
@@ -1281,15 +1304,21 @@ def _kinded_df(triples: DataFrame, kinded, sol: DataFrame | None) -> DataFrame:
     for nxt in outs[1:]:
         out = out.unionByName(nxt)
     # unbound (NULL) template vars drop the instantiation, per spec
-    for pos in ("subj", "pred", "obj"):
-        out = out.filter(F.col(pos).isNotNull())
-    return out.distinct()
+    return out.filter(F.col("subj").isNotNull() & F.col("pred").isNotNull()
+                      & F.col("obj").isNotNull()).distinct()
 
+
+# --- SPARQL 1.1 UPDATE (functional) --------------------------------------
+# The store is immutable (snapshot manifests); an update therefore
+# RETURNS the updated triples DataFrame — pair with write_triples to
+# commit it as a new snapshot.  Deletion matches on lexical
+# (subj, pred, obj) across all graphs/urls.
 
 def sparql_update(triples: DataFrame, update: str,
                   buckets: int | None = None) -> DataFrame:
-    """Execute one SPARQL UPDATE operation; returns the updated
-    triples DataFrame (functional — commit via materialize).
+    """Execute one SPARQL UPDATE operation — INSERT DATA / DELETE DATA
+    (ground), DELETE WHERE, or [DELETE {}] [INSERT {}] WHERE {} — and
+    return the updated triples DataFrame.
     ``buckets`` prunes constant-subject WHERE patterns exactly as in
     :func:`sparql` (the deletion anti-join still scans the store)."""
     p = _Parser(update)
@@ -1310,18 +1339,8 @@ def sparql_update(triples: DataFrame, update: str,
             p.next()
             del_kinded = _parse_update_block(p, allow_vars=False)
         elif p.at_word("WHERE"):
-            # DELETE WHERE { ... }: the pattern group doubles as the
-            # deletion template
             p.next()
-            group = p.parse_group()
-            del_kinded = []
-            for pat in group["patterns"]:
-                if len(pat) == 4 or isinstance(pat[1], Path):
-                    raise SparqlSyntaxError(
-                        "DELETE WHERE supports plain triple patterns")
-                del_kinded.append(tuple(
-                    (t, "var" if isinstance(t, tuple) and t[0] == "var"
-                     else "iri") for t in pat))
+            del_kinded, group = _template_where(p)
         else:
             del_kinded = _parse_update_block(p, allow_vars=True)
             if p.at_word("INSERT"):
@@ -1334,13 +1353,9 @@ def sparql_update(triples: DataFrame, update: str,
     if p.peek()[0] != "eof":
         raise SparqlSyntaxError(
             "trailing tokens after update at %r" % (p.peek()[1],))
-    store_meta = all(c in triples.columns
-                     for c in ("lang", "datatype", "obj_kind"))
     sol = None
     if group is not None:
-        kwargs = _group_kwargs(triples, group, store_meta,
-                               buckets=buckets)
-        sol = bgp_select(triples, group["patterns"], **kwargs)
+        sol = _where(triples, group, buckets)
         if ins_kinded and del_kinded:
             # both templates instantiate from the SAME solution set —
             # materialize it once (lazy barrier, lineage truncated)

@@ -588,19 +588,8 @@ def decode_html(raw: bytes) -> str:
 
 import html as _html_mod
 
-_FAST_TOKEN = re.compile(
-    r"<!--(?P<comment>.*?)(?:-->|$)"
-    r"|<!\[CDATA\[(?P<cdata>.*?)(?:\]\]>|$)"
-    r"|<!(?P<decl>[^>]*)>"
-    r"|<\?(?P<pi>[^>]*)>"
-    r"|</(?P<end>[A-Za-z][^\s>]*)\s*>"
-    r"|<(?P<start>[A-Za-z][^\t\n\r\f />]*)"
-    r"(?P<attrs>(?:\"[^\"]*\"|'[^']*'|[^>])*?)(?P<selfclose>/?)>",
-    re.S,
-)
-# dispatch-split variants of _FAST_TOKEN (same token grammar; the
-# scanner picks one by the character after '<' instead of running the
-# 6-way alternation per token)
+# one regex per token kind: the scanner picks one by the character
+# after '<' instead of running a 6-way alternation per token
 _FAST_START_TOK = re.compile(
     r"<([A-Za-z][^\t\n\r\f />]*)"
     r"((?:\"[^\"]*\"|'[^']*'|[^>])*?)(/?)>", re.S)

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import re
 
-from .dom import _FAST_TOKEN, _FAST_ATTR, _unescape
+from .dom import _FAST_ATTR, _unescape
 from .resolve import resolve
 from .terms import RDF_NS, iri, literal
 
@@ -52,6 +52,20 @@ ISLAND_HINT_RE = re.compile(r"<[A-Za-z_][\w.\-]*:RDF[\s>/]")
 
 def likely_has_rdfxml(text: str) -> bool:
     return "22-rdf-syntax-ns#" in text and ISLAND_HINT_RE.search(text) is not None
+
+
+# the whole token grammar in one alternation (dom's HTML scanner uses
+# per-kind regexes for the same grammar)
+_FAST_TOKEN = re.compile(
+    r"<!--(?P<comment>.*?)(?:-->|$)"
+    r"|<!\[CDATA\[(?P<cdata>.*?)(?:\]\]>|$)"
+    r"|<!(?P<decl>[^>]*)>"
+    r"|<\?(?P<pi>[^>]*)>"
+    r"|</(?P<end>[A-Za-z][^\s>]*)\s*>"
+    r"|<(?P<start>[A-Za-z][^\t\n\r\f />]*)"
+    r"(?P<attrs>(?:\"[^\"]*\"|'[^']*'|[^>])*?)(?P<selfclose>/?)>",
+    re.S,
+)
 
 
 class XNode:

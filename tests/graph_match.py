@@ -1,4 +1,6 @@
-"""Basic-graph-pattern matching + graph isomorphism over term tuples.
+"""Basic-graph-pattern matching + graph isomorphism over term tuples —
+the tests' per-document graph oracle (the library's distributed BGP
+engine is pipeline/bgpq.py).
 
 The W3C RDFa suite verifies each case by running a SPARQL ASK against
 the parsed graph (/root/reference/spec/suite_spec.rb:51-53,

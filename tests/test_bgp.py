@@ -1,7 +1,7 @@
 """BGP ASK evaluator + isomorphism (the suite's verification
 mechanism, suite_spec.rb:51-53 / matchers.rb:42-65)."""
 
-from rdf_rdfa_spark.rdfa.bgp import ask, isomorphic, v
+from graph_match import ask, isomorphic, v
 from rdf_rdfa_spark.rdfa.terms import bnode, iri, literal
 from rdf_rdfa_spark.rdfa.walk import parse_rdfa
 

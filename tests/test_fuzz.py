@@ -205,7 +205,7 @@ def small_graph(draw):
 def test_writer_roundtrip_fuzz(graph):
     """Any small graph (hostile literals included) serializes to RDFa
     that re-parses to an isomorphic graph."""
-    from rdf_rdfa_spark.rdfa.bgp import isomorphic
+    from graph_match import isomorphic
     from rdf_rdfa_spark.writer import serialize_rdfa
 
     html = serialize_rdfa(graph)
@@ -257,7 +257,7 @@ def test_writer_list_roundtrip_fuzz(graph):
     """rdf:List shapes (shared heads, multi-list predicates, impure and
     externally referenced cells) always round-trip isomorphically —
     the @inlist folding safety property."""
-    from rdf_rdfa_spark.rdfa.bgp import isomorphic
+    from graph_match import isomorphic
     from rdf_rdfa_spark.writer import serialize_rdfa
 
     html = serialize_rdfa(graph)

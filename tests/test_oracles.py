@@ -25,8 +25,7 @@ import pytest
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rdf_rdfa_spark import corpus
-from rdf_rdfa_spark.pipeline.bgpq import (
-    bgp_aggregate, bgp_select, one_or_more, var)
+from rdf_rdfa_spark.pipeline.bgpq import bgp_select, one_or_more, var
 from rdf_rdfa_spark.pipeline.expand import entail
 from rdf_rdfa_spark.pipeline.export import export_rdfa_pages
 from rdf_rdfa_spark.pipeline.extract import extract_triples
@@ -153,8 +152,7 @@ def q_kg_bgp_minus(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(var("d"), RDF_TYPE, "http://schema.org/Article"),
          (var("d"), "http://schema.org/genre", var("g"))],
         minus=[[(var("d"), "http://schema.org/sameAs", var("m"))]],
-        order_by=["d", "g"], limit=100,
-    )
+    ).orderBy("d", "g").limit(100)
 
 
 def q_kg_bgp_path(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -179,12 +177,12 @@ def q_kg_bgp_path_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_kg_bgp_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Articles per genre (GROUP BY + COUNT over the distinct solution
-    set)."""
-    return bgp_aggregate(
+    set; the groupBy partial-aggregates map-side)."""
+    return bgp_select(
         _kg_store(spark, sf_dir),
         [(var("d"), RDF_TYPE, "http://schema.org/Article"),
          (var("d"), "http://schema.org/genre", var("g"))],
-        group_by=["g"], aggs={"n_docs": F.count("*")})
+    ).groupBy("g").agg(F.count("*").alias("n_docs"))
 
 
 def q_kg_sparql(spark: SparkSession, sf_dir: str) -> DataFrame:

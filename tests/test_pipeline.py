@@ -655,20 +655,19 @@ def test_bgp_filter_and_optional(spark):
 
 
 def test_bgp_union(spark):
-    from rdf_rdfa_spark.pipeline.bgpq import bgp_select, bgp_union, var
+    from rdf_rdfa_spark.pipeline.sparql import sparql
 
     rows = [("a", "type", "Art"), ("b", "type", "Book"),
             ("c", "type", "Art"), ("a", "type", "Book")]
     t = spark.createDataFrame(rows, "subj string, pred string, obj string")
-    got = {r["d"] for r in bgp_union(t, [
-        [(var("d"), "type", "Art")],
-        [(var("d"), "type", "Book")],
-    ]).collect()}
-    assert got == {"a", "b", "c"}
+    df = sparql(t, """SELECT ?d WHERE {
+        { ?d <type> <Art> } UNION { ?d <type> <Book> } }""")
+    got = [r["d"] for r in df.collect()]
+    assert sorted(got) == ["a", "b", "c"]  # DISTINCT across the arms
 
 
 def test_bgp_negation_and_modifiers(spark):
-    from rdf_rdfa_spark.pipeline.bgpq import bgp_ask, bgp_select, var
+    from rdf_rdfa_spark.pipeline.bgpq import bgp_select, var
 
     triples = spark.createDataFrame(
         [("a", "type", "Doc"), ("b", "type", "Doc"), ("c", "type", "Doc"),
@@ -693,15 +692,18 @@ def test_bgp_negation_and_modifiers(spark):
     assert bgp_select(
         triples, base,
         not_exists=[[(var("d"), "mirror", var("m"))]]).count() == 2
-    # ORDER BY + LIMIT compile to TakeOrderedAndProject (top-k merge,
-    # no global sort of the solution set)
-    top = bgp_select(triples, base, order_by=["d"], limit=2)
+    # ORDER BY + LIMIT over the solutions compile to
+    # TakeOrderedAndProject (top-k merge, no global sort of the
+    # solution set)
+    top = bgp_select(triples, base).orderBy("d").limit(2)
     assert [r["d"] for r in top.collect()] == ["a", "b"]
     plan = top._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan
-    # ASK
-    assert bgp_ask(triples, [(var("d"), "mirror", var("m"))])
-    assert not bgp_ask(triples, [(var("d"), "nope", var("m"))])
+    # ASK: does any solution exist?
+    assert bgp_select(
+        triples, [(var("d"), "mirror", var("m"))]).limit(1).take(1)
+    assert not bgp_select(
+        triples, [(var("d"), "nope", var("m"))]).limit(1).take(1)
 
 
 def test_bgp_optional_rejects_optional_only_shared_vars(spark):
@@ -1003,7 +1005,7 @@ def test_bgp_property_paths(spark):
 
 
 def test_bgp_aggregate(spark):
-    from rdf_rdfa_spark.pipeline.bgpq import bgp_aggregate, var
+    from rdf_rdfa_spark.pipeline.bgpq import bgp_select, var
 
     triples = spark.createDataFrame(
         [("a", "type", "Doc"), ("b", "type", "Doc"), ("c", "type", "Doc"),
@@ -1011,10 +1013,10 @@ def test_bgp_aggregate(spark):
          ("c", "genre", "blog"),
          ("a", "genre", "news")],  # duplicate triple: set semantics
         "subj string, pred string, obj string")
-    got = {r["g"]: r["n"] for r in bgp_aggregate(
+    got = {r["g"]: r["n"] for r in bgp_select(
         triples,
         [(var("d"), "type", "Doc"), (var("d"), "genre", var("g"))],
-        group_by=["g"], aggs={"n": F.count("*")}).collect()}
+    ).groupBy("g").agg(F.count("*").alias("n")).collect()}
     assert got == {"news": 2, "blog": 1}
 
 
@@ -1063,27 +1065,24 @@ def test_processor_date_opt_in():
 
 
 def test_bgp_construct(spark):
-    from rdf_rdfa_spark.pipeline.bgpq import bgp_construct, var
+    from rdf_rdfa_spark.pipeline.sparql import sparql
 
     triples = spark.createDataFrame(
         [("a", "type", "Doc"), ("a", "mirror", "m1"),
          ("b", "type", "Doc")],
         "subj string, pred string, obj string")
-    got = {tuple(r) for r in bgp_construct(
-        triples,
-        [(var("d"), "type", "Doc")],
-        [(var("d"), "kind", "document"),
-         (var("d"), "seen", var("d"))],
-        optional=[[(var("d"), "mirror", var("m"))]],
-    ).collect()}
+    df = sparql(triples, """
+        CONSTRUCT { ?d <kind> "document" . ?d <seen> ?d }
+        WHERE { ?d <type> <Doc> OPTIONAL { ?d <mirror> ?m } }""")
+    assert df.columns == ["subj", "pred", "obj"]
+    got = {tuple(r) for r in df.collect()}
     assert ("a", "kind", "document") in got
     assert ("b", "seen", "b") in got
     assert len(got) == 4
     # unbound OPTIONAL var in the template → that row dropped, per SPARQL
-    got2 = {tuple(r) for r in bgp_construct(
-        triples, [(var("d"), "type", "Doc")],
-        [(var("d"), "sameAs", var("m"))],
-        optional=[[(var("d"), "mirror", var("m"))]]).collect()}
+    got2 = {tuple(r) for r in sparql(triples, """
+        CONSTRUCT { ?d <sameAs> ?m }
+        WHERE { ?d <type> <Doc> OPTIONAL { ?d <mirror> ?m } }""").collect()}
     assert got2 == {("a", "sameAs", "m1")}
 
 

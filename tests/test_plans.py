@@ -33,6 +33,12 @@ _FULL_DOC_OK = {"rdfa_extract", "writer_roundtrip", "kg_bgp", "kg_bgp_minus",
 
 _DOC_FULL = {"doc_id", "text", "lang", "source", "n_chars"}
 
+# plan nodes a builder's docstring promises: ORDER BY + LIMIT as a
+# top-k merge (never a global sort), GROUP BY with map-side partials
+_PROMISED_NODE = {"kg_bgp_minus": "TakeOrderedAndProject",
+                  "kg_sparql": "TakeOrderedAndProject",
+                  "kg_bgp_agg": "partial_count"}
+
 
 def _scans(plan: str):
     for ln in plan.splitlines():
@@ -51,11 +57,13 @@ def _plan(spark, sf_dir, name):
 def test_plan_shape(spark, sf_dir, name):
     """Per-query physical-plan contract: no unbroadcast cartesian, a
     nested-loop join only where the documented broadcast-small cross
-    join is the intended plan, and column pruning reaching every
+    join is the intended plan, the top-k / partial-aggregate nodes a
+    builder promises, and column pruning reaching every
     documents scan (full-width reads only for the page synthesizer
     that needs all five columns)."""
     plan = _plan(spark, sf_dir, name)
     assert "CartesianProduct" not in plan, name
+    assert _PROMISED_NODE.get(name, "") in plan, plan
     if "BroadcastNestedLoopJoin" in plan:
         assert name in _BNLJ_OK, \
             "%s: unexpected BroadcastNestedLoopJoin:\n%s" % (name, plan)

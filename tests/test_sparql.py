@@ -817,3 +817,58 @@ def test_group_concat_expression_with_separator(kg):
         SELECT (GROUP_CONCAT(UCASE(?l); SEPARATOR="+") AS ?ls)
         WHERE { ?d s:type "Doc" ; s:label ?l }""").collect()
     assert rows[0]["ls"] == "APPLE+FIG+PEAR"
+
+
+def test_construct_tagged_literal_template(spark):
+    """A tagged literal in a CONSTRUCT template instantiates its lexical
+    form, with the tag in the store's lang/datatype columns (the same
+    template path as INSERT); the other store columns get the insert
+    defaults (graph 'output', url NULL)."""
+    kg = spark.createDataFrame(
+        [("u1", "a", S + "type", "Doc", "literal", None, None, "output"),
+         ("u1", "b", S + "type", "Doc", "literal", None, None, "output")],
+        "url string, subj string, pred string, obj string, "
+        "obj_kind string, lang string, datatype string, graph string")
+    df = sparql(kg, P + """
+        CONSTRUCT { ?s s:q "hi"@en } WHERE { ?s s:type "Doc" }""")
+    assert df.columns == kg.columns
+    assert {tuple(r) for r in df.collect()} == {
+        (None, d, S + "q", "hi", "literal", "en", None, "output")
+        for d in ("a", "b")}
+    rows = sparql(kg, P + """
+        CONSTRUCT { ?s s:q "x"^^<http://dt/> ; s:r <http://o/> }
+        WHERE { ?s s:type "Doc" }""").collect()
+    got = {(r["subj"], r["pred"], r["obj"], r["obj_kind"], r["lang"],
+            r["datatype"]) for r in rows}
+    assert got == {(d, S + p, o, kind, None, dt)
+                   for d in ("a", "b")
+                   for p, o, kind, dt in (
+                       ("q", "x", "literal", "http://dt/"),
+                       ("r", "http://o/", "iri", None))}
+
+
+def test_construct_template_rejects_paths(kg):
+    # a template is a TriplesTemplate: no property paths
+    with pytest.raises(SparqlSyntaxError):
+        sparql(kg, P + """
+            CONSTRUCT { ?s s:q/s:r ?o } WHERE { ?s s:next ?o }""")
+
+
+def test_construct_template_rejects_blank_node_lists(kg):
+    # [ p o ] in a template would need fresh blank nodes per solution;
+    # the template path does not mint them, so it refuses the form
+    with pytest.raises(SparqlSyntaxError):
+        sparql(kg, P + """
+            CONSTRUCT { ?s s:q [ s:r ?o ] } WHERE { ?s s:next ?o }""")
+
+
+def test_union_body_in_every_form(kg):
+    # a UNION group body is one WHERE group, so every form takes it
+    u = "{ ?d s:mirror ?v } UNION { ?d s:next ?v }"
+    assert sparql(kg, P + "ASK { %s }" % u) is True
+    rows = sparql(kg, P + "SELECT (COUNT(*) AS ?n) WHERE { %s }" % u)
+    assert rows.collect()[0]["n"] == 3  # (a m1) (a b) (b c)
+    got = {tuple(r) for r in sparql(kg, P + """
+        CONSTRUCT { ?d s:r ?v } WHERE { %s }""" % u).collect()}
+    assert got == {("a", S + "r", "m1"), ("a", S + "r", "b"),
+                   ("b", S + "r", "c")}

@@ -16,7 +16,7 @@ import os
 
 import pytest
 
-from rdf_rdfa_spark.rdfa.bgp import isomorphic
+from graph_match import isomorphic
 from rdf_rdfa_spark.rdfa.ntriples import parse_turtle
 from rdf_rdfa_spark.rdfa.walk import parse_rdfa
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import pytest
 
-from rdf_rdfa_spark.rdfa.bgp import ask, isomorphic, v
+from graph_match import ask, isomorphic, v
 from rdf_rdfa_spark.rdfa.ntriples import parse_turtle
 from rdf_rdfa_spark.rdfa.terms import (
     DC_DESCRIPTION,

@@ -19,7 +19,7 @@ import pytest
 
 from spec_harvest import harvest_hash_table
 
-from rdf_rdfa_spark.rdfa.bgp import ask
+from graph_match import ask
 from rdf_rdfa_spark.rdfa.contexts import initial_context
 from rdf_rdfa_spark.rdfa.ntriples import parse_turtle
 from rdf_rdfa_spark.rdfa.terms import RDF_TYPE

@@ -14,7 +14,7 @@ from rdf_rdfa_spark.rdfa.ntriples import parse_turtle
 from rdf_rdfa_spark.rdfa.terms import RDF_NS, XSD_NS, bnode, iri, literal
 from rdf_rdfa_spark.writer import serialize_rdfa
 from rdf_rdfa_spark.rdfa.walk import parse_rdfa
-from rdf_rdfa_spark.rdfa.bgp import isomorphic
+from graph_match import isomorphic
 
 from xpath_mini import assert_xpath
 
