@@ -449,7 +449,7 @@ def _group_df(triples: DataFrame, group, buckets=None) -> DataFrame:
 def bgp_select(triples: DataFrame, patterns, select=None,
                filters=None, optional=None, minus=None,
                not_exists=None, exists=None, values=None, bind=None,
-               subselects=None, buckets=None) -> DataFrame:
+               subselects=None, buckets=None, meta=False) -> DataFrame:
     """patterns: [(s, p, o)] where each position is a concrete string
     or var('name'). → one column per variable (or ``select``'s subset),
     one row per solution (DISTINCT — set semantics like SPARQL
@@ -485,7 +485,9 @@ def bgp_select(triples: DataFrame, patterns, select=None,
     ``subselects``: SPARQL subqueries — already-compiled solution
     DataFrames ({ SELECT ... } groups) inner-joined on their shared
     variables (evaluated bottom-up per the spec; a subselect sharing
-    no variable cross-joins, like a disjoint pattern group)."""
+    no variable cross-joins, like a disjoint pattern group).
+    ``meta``: keep object variables' ``__kind/__lang/__dt`` columns in
+    the solutions (a triples template instantiates whole terms)."""
     if not patterns and not subselects:
         raise ValueError("empty BGP")
     # VALUES columns without UNDEF cells are bound SETS: they seed the
@@ -586,10 +588,10 @@ def bgp_select(triples: DataFrame, patterns, select=None,
                 out = out.join(sub.limit(1), F.lit(True), how)
     if select:
         out = out.select(*select)
-    else:
+    elif not meta:
         # metadata rides along for FILTER/BIND only — never part of
         # the solution (set semantics are over the lexical bindings)
-        meta = [c for c in out.columns if _is_meta(c)]
-        if meta:
-            out = out.drop(*meta)
+        dropped = [c for c in out.columns if _is_meta(c)]
+        if dropped:
+            out = out.drop(*dropped)
     return out.distinct()

@@ -19,9 +19,9 @@ previous snapshot current and whole) and `read_triples` the only read
 (exactly the manifest's files, so a crashed write's files stay
 invisible).
 
-Resume: `_ingest` commits each batch chunk or group of stream files as
-one snapshot naming it in ``inputs``, so data and "consumed" mark land
-in one HEAD swap, and a re-run ingests what HEAD's ``inputs`` lack.
+Resume: `_ingest` commits a batch run (its chunk keys) or a group of
+stream files as one snapshot naming them in ``inputs``, so data and
+"consumed" mark land in one HEAD swap, and a re-run ingests the rest.
 """
 
 from __future__ import annotations
@@ -202,22 +202,23 @@ def read_triples(spark, root: str, snapshot: int | None = None) -> DataFrame:
     return hit[2]
 
 
-def _ingest(pages: DataFrame, root: str, buckets: int, chunk, inputs,
+def _ingest(pages: DataFrame, root: str, buckets: int, label: str, inputs,
             **extract_kw) -> int:
-    """Extract ``pages`` and commit their triples as one snapshot that
-    records ``inputs`` as consumed, in one Spark action."""
+    """Extract ``pages`` and commit their triples, in one Spark action,
+    as one snapshot (chunk ``<label>-<n>``) that consumes ``inputs``."""
     seen = Observation()
     pages = pages.observe(seen, F.count(F.lit(1)).alias("pages"))
     return write_triples(extract_triples(pages, **extract_kw), root,
-                         buckets=buckets, chunk=chunk, inputs=inputs,
-                         observed=[seen])
+                         buckets=buckets, inputs=inputs, observed=[seen],
+                         chunk="%s-%d" % (label, current_snapshot(root) + 1))
 
 
 def materialize_resumable(pages: DataFrame, root: str, chunks: int = 16,
                           buckets: int = 64, **extract_kw) -> dict:
-    """Extract + write in url-hash chunks, one snapshot per chunk,
-    skipping chunks whose key ``chunk-<i>/<chunks>`` HEAD's ``inputs``
-    already list. Returns a summary dict."""
+    """Extract + write, as ONE `_ingest` snapshot that lists their keys,
+    the pages of the url-hash chunks ``chunk-<i>/<chunks>`` that HEAD's
+    ``inputs`` lack; ``chunks`` only names the resume keys.  Returns a
+    summary dict."""
     consumed = set(_manifest(root)["inputs"])
     # resuming under another split would ingest the pages of the chunks
     # already done a second time — duplicate rows.  Refuse up front.
@@ -230,18 +231,19 @@ def materialize_resumable(pages: DataFrame, root: str, chunks: int = 16,
             "chunk count" % (root, min(other), chunks))
     keys = ["chunk-%d/%d" % (i, chunks) for i in range(chunks)]
     ran = [i for i, key in enumerate(keys) if key not in consumed]
-    chunked = pages.withColumn("_chunk", F.pmod(F.xxhash64("url"),
-                                                F.lit(chunks)))
-    for i in ran:
-        _ingest(chunked.filter(F.col("_chunk") == i).drop("_chunk"), root,
-                buckets, i, [keys[i]], **extract_kw)
+    if ran:
+        if len(ran) < chunks:  # left half done by commits per chunk
+            pages = pages.filter(F.pmod(F.xxhash64("url"),
+                                        F.lit(chunks)).isin(ran))
+        _ingest(pages, root, buckets, "batch", [keys[i] for i in ran],
+                **extract_kw)
     return {"chunks": chunks, "ran": ran,
             "skipped": [i for i in range(chunks) if i not in ran]}
 
 
 def lineage_summary(root: str) -> dict:
-    """Per-chunk ingest counts from the manifests: the latest commit of
-    each chunk (a re-run chunk counts once), and their sums."""
+    """Per-commit ingest counts from the manifests: the latest commit of
+    each chunk label (a re-run commit counts once), and their sums."""
     latest = {}
     for n in range(1, current_snapshot(root) + 1):
         m = _manifest(root, n)
@@ -297,11 +299,10 @@ def stream_materialize(spark, input_dir: str, root: str,
                        max_files_per_trigger: int = 16, **extract_kw):
     """Incremental crawl ingestion: the page files Spark lists under
     ``input_dir`` (a directory or a glob) that HEAD's ``inputs`` do not
-    list go through the same `_ingest` as batch chunks, up to
-    ``max_files_per_trigger`` files per snapshot (chunk
-    ``stream-<snapshot>``).  No checkpoint is kept: a re-run ingests
-    what HEAD has not consumed, so a crash anywhere loses or repeats
-    no file.
+    list go through the same `_ingest` as batch runs, up to
+    ``max_files_per_trigger`` files per snapshot.  No checkpoint is
+    kept: a re-run ingests what HEAD has not consumed, so a crash
+    anywhere loses or repeats no file.
 
     ``checkpoint_dir`` and ``available_now`` remain only for callers of
     the former Structured Streaming query: the first is ignored,
@@ -316,7 +317,5 @@ def stream_materialize(spark, input_dir: str, root: str,
                  - set(_manifest(root)["inputs"]))
     for k in range(0, len(new), max_files_per_trigger):
         group = new[k:k + max_files_per_trigger]
-        _ingest(read(*group), root, buckets,
-                "stream-%d" % (current_snapshot(root) + 1), group,
-                **extract_kw)
+        _ingest(read(*group), root, buckets, "stream", group, **extract_kw)
     return _Finished()

@@ -61,6 +61,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..rdfa.terms import RDF_TYPE
 from .bgpq import (
+    _META_SRC,
     _META_SUFFIXES,
     Path,
     alt,
@@ -1004,12 +1005,12 @@ def _apply_modifiers(out: DataFrame, q) -> DataFrame:
     return out
 
 
-def _where(triples: DataFrame, g, buckets=None,
-           select=None) -> DataFrame:
+def _where(triples: DataFrame, g, buckets=None, select=None,
+           meta=False) -> DataFrame:
     """A parsed WHERE group → its DISTINCT solutions (``select``
-    projects them): a UNION of plain arms, or one bgp_select with the
-    group's subqueries compiled bottom-up and its FILTER/BIND scope
-    validated."""
+    projects them, ``meta`` keeps the object terms' metadata): a UNION
+    of plain arms, or one bgp_select with the group's subqueries
+    compiled bottom-up and its FILTER/BIND scope validated."""
     if g["union"] is not None:
         # raise rather than silently drop (same convention as
         # _sub_group): group-level clauses alongside a UNION are not
@@ -1025,11 +1026,11 @@ def _where(triples: DataFrame, g, buckets=None,
             raise SparqlSyntaxError(
                 "UNION is supported as the entire group body (group "
                 "also carries: %s)" % ", ".join(dropped))
-        arms = [bgp_select(triples, arm, select=select, buckets=buckets)
-                for arm in g["union"]]
+        arms = [bgp_select(triples, arm, select=select, buckets=buckets,
+                           meta=meta) for arm in g["union"]]
         out = arms[0]
         for nxt in arms[1:]:
-            out = out.unionByName(nxt)
+            out = out.unionByName(nxt, allowMissingColumns=meta)
         return out.distinct()
     have_meta = has_term_meta(triples)
     subs = [_compile_select(triples, sq, buckets=buckets)
@@ -1054,7 +1055,7 @@ def _where(triples: DataFrame, g, buckets=None,
         values=g["values"],
         bind={k: F.expr(v) for k, v in g["bind"].items()},
         subselects=subs or None,
-        buckets=buckets,
+        buckets=buckets, meta=meta,
     )
 
 
@@ -1178,13 +1179,15 @@ def sparql(triples: DataFrame, query: str, buckets: int | None = None):
     g = q["group"]
     if q["form"] == "select":
         return _compile_select(triples, q, buckets=buckets)
-    sol = None if g is None else _where(triples, g, buckets)
+    sol = None if g is None else _where(triples, g, buckets,
+                                        meta=q["form"] == "construct")
     if q["form"] == "describe":
         return _describe(triples, q["targets"], sol)
     if q["form"] == "ask":
         # LIMIT 1 keeps the scan short-circuiting
         return bool(sol.limit(1).take(1))
-    return _apply_modifiers(_kinded_df(triples, q["template"], sol), q)
+    # the modifiers pick solutions, not triples (SPARQL 1.1 §16.2)
+    return _kinded_df(triples, q["template"], _apply_modifiers(sol, q))
 
 
 # --- triples templates: CONSTRUCT and INSERT/DELETE ---------------------
@@ -1264,45 +1267,44 @@ def _template_where(p: _Parser):
 
 def _kinded_df(triples: DataFrame, kinded, sol: DataFrame | None) -> DataFrame:
     """Instantiate a kinded template into the STORE's schema — the one
-    template instantiation, for CONSTRUCT and INSERT/DELETE: one select
-    per template triple over the solutions (or a literal row for
-    ground data), unioned.  Extra store columns get defaults:
-    obj_kind from the template term, tag metadata from tagged
-    literals, graph='output', url NULL."""
-    cols = triples.columns
-    outs = []
+    template instantiation, for CONSTRUCT and INSERT/DELETE: one struct
+    per template triple, exploded from ONE pass over the solutions (so
+    every template triple sees the same solutions, even under a LIMIT),
+    or a literal row for ground data.  Extra store columns get defaults:
+    obj_kind/lang/datatype from the template term, or from the bound
+    term's metadata (a variable bound only as a subject is an IRI or
+    blank node), graph='output', url NULL."""
+    base = sol if sol is not None else triples.sparkSession.range(1)
+    bound = set(base.columns)
+
+    def term(t, kind):
+        return F.col(t[1]) if kind == "var" else F.lit(t)
+
+    rows = []
     for (s, sk), (pr, pk), (o, ok) in kinded:
+        if any(k == "var" and t[1] not in bound
+               for t, k in ((s, sk), (pr, pk), (o, ok))):
+            continue  # never bound by the WHERE group: no triple
+        kind = F.lit("literal" if ok == "literal" else "iri")
         lang = dt = None
         if isinstance(o, tuple) and o and o[0] == "lit":
-            _t, o_val, lang, dt = o
-            o = o_val
-        sel = []
-        for col_name in cols:
-            if col_name == "subj":
-                c = F.col(s[1]) if sk == "var" else F.lit(s)
-            elif col_name == "pred":
-                c = F.col(pr[1]) if pk == "var" else F.lit(pr)
-            elif col_name == "obj":
-                c = F.col(o[1]) if ok == "var" else F.lit(o)
-            elif col_name == "obj_kind":
-                c = (F.lit(None) if ok == "var"
-                     else F.lit("literal" if ok == "literal" else "iri"))
-            elif col_name == "lang":
-                c = F.lit(lang)
-            elif col_name == "datatype":
-                c = F.lit(dt)
-            elif col_name == "graph":
-                c = F.lit("output")
-            else:  # url and any other provenance column
-                c = F.lit(None)
-            sel.append(c.cast(triples.schema[col_name].dataType)
-                       .alias(col_name))
-        base = sol if sol is not None else (
-            triples.sparkSession.range(1))
-        outs.append(base.select(*sel))
-    out = outs[0]
-    for nxt in outs[1:]:
-        out = out.unionByName(nxt)
+            _t, o, lang, dt = o
+        elif ok == "var":
+            kind = F.when(F.col(o[1]).startswith("_:"),
+                          "bnode").otherwise("iri")
+        vals = {"subj": term(s, sk), "pred": term(pr, pk),
+                "obj": term(o, ok), "obj_kind": kind, "lang": F.lit(lang),
+                "datatype": F.lit(dt), "graph": F.lit("output")}
+        if ok == "var":  # an object-bound term carries its metadata
+            vals.update({src: F.coalesce(F.col(o[1] + sfx), vals[src])
+                         for src, sfx in _META_SRC if o[1] + sfx in bound})
+        # url and any other provenance column: NULL
+        rows.append(F.struct(*[
+            vals.get(c, F.lit(None)).cast(f.dataType).alias(c)
+            for c, f in zip(triples.columns, triples.schema.fields)]))
+    if not rows:
+        return triples.sparkSession.createDataFrame([], triples.schema)
+    out = base.select(F.explode(F.array(*rows)).alias("t")).select("t.*")
     # unbound (NULL) template vars drop the instantiation, per spec
     return out.filter(F.col("subj").isNotNull() & F.col("pred").isNotNull()
                       & F.col("obj").isNotNull()).distinct()
@@ -1355,7 +1357,7 @@ def sparql_update(triples: DataFrame, update: str,
             "trailing tokens after update at %r" % (p.peek()[1],))
     sol = None
     if group is not None:
-        sol = _where(triples, group, buckets)
+        sol = _where(triples, group, buckets, meta=True)
         if ins_kinded and del_kinded:
             # both templates instantiate from the SAME solution set —
             # materialize it once (lazy barrier, lineage truncated)

@@ -6,9 +6,10 @@
         --chunks 64 [--expand] [--link]
 
 Runs extraction → (optional entailment expansion) → (optional entity
-linking) → resumable materialization with per-chunk lineage.
-Re-running with the same --output resumes: chunks the store's HEAD
-manifest lists in its ``inputs`` are skipped.
+linking) → resumable materialization: one snapshot commit per run,
+whose manifest lists the url-hash chunk keys it ingested.  Re-running
+with the same --output resumes: chunks the store's HEAD manifest lists
+in its ``inputs`` are skipped.
 
 With --sf-dir instead of --input, synthesizes the deterministic
 CC-style corpus from documents.parquet (testing/bench path).
@@ -35,7 +36,10 @@ def main():
     src.add_argument("--input-jsonl", help="jsonl crawl dump glob")
     src.add_argument("--sf-dir", help="testdata sf dir (synthesize pages)")
     ap.add_argument("--output", required=True)
-    ap.add_argument("--chunks", type=int, default=16)
+    ap.add_argument("--chunks", type=int, default=16,
+                    help="url-hash chunks that name the resume keys: a run "
+                         "ingests every chunk HEAD lacks in one commit; "
+                         "resume a store with its original count")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--expand", action="store_true",
                     help="apply vocabulary-expansion entailment to the store")
@@ -147,7 +151,7 @@ def main():
     summary = materialize.lineage_summary(args.output)
     print(json.dumps({"manifest": manifest, "lineage": {
         "pages": summary["pages"], "triples": summary["triples"],
-        "chunks": len(summary["chunks"])}}))
+        "commits": len(summary["chunks"])}}))
     spark.stop()
 
 

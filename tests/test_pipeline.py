@@ -241,28 +241,23 @@ def test_write_triples_counts_empty_input(spark, tmp_path):
 def test_materialize_resumable(spark, sf_dir, tmp_path, monkeypatch):
     pages = corpus.pages_df(spark, sf_dir).limit(60).cache()
     root = str(tmp_path / "store")
-    real_write, real_replace = materialize.write_triples, materialize._replace
+    real_replace = materialize._replace
 
     def lose_head_swap(path, text):
         if os.path.basename(path) != "HEAD":
             real_replace(path, text)
 
-    def write(*a, **kw):
-        if kw.get("chunk") != 2:
-            return real_write(*a, **kw)
-        # chunk 2's commit writes its files and manifest, but the HEAD
-        # swap is lost, as if the process had died there
-        with monkeypatch.context() as m:
-            m.setattr(materialize, "_replace", lose_head_swap)
-            return real_write(*a, **kw)
-
+    # the run's one commit writes its files and manifest, but the HEAD
+    # swap is lost, as if the process had died there
     with monkeypatch.context() as m:
-        m.setattr(materialize, "write_triples", write)
+        m.setattr(materialize, "_replace", lose_head_swap)
         m1 = materialize.materialize_resumable(pages, root, chunks=4)
-    assert len(m1["ran"]) == 4 and not m1["skipped"]
-    # partial resume: exactly the chunk HEAD's inputs lack re-runs
+    assert m1["ran"] == [0, 1, 2, 3] and not m1["skipped"]
+    assert materialize.current_snapshot(root) == 0
+    # resume: every chunk HEAD's inputs lack runs again, in one commit
     m2 = materialize.materialize_resumable(pages, root, chunks=4)
-    assert m2["ran"] == [2]
+    assert m2["ran"] == [0, 1, 2, 3]
+    assert materialize.current_snapshot(root) == 1
     total = materialize.read_triples(spark, root).count()
     # idempotent resume: nothing re-runs, store unchanged
     m3 = materialize.materialize_resumable(pages, root, chunks=4)
@@ -279,9 +274,9 @@ def test_materialize_resumable(spark, sf_dir, tmp_path, monkeypatch):
 
 def test_materialize_resumable_crash_after_commit(
         spark, sf_dir, tmp_path, monkeypatch):
-    """A run that dies right after chunk 0's commit must not ingest
-    chunk 0 again when re-run: the store ends with a clean run's rows,
-    each once."""
+    """A run that dies right after its commit must not ingest anything
+    again when re-run: the store ends with a clean run's rows, each
+    once."""
     pages = corpus.pages_df(spark, sf_dir).limit(40).cache()
     clean, root = str(tmp_path / "clean"), str(tmp_path / "store")
     materialize.materialize_resumable(pages, clean, chunks=2)
@@ -291,25 +286,49 @@ def test_materialize_resumable_crash_after_commit(
     monkeypatch.undo()
     m = materialize.materialize_resumable(pages, root, chunks=2)
     assert _rows(spark, root) == _rows(spark, clean)
-    assert m["ran"] == [1] and m["skipped"] == [0]
+    assert m["ran"] == [] and m["skipped"] == [0, 1]
 
 
 def test_materialize_resumable_refuses_changed_chunk_count(
-        spark, sf_dir, tmp_path, monkeypatch):
-    """A chunks=4 run that stopped after chunks 0 and 1 cannot resume
-    as chunks=2: the new split's chunks hold pages already committed,
-    so it must refuse instead of ingesting them twice."""
+        spark, sf_dir, tmp_path):
+    """A store that commits per chunk left after chunks 0 and 1 of 4
+    cannot resume as chunks=2: the new split's chunks hold pages
+    already committed, so it must refuse instead of ingesting them
+    twice.  As chunks=4 it ingests chunks 2 and 3, each page once."""
     pages = corpus.pages_df(spark, sf_dir).limit(40).cache()
-    root = str(tmp_path / "store")
-    _crash_after_commit(monkeypatch, 2)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        materialize.materialize_resumable(pages, root, chunks=4)
-    monkeypatch.undo()
+    clean, root = str(tmp_path / "clean"), str(tmp_path / "store")
+    materialize.materialize_resumable(pages, clean, chunks=4)
+    done = pages.filter(F.pmod(F.xxhash64("url"), F.lit(4)).isin(0, 1))
+    materialize.write_triples(extract_triples(done), root,
+                              inputs=["chunk-0/4", "chunk-1/4"])
     with pytest.raises(ValueError, match="chunks=4"):
         materialize.materialize_resumable(pages, root, chunks=2)
     # the original split resumes where it stopped
     assert materialize.materialize_resumable(
         pages, root, chunks=4)["ran"] == [2, 3]
+    assert _rows(spark, root) == _rows(spark, clean)
+
+
+def test_materialize_resumable_one_commit_needs_no_compaction(
+        spark, sf_dir, tmp_path):
+    """A fresh run is one snapshot holding one file per (graph, bucket)
+    directory, so compaction finds nothing to rewrite and starts no
+    Spark job."""
+    pages = corpus.pages_df(spark, sf_dir).limit(60)
+    root = str(tmp_path / "store")
+    materialize.materialize_resumable(pages, root, chunks=4)
+    assert materialize.current_snapshot(root) == 1
+    dirs = [os.path.dirname(f) for f in materialize._manifest(root)["files"]]
+    assert dirs and len(dirs) == len(set(dirs))
+    sc = spark.sparkContext
+    sc.setJobGroup("compact-probe", "compact_store after one commit")
+    try:
+        out = materialize.compact_store(spark, root)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    assert out == {"rewritten_partitions": [], "snapshot": 1}
+    assert sc.statusTracker().getJobIdsForGroup("compact-probe") == []
 
 
 def test_expansion_spec_rules(spark):
@@ -536,12 +555,15 @@ def test_register_vocabulary_end_to_end(spark):
 
 
 def test_snapshot_time_travel(spark, sf_dir, tmp_path):
-    """Each committed chunk is an Iceberg-style snapshot: reading at
-    snapshot k scans only the files manifests v1..vk added, and the
-    latest read equals the plain store read."""
+    """Each commit is an Iceberg-style snapshot: reading at snapshot k
+    scans only the files manifests v1..vk added, and the latest read
+    equals the plain store read."""
     pages = corpus.pages_df(spark, sf_dir).limit(40).cache()
     root = str(tmp_path / "store")
-    materialize.materialize_resumable(pages, root, chunks=3)
+    part = F.pmod(F.xxhash64("url"), F.lit(3))
+    for k in range(3):
+        materialize.write_triples(extract_triples(pages.filter(part == k)),
+                                  root, chunk=k)
     assert materialize.current_snapshot(root) == 3
     total = materialize.read_triples(spark, root).count()
     counts = [materialize.read_triples(spark, root, snapshot=k).count()
@@ -551,7 +573,7 @@ def test_snapshot_time_travel(spark, sf_dir, tmp_path):
     # snapshot reads keep the partition columns for pruning
     cols = materialize.read_triples(spark, root, snapshot=1).columns
     assert "graph" in cols and "bucket" in cols
-    # snapshot 2 must equal chunks 0+1's lineage triple counts
+    # snapshot 2 must equal commits 0+1's lineage triple counts
     lin = materialize.lineage_summary(root)
     by_chunk = {c["chunk"]: c["triples"] for c in lin["chunks"]}
     assert counts[1] == by_chunk[0] + by_chunk[1]
@@ -951,10 +973,13 @@ def test_precompaction_snapshot_read_is_partial(spark, sf_dir, tmp_path):
     like Iceberg after expire_snapshots) instead of failing at scan."""
     root = str(tmp_path / "store")
     pages = corpus.pages_df(spark, sf_dir).limit(40)
-    materialize.materialize_resumable(pages, root, chunks=2)
+    half = F.pmod(F.xxhash64("url"), F.lit(2))
+    for k in range(2):
+        materialize.write_triples(extract_triples(pages.filter(half == k)),
+                                  root)
     pre = materialize.current_snapshot(root)
     full = materialize.read_triples(spark, root, snapshot=pre).count()
-    materialize.compact_store(spark, root)
+    assert materialize.compact_store(spark, root)["rewritten_partitions"]
     # the old snapshot still reads (possibly partial), never raises
     partial = materialize.read_triples(spark, root, snapshot=pre).count()
     assert 0 <= partial <= full

@@ -872,3 +872,55 @@ def test_union_body_in_every_form(kg):
         CONSTRUCT { ?d s:r ?v } WHERE { %s }""" % u).collect()}
     assert got == {("a", S + "r", "m1"), ("a", S + "r", "b"),
                    ("b", S + "r", "c")}
+
+
+def test_template_object_var_keeps_term_metadata(spark):
+    """A template object bound to a variable instantiates the bound
+    term whole: obj_kind/lang/datatype come from the solution, the same
+    for INSERT and CONSTRUCT.  A variable bound only as a subject is a
+    resource; a template variable the WHERE group never binds yields
+    no triple."""
+    from rdf_rdfa_spark.pipeline.sparql import sparql_update
+
+    xint = "http://www.w3.org/2001/XMLSchema#integer"
+    kg = spark.createDataFrame(
+        [("u1", "d1", S + "genre", "nouvelles", "literal", "fr", None, None),
+         ("u1", "d2", S + "genre", "7", "literal", None, xint, None),
+         ("u1", "d1", S + "link", "http://o/", "iri", None, None, None),
+         ("u1", "_:b1", S + "link", "_:b2", "bnode", None, None, None)],
+        "url string, subj string, pred string, obj string, "
+        "obj_kind string, lang string, datatype string, graph string")
+    out = sparql_update(kg, P + """
+        DELETE { ?d s:genre ?g } INSERT { ?d s:category ?g }
+        WHERE { ?d s:genre ?g }""")
+    got = {(r["subj"], r["obj"], r["obj_kind"], r["lang"], r["datatype"])
+           for r in out.filter("pred = '%scategory'" % S).collect()}
+    assert got == {("d1", "nouvelles", "literal", "fr", None),
+                   ("d2", "7", "literal", None, xint)}
+    assert not out.filter("pred = '%sgenre'" % S).count()
+    got = {(r["subj"], r["pred"], r["obj"], r["obj_kind"])
+           for r in sparql(kg, P + """
+               CONSTRUCT { ?d s:l2 ?o . ?o s:back ?d . ?d s:q ?nope }
+               WHERE { ?d s:link ?o }""").collect()}
+    assert got == {("d1", S + "l2", "http://o/", "iri"),
+                   ("_:b1", S + "l2", "_:b2", "bnode"),
+                   ("http://o/", S + "back", "d1", "iri"),
+                   ("_:b2", S + "back", "_:b1", "bnode")}
+    # a template of unbound variables only constructs nothing
+    assert sparql(kg, P + """
+        CONSTRUCT { ?x s:q ?y } WHERE { ?d s:link ?o }""").count() == 0
+    assert sparql_update(kg, P + """
+        INSERT { ?d s:q ?nope } WHERE { ?d s:link ?o }""").count() == 4
+
+
+def test_construct_modifiers_apply_to_solutions(kg):
+    """ORDER BY / OFFSET / LIMIT pick CONSTRUCT's solutions (SPARQL 1.1
+    §16.2), and every template triple of a picked solution is built."""
+    q = P + """
+        CONSTRUCT { ?d s:k "doc" . ?d s:l ?l }
+        WHERE { ?d s:type "Doc" ; s:label ?l } ORDER BY %s"""
+    got = {tuple(r) for r in sparql(kg, q % "?d LIMIT 1").collect()}
+    assert got == {("a", S + "k", "doc"), ("a", S + "l", "Apple")}
+    got = {tuple(r) for r in sparql(kg, q % "DESC(?d) OFFSET 1 LIMIT 1")
+           .collect()}
+    assert got == {("b", S + "k", "doc"), ("b", S + "l", "Pear")}
