@@ -1,9 +1,10 @@
 """Triple extraction: the vectorized Arrow/pandas UDF stage.
 
-One ``mapInPandas`` over the pages table — the ONLY JVM→Python
-boundary in the pipeline (SURVEY.md §3.1). Each Arrow batch of page
-rows explodes into N triple rows (a UDTF shape); there is no per-row
-Python API and no shuffle in this stage: Catalyst plans it as
+One ``mapInPandas`` over the pages table (SURVEY.md §3.1; WARC
+decoding and the export writer are the other two JVM→Python
+boundaries). Each Arrow batch of page rows explodes into N triple
+rows (a UDTF shape); there is no per-row Python API and no shuffle
+in this stage: Catalyst plans it as
 scan → project → MapInPandas, embarrassingly parallel across
 partitions, so it scales linearly with executors at 100 TB.
 
@@ -43,11 +44,10 @@ def _term_str(t, url: str, skolemize: bool) -> tuple:
 
 
 def rows_for_document(html, url: str, skolemize: bool = True,
-                      include_processor: bool = False, **parse_kw) -> list:
+                      include_processor: bool = False) -> list:
     out, proc, _root = parse_rdfa(
         html, url=url,
         rdfagraph=("output", "processor") if include_processor else ("output",),
-        **parse_kw,
     )
     rows = []
     for (s, p, o) in out:
@@ -62,8 +62,7 @@ def rows_for_document(html, url: str, skolemize: bool = True,
     return rows
 
 
-def extract_triples(pages_df, skolemize: bool = True,
-                    include_processor: bool = False, **parse_kw):
+def extract_triples(pages_df, include_processor: bool = False):
     """pages(url, html[, ...]) → triples DataFrame (TRIPLES_SCHEMA).
 
     Column pruning: only url+html are shipped through Arrow, whatever
@@ -75,10 +74,8 @@ def extract_triples(pages_df, skolemize: bool = True,
             rows: list = []
             for url, html in zip(pdf["url"].values, pdf["html"].values):
                 try:
-                    rows.extend(
-                        rows_for_document(html, url, skolemize,
-                                          include_processor, **parse_kw)
-                    )
+                    rows.extend(rows_for_document(
+                        html, url, include_processor=include_processor))
                 except Exception as e:  # never kill the task on one page
                     rows.append((url, "_:doc_error",
                                  "http://www.w3.org/ns/rdfa#context",

@@ -202,19 +202,19 @@ def read_triples(spark, root: str, snapshot: int | None = None) -> DataFrame:
     return hit[2]
 
 
-def _ingest(pages: DataFrame, root: str, buckets: int, label: str, inputs,
-            **extract_kw) -> int:
+def _ingest(pages: DataFrame, root: str, buckets: int, label: str,
+            inputs) -> int:
     """Extract ``pages`` and commit their triples, in one Spark action,
     as one snapshot (chunk ``<label>-<n>``) that consumes ``inputs``."""
     seen = Observation()
     pages = pages.observe(seen, F.count(F.lit(1)).alias("pages"))
-    return write_triples(extract_triples(pages, **extract_kw), root,
+    return write_triples(extract_triples(pages), root,
                          buckets=buckets, inputs=inputs, observed=[seen],
                          chunk="%s-%d" % (label, current_snapshot(root) + 1))
 
 
 def materialize_resumable(pages: DataFrame, root: str, chunks: int = 16,
-                          buckets: int = 64, **extract_kw) -> dict:
+                          buckets: int = 64) -> dict:
     """Extract + write, as ONE `_ingest` snapshot that lists their keys,
     the pages of the url-hash chunks ``chunk-<i>/<chunks>`` that HEAD's
     ``inputs`` lack; ``chunks`` only names the resume keys.  Returns a
@@ -235,22 +235,18 @@ def materialize_resumable(pages: DataFrame, root: str, chunks: int = 16,
         if len(ran) < chunks:  # left half done by commits per chunk
             pages = pages.filter(F.pmod(F.xxhash64("url"),
                                         F.lit(chunks)).isin(ran))
-        _ingest(pages, root, buckets, "batch", [keys[i] for i in ran],
-                **extract_kw)
+        _ingest(pages, root, buckets, "batch", [keys[i] for i in ran])
     return {"chunks": chunks, "ran": ran,
             "skipped": [i for i in range(chunks) if i not in ran]}
 
 
 def lineage_summary(root: str) -> dict:
-    """Per-commit ingest counts from the manifests: the latest commit of
-    each chunk label (a re-run commit counts once), and their sums."""
-    latest = {}
-    for n in range(1, current_snapshot(root) + 1):
-        m = _manifest(root, n)
-        if m["chunk"] is not None:
-            latest[m["chunk"]] = dict(m["stats"], chunk=m["chunk"],
-                                      snapshot=n)
-    chunks = list(latest.values())
+    """Per-commit ingest counts from the manifests, one entry per
+    commit with a chunk label, and their sums."""
+    manifests = [_manifest(root, n)
+                 for n in range(1, current_snapshot(root) + 1)]
+    chunks = [dict(m["stats"], chunk=m["chunk"], snapshot=m["snapshot"])
+              for m in manifests if m["chunk"] is not None]
     return {"chunks": chunks,
             "pages": sum(c.get("pages", 0) for c in chunks),
             "triples": sum(c.get("triples", 0) for c in chunks)}
@@ -296,7 +292,7 @@ class _Finished:  # stream_materialize's handle: the work is done
 def stream_materialize(spark, input_dir: str, root: str,
                        checkpoint_dir: str | None = None, buckets: int = 64,
                        available_now: bool = True,
-                       max_files_per_trigger: int = 16, **extract_kw):
+                       max_files_per_trigger: int = 16):
     """Incremental crawl ingestion: the page files Spark lists under
     ``input_dir`` (a directory or a glob) that HEAD's ``inputs`` do not
     list go through the same `_ingest` as batch runs, up to
@@ -317,5 +313,5 @@ def stream_materialize(spark, input_dir: str, root: str,
                  - set(_manifest(root)["inputs"]))
     for k in range(0, len(new), max_files_per_trigger):
         group = new[k:k + max_files_per_trigger]
-        _ingest(read(*group), root, buckets, "stream", group, **extract_kw)
+        _ingest(read(*group), root, buckets, "stream", group)
     return _Finished()

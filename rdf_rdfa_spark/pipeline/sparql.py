@@ -580,18 +580,23 @@ class _Parser:
                "REPLACE": "regexp_replace"}
 
     def parse_expr_sql(self, stop_at_as: bool = False,
-                       stop_at_semi: bool = False) -> str:
+                       stop_at_semi: bool = False, call: bool = False) -> str:
         """Translate a parenthesized-or-simple SPARQL expression to a
         Spark SQL string, token by token.  Balanced-paren scan; stops
         at the enclosing ')' (or the AS keyword inside BIND, or a
-        depth-0 ';' inside an aggregate argument list)."""
+        depth-0 ';' inside an aggregate argument list, or, with
+        ``call``, after one bracketed expression or built-in call)."""
         parts = []
         depth = 0
         outer = False
+        args = False  # a function name still waits for its '('
         if not stop_at_as and not stop_at_semi and self.at_op("("):
             self.next()
             outer = True
+        call = call and not outer  # a bracketed key ends at its ')'
         while True:
+            if call and depth == 0 and parts and not args:
+                break  # the call is complete
             kind, val = self.peek()
             if kind == "eof":
                 raise SparqlSyntaxError("unterminated expression")
@@ -603,6 +608,7 @@ class _Parser:
                 break
             if kind == "op" and val == "(":
                 depth += 1
+                args = False
                 parts.append("(")
                 self.next()
                 continue
@@ -700,6 +706,7 @@ class _Parser:
                     parts.append("`%s`" % ph)
                 elif up in self._FN_MAP:
                     parts.append(self._FN_MAP[up])
+                    args = True
                 elif up in ("TRUE", "FALSE", "AND", "OR", "NOT", "IN"):
                     parts.append(up)
                 else:
@@ -859,6 +866,11 @@ class _Parser:
                     order.append((expr, d == "DESC"))
                 elif self.peek()[0] == "var":
                     order.append(("`%s`" % self.next()[1], False))
+                elif self.at_op("(") or (self.peek()[0] == "word"
+                                         and self.peek(1) == ("op", "(")):
+                    # a bracketed expression or one built-in call,
+                    # ascending: (?x), LANG(?g)
+                    order.append((self.parse_expr_sql(call=True), False))
                 else:
                     break
         q["order"] = order

@@ -6,22 +6,19 @@ binaryFile's column pruning turns into a pure listing: no contents
 cross the JVM) and `mapInPandas` OPENS each path and parses records
 inside the executor, so a crawl segment of thousands of .warc.gz
 files fans out with zero driver involvement and no shuffle before the
-parse. Records are parsed from the streamed bytes (multi-member gzip
-or plain), response records paired with their HTTP payload, and
-non-HTML responses dropped as early as possible (the content-type
-filter runs before any body decoding).
+parse.  Response records are paired with their HTTP payload, and
+non-HTML responses are dropped before any body decoding.
 
-Per-task memory is bounded by RECORD size, not file size — end to
-end: bytes are read in 1 MiB slices from the open file, gzip members
-are decompressed incrementally (``zlib.decompressobj`` with a capped
-output window, one member at a time — Common Crawl gzips each record
-as its own member), records are cut from a rolling buffer that is
-compacted as records are emitted, and the Spark reader yields pages
-in bounded Arrow batches.  An arbitrary multi-GB archive parses in
-bounded memory (peak-RSS pinned by test).  A truncated or corrupt archive
-yields every complete record before the damage and drops the tail —
-one bad .warc.gz cannot abort a crawl-scale job (and a decode error
-never escapes the reader).
+One reader, `_pages`, serves files and in-memory bytes alike.  A file
+that starts with the gzip magic is read through ``gzip.GzipFile``,
+which walks concatenated members (Common Crawl gzips each record as
+its own member); anything else is read raw.  Decoded bytes arrive in
+``read1`` pieces of at most 1 MiB, records are cut from a rolling
+buffer that is compacted as records are emitted, and the Spark reader
+yields pages in bounded Arrow batches, so per-task memory is bounded
+by RECORD size, not file size (peak RSS pinned by test).  A truncated
+or corrupt archive yields every record decoded before the damage and
+drops the tail: one bad .warc.gz cannot abort a crawl-scale job.
 
 The WARC grammar implemented here is the public ISO 28500 core:
 ``WARC/1.x`` version line, CRLF header block, Content-Length payload,
@@ -31,6 +28,7 @@ CRLF CRLF record separator.
 from __future__ import annotations
 
 import gzip
+import io
 import zlib
 from typing import Iterator
 
@@ -52,58 +50,23 @@ def _split_headers(block: bytes) -> dict:
     return headers
 
 
-def _iter_gunzip_stream(chunks: Iterator[bytes],
-                        out_cap: int = 1 << 22) -> Iterator[bytes]:
-    """Streaming multi-member gzip decode over a COMPRESSED chunk
-    stream: yields bounded decompressed chunks, one member at a time,
-    never materializing the archive on either side.  ``out_cap``
-    bounds each output chunk even against high-ratio members (a gzip
-    bomb inflates in 4 MiB steps, not in one allocation).  A truncated
-    or corrupt member ends the stream — every complete member before
-    it has already been yielded."""
-    it = iter(chunks)
-    carry = b""  # bytes past a member end (start of the next member)
+def _stream(fh) -> Iterator[bytes]:
+    """Decoded bytes of a WARC file object, in pieces of at most 1 MiB.
+    ``read1`` hands back each member's output as it is decoded, so a
+    damaged member (or junk after the last one) ends the stream without
+    losing what came before it; ``BadGzipFile`` and CRC failures are
+    ``OSError``s."""
+    magic = fh.read(2)
+    fh.seek(0)
+    src = gzip.GzipFile(fileobj=fh) if magic == b"\x1f\x8b" else fh
     while True:
-        while len(carry) < 2:  # need the magic to decide
-            nxt = next(it, None)
-            if nxt is None:
-                return
-            carry += nxt
-        if carry[:2] != b"\x1f\x8b":
-            return
-        d = zlib.decompressobj(wbits=31)  # 31 = gzip wrapper
-        tail = carry
-        carry = b""
         try:
-            while not d.eof:
-                if tail:
-                    feed, tail = tail, b""
-                else:
-                    feed = next(it, None)
-                    if feed is None:
-                        return  # truncated member: drop partial tail
-                out = d.decompress(feed, out_cap)
-                if out:
-                    yield out
-                tail = d.unconsumed_tail
-        except zlib.error:
-            return  # corrupt member: keep what we salvaged
-        # bytes fed past the member end belong to the next member.
-        # NOTE: at eof CPython leaves the same leftover visible in
-        # BOTH unused_data and unconsumed_tail — adding `tail` here
-        # would double the remainder every member (exponential
-        # re-decode); unused_data alone is the next member's bytes
-        carry = d.unused_data
-
-
-def _iter_gunzip(data: bytes, chunk: int = 1 << 20,
-                 out_cap: int = 1 << 22) -> Iterator[bytes]:
-    """Bytes entry point for :func:`_iter_gunzip_stream` (in-memory
-    archives: embedded fixtures, already-fetched segments)."""
-    view = memoryview(data)
-    slices = (bytes(view[i:i + chunk])
-              for i in range(0, len(data), chunk))
-    return _iter_gunzip_stream(slices, out_cap)
+            chunk = src.read1(1 << 20)
+        except (EOFError, OSError, zlib.error):
+            return
+        if not chunk:
+            return
+        yield chunk
 
 
 def _iter_records(chunks: Iterator[bytes]) -> Iterator[dict]:
@@ -154,11 +117,7 @@ def parse_warc_records(data: bytes) -> Iterator[dict]:
     """Yield {headers, payload} per WARC record. Accepts plain or
     (multi-member) gzip bytes; truncated/corrupt input yields the
     complete records and drops the damaged tail (never raises)."""
-    if data[:2] == b"\x1f\x8b":
-        chunks: Iterator[bytes] = _iter_gunzip(data)
-    else:
-        chunks = iter((data,))
-    return _iter_records(chunks)
+    return _iter_records(_stream(io.BytesIO(data)))
 
 
 def _dechunk(body: bytes) -> bytes:
@@ -207,8 +166,7 @@ def _http_body(payload: bytes) -> tuple[bytes | None, str | None]:
     return body, headers.get("content-type")
 
 
-def _records_to_pages(records: Iterator[dict],
-                      html_only: bool = True) -> Iterator[dict]:
+def _records_to_pages(records: Iterator[dict]) -> Iterator[dict]:
     for rec in records:
         h = rec["headers"]
         if h.get("warc-type") != "response":
@@ -221,7 +179,7 @@ def _records_to_pages(records: Iterator[dict],
             # a bare-payload response record (e.g. WET-style); keep it
             body = rec["payload"]
             ctype = h.get("content-type")
-        if html_only and ctype is not None and "html" not in ctype:
+        if ctype is not None and "html" not in ctype:
             continue
         yield {
             "url": url,
@@ -231,11 +189,10 @@ def _records_to_pages(records: Iterator[dict],
         }
 
 
-def iter_warc_pages(data: bytes, html_only: bool = True) -> Iterator[dict]:
-    """Stream page dicts (url, warc_ts, html) from one WARC file's
-    bytes — records are decoded and released one at a time, so peak
-    memory is one record, not the file."""
-    return _records_to_pages(parse_warc_records(data), html_only)
+def _pages(fh) -> Iterator[dict]:
+    """Page dicts (url, warc_ts, html) from a seekable binary WARC file
+    object, one record in memory at a time."""
+    return _records_to_pages(_iter_records(_stream(fh)))
 
 
 def _local_path(path: str) -> str:
@@ -260,39 +217,19 @@ def _local_path(path: str) -> str:
     return path
 
 
-def iter_warc_pages_from_file(path: str, html_only: bool = True,
-                              chunk: int = 1 << 20) -> Iterator[dict]:
-    """Stream page dicts from a WARC file PATH: bytes are read in
-    ``chunk``-sized slices and fed straight into the streaming
-    gunzip + record parser, so peak memory is one RECORD (plus one
-    input chunk) — never the compressed file.  This is the scale path:
-    an arbitrary-size archive parses in bounded memory."""
+def iter_warc_pages_from_file(path: str) -> Iterator[dict]:
+    """Stream page dicts from a WARC file PATH in bounded memory."""
     with open(_local_path(path), "rb") as fh:
-        first = fh.read(2)
-
-        def chunks() -> Iterator[bytes]:
-            yield first
-            while True:
-                c = fh.read(chunk)
-                if not c:
-                    return
-                yield c
-
-        if first == b"\x1f\x8b":
-            stream: Iterator[bytes] = _iter_gunzip_stream(chunks())
-        else:
-            stream = chunks()
-        yield from _records_to_pages(_iter_records(stream), html_only)
+        yield from _pages(fh)
 
 
-def warc_bytes_to_pages(data: bytes, html_only: bool = True):
-    """One WARC file's bytes → list of page dicts (url, warc_ts, html).
-    Pure function — shared by the Spark connector and unit tests."""
-    return list(iter_warc_pages(data, html_only))
+def warc_bytes_to_pages(data: bytes) -> list:
+    """One WARC file's bytes → list of page dicts (url, warc_ts, html),
+    through the same reader as files."""
+    return list(_pages(io.BytesIO(data)))
 
 
 def read_warc_pages(spark: SparkSession, path: str,
-                    html_only: bool = True,
                     batch_rows: int = 256) -> DataFrame:
     """WARC file glob → pages(url, warc_ts, html, text, lang).
 
@@ -301,12 +238,9 @@ def read_warc_pages(spark: SparkSession, path: str,
     input_hint schema.
 
     Pages are emitted in ``batch_rows``-sized Arrow batches as the
-    record stream is consumed, and the file's BYTES are streamed from
-    the opened path inside the task (binaryFile's column pruning means
-    selecting only ``path`` never reads the contents JVM-side): peak
-    task memory is one record + one input chunk, bounded regardless of
-    archive size — a multi-GB .warc.gz is fine, not just Common
-    Crawl's ~1 GB segment convention."""
+    record stream is consumed, and each file is opened and streamed
+    inside the task: peak task memory is one record plus one 1 MiB
+    decoded piece, whatever the archive's size."""
     files = spark.read.format("binaryFile").load(path).select("path")
     cols = ["url", "warc_ts", "html"]
 
@@ -320,7 +254,7 @@ def read_warc_pages(spark: SparkSession, path: str,
         for pdf in batches:
             for p in pdf["path"]:
                 rows = []
-                for page in iter_warc_pages_from_file(p, html_only):
+                for page in iter_warc_pages_from_file(p):
                     rows.append(page)
                     if len(rows) >= batch_rows:
                         yield _frame(rows)

@@ -2,6 +2,8 @@
 jsonl crawl dumps → the canonical pages schema → extraction e2e."""
 
 import gzip
+import io
+import itertools
 import os
 
 from rdf_rdfa_spark.sources.warc import (
@@ -57,8 +59,6 @@ def test_warc_bytes_to_pages_filters_html():
                                          "http://w.example/2"]
     assert pages[0]["html"] == HTML1
     assert str(pages[0]["warc_ts"]) == "2026-01-02 03:04:05"
-    # html_only=False keeps the image response too
-    assert len(warc_bytes_to_pages(_sample_warc(), html_only=False)) == 3
 
 
 def test_read_warc_pages_end_to_end(spark, tmp_path):
@@ -164,19 +164,58 @@ def test_warc_streaming_bounded_batches(spark, tmp_path):
 
 
 def test_warc_gzip_bomb_inflates_in_bounded_chunks():
-    """_iter_gunzip must never hand back one giant allocation for a
-    high-ratio member: output chunks are capped (default 4 MiB), so a
+    """_stream must never hand back one giant allocation for a
+    high-ratio member: ``read1`` caps each decoded piece at 1 MiB, so a
     64 MiB-of-zeros member arrives in many bounded pieces."""
-    from rdf_rdfa_spark.sources.warc import _iter_gunzip
+    from rdf_rdfa_spark.sources.warc import _stream
 
     bomb = gzip.compress(b"\x00" * (64 << 20))      # ~64 KiB compressed
     total = 0
     max_chunk = 0
-    for chunk in _iter_gunzip(bomb):
+    for chunk in _stream(io.BytesIO(bomb)):
         total += len(chunk)
         max_chunk = max(max_chunk, len(chunk))
     assert total == 64 << 20
-    assert max_chunk <= 1 << 22
+    assert max_chunk <= 1 << 20
+
+
+def test_warc_every_truncation_point_salvages_a_prefix():
+    """Cut a 5-member archive at every byte offset: the reader never
+    raises, returns a prefix of the full parse (its last record may
+    lose the tail of its payload) and keeps, whole, every member that
+    ends before the cut."""
+    recs = [_warc_record("response", "http://t.example/%d" % i, _http(HTML1))
+            for i in range(5)]
+    members = [gzip.compress(r) for r in recs]
+    multi = b"".join(members)
+    full = list(parse_warc_records(multi))
+    assert len(full) == 5
+    ends = list(itertools.accumulate(map(len, members)))
+    for cut in range(len(multi) + 1):
+        got = list(parse_warc_records(multi[:cut]))
+        whole = sum(end <= cut for end in ends)
+        assert len(got) >= whole and got[:whole] == full[:whole], cut
+        if got:
+            assert got[:-1] == full[:len(got) - 1], cut
+            last = full[len(got) - 1]
+            assert got[-1]["headers"] == last["headers"], cut
+            assert last["payload"].startswith(got[-1]["payload"]), cut
+
+
+def test_warc_zero_padding_and_trailing_junk():
+    """Zero padding between members is skipped, as gzip(1) does, so
+    both members are kept; junk after the last member drops nothing."""
+    recs = [_warc_record("response", "http://t.example/%d" % i, _http(HTML1))
+            for i in range(3)]
+    members = [gzip.compress(r) for r in recs]
+    padded = members[0] + b"\x00" * 16 + members[1]
+    assert [r["headers"]["warc-target-uri"]
+            for r in parse_warc_records(padded)] == [
+        "http://t.example/0", "http://t.example/1"]
+    multi = b"".join(members)
+    for tail in (b"\x00" * 7, b"junk after the last member", b"\x1f\x8b"):
+        assert len(list(parse_warc_records(multi + tail))) == 3
+        assert len(warc_bytes_to_pages(multi + tail)) == 3
 
 
 def test_warc_multi_gb_archive_parses_in_bounded_memory(tmp_path):

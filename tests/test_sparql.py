@@ -924,3 +924,25 @@ def test_construct_modifiers_apply_to_solutions(kg):
     got = {tuple(r) for r in sparql(kg, q % "DESC(?d) OFFSET 1 LIMIT 1")
            .collect()}
     assert got == {("b", S + "k", "doc"), ("b", S + "l", "Pear")}
+
+
+def test_order_by_call_and_bracketed_keys(spark):
+    """SPARQL 1.1 OrderCondition admits a built-in call or a bracketed
+    expression without ASC/DESC: both sort ascending, in SELECT and
+    CONSTRUCT alike."""
+    kg = spark.createDataFrame(
+        [("d1", S + "genre", "roman", "literal", "fr", None),
+         ("d2", S + "genre", "novel", "literal", "en", None),
+         ("d3", S + "genre", "saga", "literal", "de", None)],
+        "subj string, pred string, obj string, obj_kind string, "
+        "lang string, datatype string")
+    q = P + "SELECT ?d WHERE { ?d s:genre ?g } ORDER BY %s"
+    for key, want in (("LANG(?g)", ["d3", "d2", "d1"]),
+                      ("(?g)", ["d2", "d1", "d3"]),
+                      ("STRLEN(?g) DESC(?d)", ["d3", "d2", "d1"]),
+                      ("LANG(?g) (?d) LIMIT 2", ["d3", "d2"])):
+        assert [r["d"] for r in sparql(kg, q % key).collect()] == want, key
+    q = P + """CONSTRUCT { ?d s:first ?g }
+               WHERE { ?d s:genre ?g } ORDER BY %s LIMIT 1"""
+    for key, want in (("LANG(?g)", "d3"), ("(?g)", "d2")):
+        assert [r["subj"] for r in sparql(kg, q % key).collect()] == [want]
