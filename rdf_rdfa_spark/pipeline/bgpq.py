@@ -425,16 +425,18 @@ def _join_patterns(triples: DataFrame, patterns, buckets=None,
             shared = [c for c in part.columns
                       if c in out.columns and not _is_meta(c)]
             out = out.join(part, shared) if shared else out.crossJoin(part)
-    return out
+    # the alias ends the analyzer's search for a name the solutions do
+    # not bind: below a pattern's projection, FILTER(?subj = ..) would
+    # otherwise resolve to the store's subj column
+    return out.alias("bgp")
 
 
 def _group_df(triples: DataFrame, group, buckets=None) -> DataFrame:
     """A sub-group (OPTIONAL / MINUS / FILTER [NOT] EXISTS operand):
     either a plain pattern list, or a dict with ``patterns`` plus
     group-scoped ``filters`` (Column predicates or SQL strings applied
-    INSIDE the group, before it joins the outer solutions — correct
-    when the filter only references the group's own variables; the
-    SPARQL front end validates that scope)."""
+    INSIDE the group, before it joins the outer solutions, so a
+    filter over any other variable fails to resolve)."""
     if isinstance(group, dict):
         patterns = group.get("patterns") or []
         filters = group.get("filters") or ()
@@ -586,7 +588,7 @@ def bgp_select(triples: DataFrame, patterns, select=None,
                 out = out.join(sub.select(*shared), shared, how)
             elif disjoint:
                 out = out.join(sub.limit(1), F.lit(True), how)
-    if select:
+    if select is not None:
         out = out.select(*select)
     elif not meta:
         # metadata rides along for FILTER/BIND only — never part of

@@ -43,6 +43,14 @@ shared by CONSTRUCT and INSERT/DELETE.  The subset:
     returns the updated DataFrame): INSERT DATA / DELETE DATA /
     DELETE WHERE / DELETE {} INSERT {} WHERE {}
 
+Variable scope is checked once, by Spark's analyzer over the plan
+``bgp_select`` builds (SPARQL 1.1 §18.2.1 defines scope on that
+algebra; pattern joins, subqueries and grouped solutions are aliased
+so it never resolves a name below them): ``_scoped`` turns an
+unresolved column into a SparqlSyntaxError naming the variable.  A
+GRAPH group hoists into the outer group, so the parser checks its
+filters (``_Parser.refs``).
+
 Deliberate scope notes: untagged literals match the store's obj
 column on LEXICAL form; "lit"@lang / "lit"^^dt constants and the
 LANG()/DATATYPE()/isIRI() FILTER functions additionally match the
@@ -55,15 +63,16 @@ harness exercises (BGP + negation + paths + modifiers + ASK).
 
 from __future__ import annotations
 
+import contextlib
 import re
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 from ..rdfa.terms import RDF_TYPE
 from .bgpq import (
     _META_SRC,
     _META_SUFFIXES,
-    Path,
     alt,
     bgp_select,
     has_term_meta,
@@ -153,12 +162,25 @@ def _new_group(patterns=None) -> dict:
             "values": None, "union": None, "subqueries": []}
 
 
+# a group's clause keys, by the name error messages give them
+_CLAUSES = {"patterns": "patterns", "subqueries": "subqueries",
+            "FILTER": "filters", "OPTIONAL": "optional", "MINUS": "minus",
+            "FILTER NOT EXISTS": "not_exists", "FILTER EXISTS": "exists",
+            "BIND": "bind", "VALUES": "values", "UNION": "union"}
+
+
+def _clauses_beyond(g, *allowed) -> list:
+    """The names of group ``g``'s non-empty clauses not in ``allowed``."""
+    return [n for n, key in _CLAUSES.items() if g[key] and key not in allowed]
+
+
 class _Parser:
     def __init__(self, text: str):
         self.toks = _tokenize(text)
         self.i = 0
         self.prefixes: dict[str, str] = {}
         self._anon = 0  # fresh [] blank-node variable counter
+        self.refs: set = set()  # variables the parsed expressions read
         # non-None while parsing a HAVING expression: collects the
         # aggregate calls it mentions as (placeholder, (fn, arg))
         self._having_aggs: list | None = None
@@ -428,13 +450,9 @@ class _Parser:
                 if len(sub) < 2:
                     raise SparqlSyntaxError("bare nested group "
                                             "(only UNION supported)")
-                for s_ in sub:
-                    if any(s_[k] for k in
-                           ("optional", "minus", "not_exists", "exists",
-                            "filters", "bind", "subqueries")) \
-                            or s_["values"]:
-                        raise SparqlSyntaxError(
-                            "UNION arms must be plain pattern groups")
+                if any(_clauses_beyond(s_, "patterns") for s_ in sub):
+                    raise SparqlSyntaxError(
+                        "UNION arms must be plain pattern groups")
                 g["union"] = [s_["patterns"] for s_ in sub]
             elif self.at_word("GRAPH"):
                 self.next()
@@ -451,27 +469,24 @@ class _Parser:
                 else:
                     raise SparqlSyntaxError(
                         "GRAPH needs an <iri>, prefixed name, or ?var")
+                outer_refs, self.refs = self.refs, set()
                 sub = self.parse_group()
-                if (sub["union"] is not None or sub["bind"]
-                        or sub["values"] or sub["subqueries"]
-                        or any(sub[k] for k in
-                               ("optional", "minus", "not_exists",
-                                "exists"))):
+                if _clauses_beyond(sub, "patterns", "filters"):
                     raise SparqlSyntaxError(
                         "GRAPH group supports only triple patterns "
                         "and FILTER expressions")
-                if sub["filters"]:
-                    # graph-group patterns hoist into the outer group
-                    # (conjunctive), so a filter over THEIR variables
-                    # hoists equivalently; the GRAPH ?var itself is in
-                    # scope too (it's attached to the patterns below,
-                    # after this validation runs)
-                    gvars = ([gterm[1]]
-                             if isinstance(gterm, tuple) else ())
-                    _validate_filter_scope(sub["filters"],
-                                           sub["patterns"], "GRAPH",
-                                           extra_vars=gvars)
-                    g["filters"].extend(sub["filters"])
+                # its patterns and filters hoist into the outer group,
+                # where outer variables would resolve too: a filter may
+                # read only the group's own variables and the GRAPH ?var
+                own = {t[1] for pat in sub["patterns"] + [(gterm,)]
+                       for t in pat if isinstance(t, tuple) and t[0] == "var"}
+                stray = sorted(self.refs - own)
+                if stray:
+                    raise SparqlSyntaxError(
+                        "expression in GRAPH references ?%s, which is not "
+                        "bound by the group's own patterns" % stray[0])
+                self.refs |= outer_refs
+                g["filters"].extend(sub["filters"])
                 for pat in sub["patterns"]:
                     if len(pat) == 4:
                         raise SparqlSyntaxError(
@@ -518,21 +533,16 @@ class _Parser:
         triple patterns plus group-scoped FILTER expressions.  Any
         other feature nested inside (BIND, VALUES, UNION, nested
         OPTIONAL/MINUS/EXISTS) raises rather than being silently
-        dropped.  Group filters may reference only the group's OWN
-        variables — filtering the group before it joins the outer
-        solutions is only equivalent under that scope, so references
-        to outer variables raise too."""
+        dropped.  Group filters run on the group's own solutions,
+        before it joins the outer ones, so a filter over an outer
+        variable fails to resolve there."""
         sub = self.parse_group()
-        if (sub["union"] is not None or sub["bind"] or sub["values"]
-                or sub["subqueries"]
-                or any(sub[k] for k in
-                       ("optional", "minus", "not_exists", "exists"))):
+        if _clauses_beyond(sub, "patterns", "filters"):
             raise SparqlSyntaxError(
                 "%s group supports only triple patterns and FILTER "
                 "expressions over the group's own variables" % kw)
         if not sub["filters"]:
             return sub["patterns"]
-        _validate_filter_scope(sub["filters"], sub["patterns"], kw)
         return {"patterns": sub["patterns"], "filters": sub["filters"]}
 
     def _parse_values(self):
@@ -623,6 +633,7 @@ class _Parser:
                 continue
             self.next()
             if kind == "var":
+                self.refs.add(val)
                 parts.append("`%s`" % val)
             elif kind == "string":
                 parts.append(_sql_str(val))
@@ -665,6 +676,7 @@ class _Parser:
                     if kb != "var":
                         raise SparqlSyntaxError("BOUND needs a ?var")
                     self.eat_op(")")
+                    self.refs.add(vb)
                     parts.append("(`%s` IS NOT NULL)" % vb)
                 elif up in ("LANG", "DATATYPE", "ISIRI", "ISURI",
                             "ISLITERAL", "ISBLANK"):
@@ -676,6 +688,7 @@ class _Parser:
                     if kind2 != "var":
                         raise SparqlSyntaxError("%s needs a ?var" % up)
                     self.eat_op(")")
+                    self.refs.add(v2)
                     if up == "LANG":
                         parts.append("COALESCE(`%s__lang`, '')" % v2)
                     elif up == "DATATYPE":
@@ -717,6 +730,7 @@ class _Parser:
     def _simple_operand(self) -> str:
         kind, val = self.next()
         if kind == "var":
+            self.refs.add(val)
             return "`%s`" % val
         if kind == "string":
             return _sql_str(val)
@@ -922,83 +936,34 @@ def _agg_col(fn: str, arg, distinct: bool = False,
                          _sql_str(sep if sep is not None else " ")))
     return F.expr("%s(%s%s)" % (fn.lower(), d, arg_sql))
 
-# backticked identifiers as parse_expr_sql emits them — the compiled
-# SQL is scanned (rather than the parser threading state) to validate
-# variable scope before Spark would raise an opaque unresolved-column
-# AnalysisException
-_IDENT_RE = re.compile(r"`([^`]+)`")
-# single-quoted SQL string literals as _sql_str emits them (backslash
-# escapes active) — stripped before the identifier scan so a backtick
-# INSIDE a string constant is never misread as a variable reference
-_SQL_STR_RE = re.compile(r"'(?:[^'\\]|\\.)*'")
+_UNGROUPED = "is neither a GROUP BY variable nor an aggregate"
 
 
-def _idents(sql: str):
-    return _IDENT_RE.findall(_SQL_STR_RE.sub("''", sql))
-
-
-def _pattern_var_info(patterns):
-    """→ (all_vars, meta_vars): every variable the patterns bind, and
-    the subset bound in OBJECT position by a plain (non-path) triple
-    pattern — only those carry the lang/datatype/obj_kind term
-    metadata that LANG()/DATATYPE()/isIRI() read."""
-    all_vars: set = set()
-    meta_vars: set = set()
-    for pat in patterns:
-        p = pat[1]
-        for pos, t in zip("spog", pat):
-            if isinstance(t, tuple) and t[0] == "var":
-                all_vars.add(t[1])
-                if pos == "o" and not isinstance(p, Path):
-                    meta_vars.add(t[1])
-    return all_vars, meta_vars
-
-
-def _validate_filter_scope(filters, patterns, where, extra_vars=(),
-                           have_meta=True):
-    """Raise SparqlSyntaxError when a compiled FILTER/BIND expression
-    references a variable the given patterns don't bind, or a term-
-    metadata function on a variable without metadata (bound by a
-    property path, in subject/predicate position, or over a store
-    without lang/datatype/obj_kind columns)."""
-    all_vars, meta_vars = _pattern_var_info(patterns)
-    all_vars |= set(extra_vars)
-    for sql in filters:
-        for ident in _idents(sql):
-            base = None
-            for sfx in _META_SUFFIXES:
-                if ident.endswith(sfx):
-                    base = ident[: -len(sfx)]
-                    break
-            if base is not None:
-                if not have_meta:
-                    raise SparqlSyntaxError(
-                        "LANG()/DATATYPE()/isIRI()/isLiteral()/"
-                        "isBlank() in %s: the store has no lang/"
-                        "datatype/obj_kind metadata columns" % where)
-                if base not in meta_vars:
-                    raise SparqlSyntaxError(
-                        "LANG()/DATATYPE()/isIRI()/isLiteral()/"
-                        "isBlank() on ?%s in %s: the variable is not "
-                        "bound in object position by a plain triple "
-                        "pattern (property-path and subject/predicate "
-                        "bindings carry no term metadata)"
-                        % (base, where))
-            elif ident not in all_vars:
-                raise SparqlSyntaxError(
-                    "expression in %s references ?%s, which is not "
-                    "bound by the group's own patterns" % (where, ident))
-
-
-def _subq_vars(q) -> set:
-    """Best-effort set of variables a subquery projects (for scope
-    validation of outer FILTERs)."""
-    if q["aggs"] or q["group_by"]:
-        return set(q["group_by"]) | set(q["aggs"])
-    if q.get("vars"):
-        return set(q["vars"])
-    all_vars, _ = _pattern_var_info(q["group"]["patterns"])
-    return all_vars
+@contextlib.contextmanager
+def _scoped(triples: DataFrame, where: str,
+            unbound: str = "is not bound by the group's own patterns"):
+    """Spark's analyzer is the one variable-scope check: an unresolved
+    column while the block builds a plan becomes a SparqlSyntaxError
+    naming the variable (``?v__lang``/``__dt``/``__kind`` name a
+    term-metadata function on ``?v``).  Other errors pass through."""
+    try:
+        yield
+    except AnalysisException as e:
+        if not (e.getCondition() or "").startswith("UNRESOLVED_COLUMN"):
+            raise
+        name = e.getMessageParameters()["objectName"].strip("`")
+        fns = "LANG()/DATATYPE()/isIRI()/isLiteral()/isBlank()"
+        if not name.endswith(_META_SUFFIXES):
+            msg = "expression in %s references ?%s, which %s" % (
+                where, name, unbound)
+        elif not has_term_meta(triples):
+            msg = ("%s in %s: the store has no lang/datatype/obj_kind "
+                   "metadata columns" % (fns, where))
+        else:
+            msg = ("%s on ?%s in %s: the variable carries no term metadata "
+                   "(only an object bound by a plain triple pattern does)"
+                   % (fns, name.rsplit("__", 1)[0], where))
+        raise SparqlSyntaxError(msg) from e
 
 
 def _apply_modifiers(out: DataFrame, q) -> DataFrame:
@@ -1022,74 +987,44 @@ def _where(triples: DataFrame, g, buckets=None, select=None,
     """A parsed WHERE group → its DISTINCT solutions (``select``
     projects them, ``meta`` keeps the object terms' metadata): a UNION
     of plain arms, or one bgp_select with the group's subqueries
-    compiled bottom-up and its FILTER/BIND scope validated."""
+    compiled bottom-up."""
     if g["union"] is not None:
-        # raise rather than silently drop (same convention as
-        # _sub_group): group-level clauses alongside a UNION are not
-        # compiled into the union arms
-        dropped = [name for name, val in (
-            ("patterns", g["patterns"]), ("subqueries", g["subqueries"]),
-            ("FILTER", g["filters"]), ("OPTIONAL", g["optional"]),
-            ("MINUS", g["minus"]), ("FILTER NOT EXISTS", g["not_exists"]),
-            ("FILTER EXISTS", g["exists"]), ("BIND", g["bind"]),
-            ("VALUES", g["values"]),
-        ) if val]
+        # clauses beside a UNION would be dropped from its arms: raise
+        dropped = _clauses_beyond(g, "union")
         if dropped:
             raise SparqlSyntaxError(
                 "UNION is supported as the entire group body (group "
                 "also carries: %s)" % ", ".join(dropped))
-        arms = [bgp_select(triples, arm, select=select, buckets=buckets,
-                           meta=meta) for arm in g["union"]]
-        out = arms[0]
-        for nxt in arms[1:]:
-            out = out.unionByName(nxt, allowMissingColumns=meta)
-        return out.distinct()
-    have_meta = has_term_meta(triples)
-    subs = [_compile_select(triples, sq, buckets=buckets)
+    # aliased, so the outer group cannot see unprojected variables
+    subs = [_compile_select(triples, sq, buckets=buckets).alias("subquery")
             for sq in g["subqueries"]]
-    extra = set(g["bind"]) | (set(g["values"][0]) if g["values"]
-                              else set())
-    for sq in g["subqueries"]:
-        extra |= _subq_vars(sq)
-    # group-level FILTERs run after the OPTIONAL joins, so optional-
-    # bound variables are in scope (BOUND(?m) over OPTIONAL works);
-    # BINDs run before them, so only required/VALUES vars for those
-    _validate_filter_scope(list(g["filters"]), _group_scope(g), "WHERE",
-                           extra_vars=extra, have_meta=have_meta)
-    _validate_filter_scope(list(g["bind"].values()), g["patterns"],
-                           "WHERE", extra_vars=extra,
-                           have_meta=have_meta)
-    return bgp_select(
-        triples, g["patterns"], select=select,
-        filters=[F.expr(e) for e in g["filters"]],
-        optional=g["optional"], minus=g["minus"],
-        not_exists=g["not_exists"], exists=g["exists"],
-        values=g["values"],
-        bind={k: F.expr(v) for k, v in g["bind"].items()},
-        subselects=subs or None,
-        buckets=buckets, meta=meta,
-    )
-
-
-def _group_scope(g) -> list:
-    """The patterns whose variables reach the group's solutions: the
-    required ones, the OPTIONAL groups' and the UNION arms'."""
-    scope = list(g["patterns"])
-    for og in g["optional"]:
-        scope += og["patterns"] if isinstance(og, dict) else og
-    for arm in g["union"] or ():
-        scope += arm
-    return scope
+    with _scoped(triples, "WHERE"):
+        if g["union"] is not None:
+            arms = [bgp_select(triples, arm, select=select,
+                               buckets=buckets, meta=meta)
+                    for arm in g["union"]]
+            out = arms[0]
+            for nxt in arms[1:]:
+                out = out.unionByName(nxt, allowMissingColumns=meta)
+            return out.distinct()
+        return bgp_select(
+            triples, g["patterns"], select=select,
+            filters=[F.expr(e) for e in g["filters"]],
+            optional=g["optional"], minus=g["minus"],
+            not_exists=g["not_exists"], exists=g["exists"],
+            values=g["values"],
+            bind={k: F.expr(v) for k, v in g["bind"].items()},
+            subselects=subs or None,
+            buckets=buckets, meta=meta,
+        )
 
 
 def _compile_select(triples: DataFrame, q, buckets=None) -> DataFrame:
     """A SELECT-form query dict (top level or subquery) → DataFrame
     with its own solution modifiers applied."""
     g = q["group"]
-    if q["aggs"] or q.get("having"):
-        aggs = {}
-        for out_name, spec in q["aggs"].items():
-            aggs[out_name] = _agg_col(*spec)
+    if q["aggs"] or q.get("having") or q["group_by"]:
+        aggs = {name: _agg_col(*spec) for name, spec in q["aggs"].items()}
         hexpr, hidden = None, []
         if q.get("having"):
             hexpr, haggs = q["having"]
@@ -1104,44 +1039,34 @@ def _compile_select(triples: DataFrame, q, buckets=None) -> DataFrame:
                 else:
                     aggs[ph] = _agg_col(fn, arg)
                     hidden.append(ph)
-            for ident in _idents(hexpr):
-                if (not ident.startswith("__h")
-                        and ident not in q["group_by"]
-                        and ident not in q["aggs"]):
-                    raise SparqlSyntaxError(
-                        "HAVING references ?%s, which is neither a "
-                        "GROUP BY variable nor an aggregate" % ident)
-        # aggregates run over the DISTINCT solutions; the groupBy
-        # partial-aggregates map-side, so the shuffle carries one row
-        # per (group, mapper), not the solutions
-        out = _where(triples, g, buckets).groupBy(*q["group_by"]).agg(
-            *[expr.alias(name) for name, expr in aggs.items()])
+        if aggs:
+            # aggregates run over the DISTINCT solutions; the groupBy
+            # partial-aggregates map-side, so the shuffle carries one
+            # row per (group, mapper), not the solutions
+            out = _where(triples, g, buckets).groupBy(*q["group_by"]).agg(
+                *[expr.alias(name) for name, expr in aggs.items()])
+        else:
+            # GROUP BY with no aggregates ≡ DISTINCT projection of the
+            # grouped variables (the engine is set-semantics already),
+            # aliased so HAVING, SELECT and ORDER BY see only those
+            out = _where(triples, g, buckets,
+                         select=q["group_by"]).alias("groups")
         if hexpr:
-            out = out.filter(F.expr(hexpr))
+            with _scoped(triples, "HAVING", _UNGROUPED):
+                out = out.filter(F.expr(hexpr))
         if hidden:
             out = out.drop(*hidden)
-    elif q["group_by"]:
-        # GROUP BY with no aggregates ≡ DISTINCT projection of the
-        # grouped variables (the engine is set-semantics already).
-        # The SELECT projection still applies: it must be a subset of
-        # the GROUP BY variables, and a strict subset needs its own
-        # distinct.
         sel = q.get("vars") or q["group_by"]
-        bad = [v for v in sel if v not in q["group_by"]]
-        if bad:
-            raise SparqlSyntaxError(
-                "SELECT ?%s is neither a GROUP BY variable nor an "
-                "aggregate" % bad[0])
-        out = _where(triples, g, buckets, select=q["group_by"])
-        if list(sel) != list(q["group_by"]):
-            out = out.select(*sel).distinct()
+        if not aggs and list(sel) != list(q["group_by"]):
+            # a strict subset of the keys needs its own distinct
+            with _scoped(triples, "SELECT", _UNGROUPED):
+                out = out.select(*sel).distinct()
     else:
         out = _where(triples, g, buckets, select=q.get("vars"))
         if q.get("vars") is None:
             # [] blank nodes are existentials: strip them from SELECT *
             # output (and re-dedup) BEFORE the solution modifiers apply
-            all_vars, _ = _pattern_var_info(_group_scope(g))
-            anons = sorted(v for v in all_vars if v.startswith("_anon"))
+            anons = [c for c in out.columns if c.startswith("_anon")]
             if anons:
                 out = out.drop(*anons).distinct()
     return _apply_modifiers(out, q)
@@ -1189,17 +1114,18 @@ def sparql(triples: DataFrame, query: str, buckets: int | None = None):
     then prune the scan to one bucket PARTITION directory."""
     q = _Parser(query).parse_query()
     g = q["group"]
-    if q["form"] == "select":
-        return _compile_select(triples, q, buckets=buckets)
-    sol = None if g is None else _where(triples, g, buckets,
-                                        meta=q["form"] == "construct")
-    if q["form"] == "describe":
-        return _describe(triples, q["targets"], sol)
-    if q["form"] == "ask":
-        # LIMIT 1 keeps the scan short-circuiting
-        return bool(sol.limit(1).take(1))
-    # the modifiers pick solutions, not triples (SPARQL 1.1 §16.2)
-    return _kinded_df(triples, q["template"], _apply_modifiers(sol, q))
+    with _scoped(triples, "the query"):
+        if q["form"] == "select":
+            return _compile_select(triples, q, buckets=buckets)
+        sol = None if g is None else _where(triples, g, buckets,
+                                            meta=q["form"] == "construct")
+        if q["form"] == "describe":
+            return _describe(triples, q["targets"], sol)
+        if q["form"] == "ask":
+            # LIMIT 1 keeps the scan short-circuiting
+            return bool(sol.limit(1).take(1))
+        # the modifiers pick solutions, not triples (SPARQL 1.1 §16.2)
+        return _kinded_df(triples, q["template"], _apply_modifiers(sol, q))
 
 
 # --- triples templates: CONSTRUCT and INSERT/DELETE ---------------------
@@ -1328,13 +1254,10 @@ def _kinded_df(triples: DataFrame, kinded, sol: DataFrame | None) -> DataFrame:
 # commit it as a new snapshot.  Deletion matches on lexical
 # (subj, pred, obj) across all graphs/urls.
 
-def sparql_update(triples: DataFrame, update: str,
-                  buckets: int | None = None) -> DataFrame:
+def sparql_update(triples: DataFrame, update: str) -> DataFrame:
     """Execute one SPARQL UPDATE operation — INSERT DATA / DELETE DATA
     (ground), DELETE WHERE, or [DELETE {}] [INSERT {}] WHERE {} — and
-    return the updated triples DataFrame.
-    ``buckets`` prunes constant-subject WHERE patterns exactly as in
-    :func:`sparql` (the deletion anti-join still scans the store)."""
+    return the updated triples DataFrame."""
     p = _Parser(update)
     p.parse_prologue()
     ins_kinded = del_kinded = group = None
@@ -1367,23 +1290,24 @@ def sparql_update(triples: DataFrame, update: str,
     if p.peek()[0] != "eof":
         raise SparqlSyntaxError(
             "trailing tokens after update at %r" % (p.peek()[1],))
-    sol = None
-    if group is not None:
-        sol = _where(triples, group, buckets, meta=True)
-        if ins_kinded and del_kinded:
-            # both templates instantiate from the SAME solution set —
-            # materialize it once (lazy barrier, lineage truncated)
-            sol = sol.localCheckpoint(eager=False)
-    out = triples
-    if del_kinded:
-        del_df = _kinded_df(triples, del_kinded, sol).select(
-            "subj", "pred", "obj")
-        out = out.join(del_df, ["subj", "pred", "obj"], "left_anti")
-    if ins_kinded:
-        ins_df = _kinded_df(triples, ins_kinded, sol)
-        # insert only genuinely new (subj, pred, obj): existing rows
-        # (with their provenance) stay untouched
-        ins_df = ins_df.join(out.select("subj", "pred", "obj"),
-                             ["subj", "pred", "obj"], "left_anti")
-        out = out.unionByName(ins_df)
-    return out
+    with _scoped(triples, "the update"):
+        sol = None
+        if group is not None:
+            sol = _where(triples, group, meta=True)
+            if ins_kinded and del_kinded:
+                # both templates instantiate from the SAME solution set —
+                # materialize it once (lazy barrier, lineage truncated)
+                sol = sol.localCheckpoint(eager=False)
+        out = triples
+        if del_kinded:
+            del_df = _kinded_df(triples, del_kinded, sol).select(
+                "subj", "pred", "obj")
+            out = out.join(del_df, ["subj", "pred", "obj"], "left_anti")
+        if ins_kinded:
+            ins_df = _kinded_df(triples, ins_kinded, sol)
+            # insert only genuinely new (subj, pred, obj): existing rows
+            # (with their provenance) stay untouched
+            ins_df = ins_df.join(out.select("subj", "pred", "obj"),
+                                 ["subj", "pred", "obj"], "left_anti")
+            out = out.unionByName(ins_df)
+        return out

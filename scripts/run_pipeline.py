@@ -9,7 +9,9 @@ Runs extraction → (optional entailment expansion) → (optional entity
 linking) → resumable materialization: one snapshot commit per run,
 whose manifest lists the url-hash chunk keys it ingested.  Re-running
 with the same --output resumes: chunks the store's HEAD manifest lists
-in its ``inputs`` are skipped.
+in its ``inputs`` are skipped.  --link/--expand commit the refined
+triples as a store of their own under ``<output>/refined``, which
+--export-pages then reads.
 
 With --sf-dir instead of --input, synthesizes the deterministic
 CC-style corpus from documents.parquet (testing/bench path).
@@ -103,23 +105,25 @@ def main():
     if args.compact:
         manifest["compaction"] = materialize.compact_store(spark, args.output)
 
+    # the refined triples are a store of their own, committed like an
+    # update: a crash mid-refine leaves the previous refined snapshot whole
+    refined = os.path.join(args.output, "refined")
     if args.expand or args.link:
         triples = materialize.read_triples(spark, args.output)
         if args.link:
             triples = link_entities(triples)
         if args.expand:
             triples = expand(triples)
-        out2 = os.path.join(args.output, "triples_refined")
-        triples.write.mode("overwrite").parquet(out2)
-        manifest["refined"] = out2
+        materialize.write_triples(
+            triples, refined, buckets=materialize.store_buckets(args.output),
+            mode="overwrite", kind="refine")
+        manifest["refined"] = refined
 
     if args.export_pages:
         from rdf_rdfa_spark.pipeline.export import export_rdfa_pages
 
-        src = (materialize.read_triples(spark, args.output)
-               if not (args.expand or args.link)
-               else spark.read.parquet(os.path.join(args.output,
-                                                    "triples_refined")))
+        src = materialize.read_triples(
+            spark, refined if args.expand or args.link else args.output)
         out3 = os.path.join(args.output, "pages_rdfa")
         export_rdfa_pages(src).write.mode("overwrite").parquet(out3)
         manifest["exported_pages"] = out3

@@ -324,6 +324,50 @@ def test_filter_unknown_var_raises(kg):
             SELECT ?d WHERE { ?d s:type "Doc" . FILTER (?nope = 1) }""")
 
 
+def test_outer_filter_sees_select_star_subquery_vars(kg):
+    # a SELECT * subquery projects its OPTIONAL and BIND variables too,
+    # so an outer FILTER over them resolves
+    got = sorted(tuple(r) for r in sparql(kg, P + """
+        SELECT ?d WHERE {
+          { SELECT * WHERE { ?d s:type ?t OPTIONAL { ?d s:mirror ?s } } }
+          FILTER (BOUND(?s)) }""").collect())
+    assert got == [("a",)]
+    got = sorted(tuple(r) for r in sparql(kg, P + """
+        SELECT ?d WHERE {
+          { SELECT * WHERE { ?d s:type ?t BIND(?d AS ?e) } }
+          FILTER (?e != "c") }""").collect())
+    assert got == [("a",), ("b",)]
+
+
+@pytest.mark.parametrize("query,name", [
+    ('SELECT ?d WHERE { ?d s:type "Doc" } ORDER BY ?x', "x"),
+    ('SELECT ?d WHERE { ?d s:type "Doc" } ORDER BY DESC(STRLEN(?x))', "x"),
+    ('SELECT ?x WHERE { ?d s:type "Doc" }', "x"),
+    ('SELECT ?x (COUNT(*) AS ?n) WHERE { ?d s:type "Doc" } GROUP BY ?x',
+     "x"),
+    ('SELECT (COUNT(?x) AS ?n) WHERE { ?d s:type "Doc" }', "x"),
+    ('SELECT ?d WHERE { ?d s:type "Doc" BIND(?x AS ?z) BIND(?d AS ?x) }',
+     "x"),
+    ('CONSTRUCT { ?d s:k "v" } WHERE { ?d s:type "Doc" } ORDER BY ?x', "x"),
+    # a store column under a pattern's projection is not a variable
+    ('SELECT ?d WHERE { ?d s:type "Doc" FILTER (?subj = "a") }', "subj"),
+    ('SELECT ?d WHERE { ?d s:type "Doc" } ORDER BY ?obj', "obj"),
+    ('SELECT ?d WHERE { ?d s:type "Doc" '
+     'MINUS { ?d s:mirror ?m FILTER (?pred = "x") } }', "pred"),
+    # nor is a variable a subquery or a GROUP BY leaves out
+    ('SELECT ?d WHERE { { SELECT ?d WHERE { ?d s:type ?t } } '
+     'FILTER (?t = "Doc") }', "t"),
+    ('SELECT ?d WHERE { ?d s:type ?t } GROUP BY ?d ORDER BY ?t', "t"),
+], ids=["order", "order-expr", "select", "group-by", "aggregate",
+        "later-bind", "construct-order", "store-filter", "store-order",
+        "store-minus", "subquery-hidden", "group-order"])
+def test_unbound_variable_raises_syntax_error(kg, query, name):
+    # Spark's analyzer resolves every variable; an unresolved one is a
+    # SparqlSyntaxError naming it, never a raw AnalysisException
+    with pytest.raises(SparqlSyntaxError, match=r"\?%s\b" % name):
+        sparql(kg, P + query)
+
+
 def test_sparql_seeded_path_constant_subject(kg):
     got = {r["y"] for r in sparql(
         kg, P + 'SELECT ?y WHERE { "a" s:next+ ?y }').collect()}
@@ -384,6 +428,18 @@ def test_graph_clause_rejects(spark):
         sparql(kg2, P + "SELECT ?s WHERE { GRAPH ?g { ?s s:p ?o } }")
 
 
+def test_graph_filter_over_outer_var_raises(spark):
+    # GRAPH patterns and filters hoist into the outer group, where ?m
+    # would resolve; SPARQL's group scope keeps it out of the filter
+    kg = spark.createDataFrame(
+        [("a", S + "p", "b", "output"), ("a", S + "m", "c", "output")],
+        "subj string, pred string, obj string, graph string")
+    with pytest.raises(SparqlSyntaxError, match="GRAPH"):
+        sparql(kg, P + """
+            SELECT ?s WHERE { ?s s:m ?m .
+              GRAPH <output> { ?s s:p ?o FILTER (?m != "x") } }""")
+
+
 def test_having(kg):
     # 3 Docs share one type; HAVING keeps/drops the group
     rows = sparql(kg, P + """
@@ -405,6 +461,13 @@ def test_having(kg):
         sparql(kg, P + """
             SELECT ?t (COUNT(*) AS ?n) WHERE { ?d s:type ?t }
             GROUP BY ?t HAVING (?d > 1)""")
+    with pytest.raises(SparqlSyntaxError, match="HAVING"):
+        sparql(kg, P + 'SELECT ?d WHERE { ?d s:type ?t } HAVING (?t > 1)')
+    # a HAVING with no aggregate filters the distinct group keys
+    rows = sparql(kg, P + """
+        SELECT ?t WHERE { ?d s:type ?t } GROUP BY ?t
+        HAVING (?t = "Doc")""").collect()
+    assert [tuple(r) for r in rows] == [("Doc",)]
 
 
 def test_group_by_without_aggregates(kg):
