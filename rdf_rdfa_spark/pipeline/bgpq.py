@@ -48,9 +48,11 @@ def lit(value: str, lang: str | None = None,
 # bound OBJECT runs the inverted path forward.  A ``None`` frontier is
 # unseeded: a step from it yields the path's whole edge relation, so a
 # pattern with two free endpoints runs through the same evaluator.
-# Closures (p+ / p*) iterate one semi-naive loop to fixpoint: one
-# frontier ⋈ edges shuffle and one anti-join against the visited set
-# per round, lineage truncated per round with a lazy localCheckpoint.
+# Closures (p+ / p*) are solved on the driver when the inner path's edge
+# relation fits in ``_DRIVER_EDGES`` rows; a larger one iterates one
+# semi-naive loop to fixpoint: one frontier ⋈ edges shuffle and one
+# anti-join against the visited set per round, lineage truncated per
+# round with a lazy localCheckpoint.
 
 class Path:
     __slots__ = ("op", "parts")
@@ -113,10 +115,11 @@ def negated(*preds, inverse=()) -> Path:
     return parts[0] if len(parts) == 1 else Path("alt", tuple(parts))
 
 
-#: diagnostics from the most recent closure run (rounds taken, total
-#: rows ever added to the visited set) — lets tests pin that a seeded
-#: query never explores beyond its reachable component.
-last_seeded_stats: dict = {}
+#: the most rows a closure collects to solve on the driver.  On a 4-core
+#: host a million IRI pairs collect in ~4 s and solve in 1.5-6 s with
+#: ~0.8 GB of driver RSS, the cost of a few distributed rounds (each
+#: ~0.6 s of scheduling however few rows it moves)
+_DRIVER_EDGES = 1_000_000
 
 
 def _invert(path):
@@ -203,19 +206,73 @@ def _step(triples: DataFrame, path, frontier) -> DataFrame:
     raise ValueError("unknown path op %r" % path.op)
 
 
+def _fits(df: DataFrame):
+    """``df``'s rows when it has at most ``_DRIVER_EDGES`` of them (one
+    bounded collect), else None."""
+    rows = df.limit(_DRIVER_EDGES + 1).collect()
+    return rows if len(rows) <= _DRIVER_EDGES else None
+
+
+def _reach(spark, edges, starts) -> DataFrame:
+    """(seed, n) rows one or more ``edges`` steps from the frontier
+    ``starts``, by one driver BFS per distinct start node."""
+    succ: dict = {}
+    for s, o in edges:
+        succ.setdefault(s, []).append(o)
+    memo: dict = {}
+    out = set()
+    for seed, start in starts:
+        if start not in memo:
+            seen, todo = set(), [start]
+            while todo:
+                for o in succ.get(todo.pop(), ()):
+                    if o not in seen:
+                        seen.add(o)
+                        todo.append(o)
+            memo[start] = seen
+        out.update((seed, n) for n in memo[start])
+    return spark.createDataFrame(list(out), "seed string, n string")
+
+
 def _closure(triples: DataFrame, inner, seeds, reflexive: bool,
              max_iters: int = 64) -> DataFrame:
-    """``inner``+ (``inner``* when ``reflexive``) from ``seeds``, by
+    """``inner``+ (``inner``* when ``reflexive``) from ``seeds``.
+
+    When the inner edge relation and the frontier each fit in
+    ``_DRIVER_EDGES`` rows, both are collected once and solved on the
+    driver (unseeded, every edge source is a start node): no rounds,
+    but the whole edge relation is read, whatever the seeds.  Otherwise
     semi-naive BFS: per round one frontier ⋈ edges shuffle plus an
-    anti-join against the visited set — total work ∝ edges of the
-    reachable component, rounds = its diameter + 1 (web-KG diameters
-    are small).  Unseeded (``seeds=None``), the first round is the
-    edge relation itself."""
+    anti-join against the visited set — only here is the work ∝ edges
+    of the reachable component, over rounds = its diameter + 1 (web-KG
+    diameters are small).  Unseeded (``seeds=None``), the first round is
+    the edge relation itself."""
     if seeds is not None:
         seeds = seeds.distinct().localCheckpoint(eager=False)
+    edges = _fits(_step(triples, inner, None))
+    starts = None
+    if edges is not None:
+        starts = ([(s, s) for s in {s for s, _o in edges}]
+                  if seeds is None else _fits(seeds))
+    if starts is not None:
+        visited = _reach(triples.sparkSession, edges, starts)
+    else:
+        visited = _semi_naive(triples, inner, seeds, max_iters)
+    if reflexive:
+        # zero-length component: a SEED relates to itself (per the
+        # SPARQL zero-length-path semantics for a bound term — note
+        # this holds even when the term has no edges in the graph,
+        # where the unseeded all-nodes evaluation would drop it)
+        visited = visited.unionByName(_identity(triples, seeds)).distinct()
+    return visited
+
+
+def _semi_naive(triples: DataFrame, inner, seeds,
+                max_iters: int) -> DataFrame:
+    """The distributed closure loop; raises ValueError when the
+    frontier still grows after ``max_iters`` rounds."""
     visited = None
     frontier = seeds
-    rounds = added = 0
     n_new = 1
     for _ in range(max_iters):
         step = _step(triples, inner, frontier)
@@ -223,10 +280,8 @@ def _closure(triples: DataFrame, inner, seeds, reflexive: bool,
             step = step.join(visited, ["seed", "n"], "left_anti")
         step = step.localCheckpoint(eager=False)
         n_new = step.count()
-        rounds += 1
         if n_new == 0:
             break
-        added += n_new
         visited = (step if visited is None
                    else visited.unionByName(step)
                    .localCheckpoint(eager=False))
@@ -238,17 +293,7 @@ def _closure(triples: DataFrame, inner, seeds, reflexive: bool,
             "path closure did not converge within %d rounds (frontier "
             "still growing) — raise max_iters for graphs of this "
             "diameter" % max_iters)
-    last_seeded_stats.clear()
-    last_seeded_stats.update({"rounds": rounds, "visited_rows": added})
-    if visited is None:
-        visited = step  # converged in round one: the empty relation
-    if reflexive:
-        # zero-length component: a SEED relates to itself (per the
-        # SPARQL zero-length-path semantics for a bound term — note
-        # this holds even when the term has no edges in the graph,
-        # where the unseeded all-nodes evaluation would drop it)
-        visited = visited.unionByName(_identity(triples, seeds)).distinct()
-    return visited
+    return step if visited is None else visited  # round one empty: ∅
 
 
 def _endpoint_seeds(term, seeded):

@@ -3,139 +3,93 @@ absent from the single-document reference, which never sees two
 documents at once.
 
 One mechanism: **sameAs clustering**, semantic co-reference over
-owl:sameAs/schema:sameAs edges, via min-label propagation with pointer
-jumping (the star-contraction family of Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14).  Each round is a
-groupBy-min + join; converges in O(log diameter) rounds.  Skewed hub
-entities are handled by AQE skew-join splitting (enabled in
-session.py).  `link_entities` rewrites subj/obj to each cluster's
-canonical (lexicographic-min) IRI.
+owl:sameAs/schema:sameAs edges.  An edge relation that fits on the
+driver (``bgpq._DRIVER_EDGES`` rows) is collected once and labelled by
+union-find, with no Spark round — SparkER and MinoanER (EDBT 2019)
+likewise cluster on the driver once the graph fits.  A larger one runs
+``bgpq._closure``, the library's one distributed fixpoint loop.
+`link_entities` rewrites subj/obj to each cluster's canonical
+(lexicographic-min) IRI.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from . import bgpq
+
 SAMEAS_PREDICATES = (
     "http://www.w3.org/2002/07/owl#sameAs",
     "http://schema.org/sameAs",
 )
 
+# sameAs read in both directions: its closure is the undirected component
+_BOTH_WAYS = bgpq.alt(*SAMEAS_PREDICATES, *map(bgpq.inv, SAMEAS_PREDICATES))
 
-def connected_components(edges: DataFrame, max_iter: int = 20) -> DataFrame:
-    """edges(src, dst) → (node, component) with component = min node id
-    (lexicographic). Min-label propagation with pointer jumping;
-    O(log diameter) rounds, every round a shuffle on node id.  Raises
-    ValueError when labels still change after ``max_iter`` rounds."""
-    # symmetrize + self-loops establish initial labels.
-    # localCheckpoint (not just cache) truncates the logical plan each
-    # round — iterative joins otherwise grow the lineage exponentially
-    # and analysis time dominates. On a cluster with a checkpoint dir,
-    # swap for df.checkpoint() to also survive executor loss.
-    # symmetrize in ONE pass over the input (explode, not
-    # union-with-swap: a union references `edges` twice and recomputes
-    # the entire upstream plan — the sameAs filter over the store —
-    # twice before the checkpoint)
-    e = (
-        edges.select(F.explode(F.array(
-            F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
-            F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-        )).alias("p"))
-        .select("p.src", "p.dst")
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        e.select(F.col("src").alias("node"), F.col("dst"))
-        .groupBy("node")
-        .agg(F.min("dst").alias("component"))
-        .withColumn("component", F.least("node", "component"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        # propagate: node adopts min(component of neighbors ∪ self).
-        # The node's own previous label rides along in the same
-        # aggregation (min over own-flagged rows), so convergence is a
-        # cheap filter on the checkpointed result — no per-round
-        # labels⋈labels shuffle join just to detect change.
-        nbr = (
-            e.join(labels, e["dst"] == labels["node"])
-            .select(e["src"].alias("node"), "component",
-                    F.lit(False).alias("own"))
-        )
-        merged = (
-            labels.select("node", "component", F.lit(True).alias("own"))
-            .unionByName(nbr)
-            .groupBy("node")
-            .agg(
-                F.min("component").alias("component"),
-                F.min(F.when(F.col("own"), F.col("component"))).alias("old"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        # pointer jump: follow the fresh label one more hop
-        # (component := min(component, label(component))).  Pure
-        # neighbor-min needs O(diameter) rounds; the jump halves every
-        # label chain per round, so convergence is
-        # O(log diameter).  Every component value is itself a node id
-        # (min over seen labels), so the left lookup always hits;
-        # labels still only ever decrease toward the component min —
-        # the fixpoint (and the min-id result) is unchanged.
-        ptr = merged.select(F.col("node").alias("pnode"),
-                            F.col("component").alias("pcomp"))
-        jumped = (
-            merged.join(ptr, merged["component"] == ptr["pnode"], "left")
-            .select("node",
-                    F.least(F.col("component"),
-                            F.coalesce("pcomp", "component"))
-                    .alias("component"),
-                    "old")
-            .localCheckpoint()
-        )
-        changed = jumped.filter(F.col("component") < F.col("old")).limit(1).count()
-        labels = jumped.select("node", "component")
-        if changed == 0:
-            return labels
-    raise ValueError(
-        "connected components did not converge within %d rounds "
-        "(labels still changing) — raise max_iter" % max_iter)
+#: cluster-map rows above which the rewrite joins shuffle instead of
+#: broadcasting: ~400 MB of IRI pairs, the practical executor-memory
+#: ceiling long before spark.sql.autoBroadcastJoinThreshold matters
+_MAX_BROADCAST_ROWS = 10_000_000
+
+
+def _min_labels(edges) -> dict:
+    """Undirected ``edges`` → {node: the min node of its component}, by
+    union-find whose root is always its set's minimum."""
+    parent: dict = {}
+
+    def root(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for s, o in edges:
+        parent.setdefault(s, s)
+        parent.setdefault(o, o)
+        low, high = sorted((root(s), root(o)))
+        parent[high] = low
+    return {n: root(n) for n in parent}
 
 
 def sameas_clusters(triples: DataFrame) -> DataFrame:
-    """Extract sameAs edges from a triples DF and cluster them.
-    Returns (entity, canonical)."""
-    edges = (
-        triples.filter(F.col("pred").isin(*SAMEAS_PREDICATES))
-        .filter(F.col("obj_kind") == "iri")
-        .select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
-    )
-    cc = connected_components(edges)
-    return cc.select(F.col("node").alias("entity"),
-                     F.col("component").alias("canonical"))
+    """The IRI sameAs edges of a triples DF → (entity, canonical):
+    every node of an undirected sameAs component, labelled with its
+    lexicographic-min member.
+
+    At most ``bgpq._DRIVER_EDGES`` edges are collected once and labelled
+    on the driver by union-find.  Above that bound ``bgpq._closure``
+    runs over sameAs in both directions and each node takes the min it
+    reaches: Σ|component|² reach rows and diameter + 1 rounds (cap 64,
+    then ValueError), where min-label propagation with pointer jumping
+    needs O(edges) rows and O(log diameter) rounds — the price of one
+    fixpoint loop, paid only on a relation too big for the driver."""
+    rows = triples.filter(F.col("pred").isin(*SAMEAS_PREDICATES)
+                          & (F.col("obj_kind") == "iri"))
+    edges = bgpq._fits(rows.select("subj", "obj").distinct())
+    if edges is None:
+        # checkpointed: every round steps over the rows again
+        return (bgpq._closure(rows.localCheckpoint(), _BOTH_WAYS, None,
+                              reflexive=False)
+                .groupBy(F.col("seed").alias("entity"))
+                .agg(F.min("n").alias("canonical")))
+    return triples.sparkSession.createDataFrame(
+        list(_min_labels(edges).items()), "entity string, canonical string")
 
 
-def link_entities(triples: DataFrame,
-                  max_broadcast_rows: int | None = 10_000_000) -> DataFrame:
+def link_entities(triples: DataFrame) -> DataFrame:
     """Rewrite subj/obj to canonical entity IRIs.
 
     The cluster map is usually tiny relative to the corpus (only
     entities participating in sameAs edges); broadcast it so the
     100 TB triples table is never shuffled — two broadcast hash joins,
-    zero exchanges on the big side.
-
-    ``max_broadcast_rows`` guards the broadcast: above it (~400 MB of
-    IRI pairs, the practical executor-memory ceiling long before
-    spark.sql.autoBroadcastJoinThreshold matters) the joins fall back
-    to shuffle hash joins — slower, but they can't OOM an executor.
-    Pass None to force the broadcast unconditionally.
+    zero exchanges on the big side.  Above ``_MAX_BROADCAST_ROWS`` the
+    joins fall back to shuffle hash joins — slower, but they can't OOM
+    an executor.
     """
     cmap = sameas_clusters(triples)
     side = F.broadcast
-    if max_broadcast_rows is not None:
-        # the CC fixpoint materialized `cmap` via localCheckpoint,
-        # so this count reuses that work rather than recomputing
-        if cmap.count() > max_broadcast_rows:
-            side = lambda df: df.hint("shuffle_hash")  # noqa: E731
+    if cmap.count() > _MAX_BROADCAST_ROWS:
+        side = lambda df: df.hint("shuffle_hash")  # noqa: E731
     out = (
         triples.join(side(cmap), triples["subj"] == cmap["entity"], "left")
         .withColumn("subj", F.coalesce("canonical", "subj"))

@@ -9,8 +9,10 @@ to parallelism.
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark.logger import PySparkLogger
 from pyspark.sql import SparkSession
 
 
@@ -68,4 +70,9 @@ def get_spark(
     jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
         "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
         jvm.org.apache.logging.log4j.Level.ERROR)
+    # pyspark logs every AnalysisException it raises, stack trace and
+    # all, even one sparql._scoped reports as a SparqlSyntaxError; the
+    # loggers must be PySparkLoggers, whose exception() takes errorClass=
+    for name in ("SQLQueryContextLogger", "DataFrameQueryContextLogger"):
+        PySparkLogger.getLogger(name).setLevel(logging.CRITICAL)
     return spark

@@ -1000,13 +1000,13 @@ def _where(triples: DataFrame, g, buckets=None, select=None,
             for sq in g["subqueries"]]
     with _scoped(triples, "WHERE"):
         if g["union"] is not None:
-            arms = [bgp_select(triples, arm, select=select,
-                               buckets=buckets, meta=meta)
+            # an arm leaves the variables it does not bind unbound (NULL)
+            arms = [bgp_select(triples, arm, buckets=buckets, meta=meta)
                     for arm in g["union"]]
             out = arms[0]
             for nxt in arms[1:]:
-                out = out.unionByName(nxt, allowMissingColumns=meta)
-            return out.distinct()
+                out = out.unionByName(nxt, allowMissingColumns=True)
+            return (out if select is None else out.select(*select)).distinct()
         return bgp_select(
             triples, g["patterns"], select=select,
             filters=[F.expr(e) for e in g["filters"]],

@@ -1,7 +1,9 @@
 """Seed-restricted property-path evaluation (pipeline/bgpq.py):
 a closure path with a CONSTANT endpoint iterates a frontier from the
 seed instead of materializing the full closure — work proportional to
-the reachable component, never the whole edge relation.  Reference
+the reachable component, never the whole edge relation.  A closure
+whose edge relation fits ``bgpq._DRIVER_EDGES`` is solved on the
+driver; tests set it to 0 to cover the distributed loop too.  Reference
 semantics: SPARQL 1.1 §9.3 (ALP evaluation is defined seed-first);
 the reference gem delegates paths to the sparql gem
 (suite_spec.rb:51-53)."""
@@ -30,37 +32,64 @@ def two_components(spark):
         rows, "subj string, pred string, obj string")
 
 
-def test_seeded_plus_bound_subject(spark, two_components):
-    got = {r["y"] for r in bgp_select(
-        two_components,
-        [("a", one_or_more("p"), var("y"))]).collect()}
-    assert got == {"b", "c"}
-    # the BFS never left the 3-node chain: 2 reachable nodes, and one
-    # extra empty round to detect the fixpoint
-    assert bgpq.last_seeded_stats["visited_rows"] == 2
-    assert bgpq.last_seeded_stats["rounds"] <= 3
+def _distributed_rounds(monkeypatch):
+    """Force the distributed closure loop and record, per round, the
+    (seed, n) rows it steps to — what a seeded closure explores."""
+    monkeypatch.setattr(bgpq, "_DRIVER_EDGES", 0)
+    rounds, real = [], bgpq._step
+
+    def step(triples, path, frontier):
+        out = real(triples, path, frontier)
+        closure = isinstance(path, bgpq.Path) and path.op in ("plus", "star")
+        if frontier is not None and not closure:
+            rounds.append({tuple(r) for r in out.collect()})
+        return out
+
+    monkeypatch.setattr(bgpq, "_step", step)
+    return rounds
 
 
-def test_seeded_plus_bound_object(spark, two_components):
+def test_seeded_plus_bound_subject(spark, two_components, monkeypatch):
+    def reach():
+        return {r["y"] for r in bgp_select(
+            two_components,
+            [("a", one_or_more("p"), var("y"))]).collect()}
+
+    assert reach() == {"b", "c"}
+    rounds = _distributed_rounds(monkeypatch)
+    assert reach() == {"b", "c"}
+    # the BFS never left the 3-node chain for the dense side: 2
+    # reachable nodes, and one extra empty round to detect the fixpoint
+    assert set().union(*rounds) == {("a", "b"), ("a", "c")}
+    assert len(rounds) <= 3
+
+
+def test_seeded_plus_bound_object(spark, two_components, monkeypatch):
     # bound OBJECT seeds the inverted path: who reaches c via p+?
-    got = {r["x"] for r in bgp_select(
-        two_components,
-        [(var("x"), one_or_more("p"), "c")]).collect()}
-    assert got == {"a", "b"}
-    assert bgpq.last_seeded_stats["visited_rows"] == 2
+    def reach():
+        return {r["x"] for r in bgp_select(
+            two_components,
+            [(var("x"), one_or_more("p"), "c")]).collect()}
+
+    assert reach() == {"a", "b"}
+    rounds = _distributed_rounds(monkeypatch)
+    assert reach() == {"a", "b"}
+    assert set().union(*rounds) == {("c", "b"), ("c", "a")}
 
 
-def test_seeded_star_includes_seed_identity(spark, two_components):
-    got = {r["y"] for r in bgp_select(
-        two_components,
-        [("a", zero_or_more("p"), var("y"))]).collect()}
-    assert got == {"a", "b", "c"}
-    # a term with NO edges still relates to itself over p* (SPARQL
-    # zero-length-path semantics for a bound term)
-    got = {r["y"] for r in bgp_select(
-        two_components,
-        [("nowhere", zero_or_more("p"), var("y"))]).collect()}
-    assert got == {"nowhere"}
+def test_seeded_star_includes_seed_identity(spark, two_components,
+                                            monkeypatch):
+    def reach(seed):
+        return {r["y"] for r in bgp_select(
+            two_components,
+            [(seed, zero_or_more("p"), var("y"))]).collect()}
+
+    for bound in (bgpq._DRIVER_EDGES, 0):
+        monkeypatch.setattr(bgpq, "_DRIVER_EDGES", bound)
+        assert reach("a") == {"a", "b", "c"}
+        # a term with NO edges still relates to itself over p* (SPARQL
+        # zero-length-path semantics for a bound term)
+        assert reach("nowhere") == {"nowhere"}
 
 
 def test_seeded_zero_or_one(spark, two_components):
@@ -163,44 +192,44 @@ def test_group_level_filters(spark, two_components):
     assert {r["s"] for r in rows} == {"a", "c"}
 
 
-def test_values_seeded_closure(spark, two_components):
+def test_values_seeded_closure(spark, two_components, monkeypatch):
     """VALUES fixing one endpoint of a closure path seeds the frontier
     from the literal set — the constant-endpoint optimization
     generalized to bound sets; the BFS never explores the dense
     component."""
-    from rdf_rdfa_spark.pipeline.bgpq import bgp_select, var
+    def reach(var_name, cells):
+        return {(r["x"], r["y"]) for r in bgp_select(
+            two_components,
+            [(var("x"), one_or_more("p"), var("y"))],
+            values=([var_name], [(c,) for c in cells]),
+        ).collect()}
 
-    rows = bgp_select(
-        two_components,
-        [(var("x"), one_or_more("p"), var("y"))],
-        values=(["x"], [("a",)]),
-    ).collect()
-    assert {(r["x"], r["y"]) for r in rows} == {("a", "b"), ("a", "c")}
-    assert bgpq.last_seeded_stats["visited_rows"] == 2
-    # object-side VALUES runs the inverted path
-    rows = bgp_select(
-        two_components,
-        [(var("x"), one_or_more("p"), var("y"))],
-        values=(["y"], [("c",)]),
-    ).collect()
-    assert {(r["x"], r["y"]) for r in rows} == {("a", "c"), ("b", "c")}
-    assert bgpq.last_seeded_stats["visited_rows"] == 2
-    # multi-value seed set
-    rows = bgp_select(
-        two_components,
-        [(var("x"), one_or_more("p"), var("y"))],
-        values=(["x"], [("a",), ("b",)]),
-    ).collect()
-    assert {(r["x"], r["y"]) for r in rows} == {
-        ("a", "b"), ("a", "c"), ("b", "c")}
+    want = {"a": {("a", "b"), ("a", "c")},
+            # object-side VALUES runs the inverted path
+            "c": {("a", "c"), ("b", "c")},
+            # multi-value seed set
+            "ab": {("a", "b"), ("a", "c"), ("b", "c")}}
+    assert reach("x", "a") == want["a"]
+    assert reach("y", "c") == want["c"]
+    assert reach("x", "ab") == want["ab"]
+    rounds = _distributed_rounds(monkeypatch)
+    assert reach("x", "a") == want["a"]
+    assert set().union(*rounds) == {("a", "b"), ("a", "c")}
+    rounds.clear()
+    assert reach("y", "c") == want["c"]
+    assert set().union(*rounds) == {("c", "b"), ("c", "a")}
 
 
-def test_sparql_values_seeded_path(spark, two_components):
+def test_sparql_values_seeded_path(spark, two_components, monkeypatch):
     from rdf_rdfa_spark.pipeline.sparql import sparql
 
-    got = {(r["x"], r["y"]) for r in sparql(two_components, """
-        SELECT ?x ?y WHERE {
-          ?x <p>+ ?y . VALUES ?x { "a" }
-        }""").collect()}
-    assert got == {("a", "b"), ("a", "c")}
-    assert bgpq.last_seeded_stats["visited_rows"] == 2
+    def reach():
+        return {(r["x"], r["y"]) for r in sparql(two_components, """
+            SELECT ?x ?y WHERE {
+              ?x <p>+ ?y . VALUES ?x { "a" }
+            }""").collect()}
+
+    assert reach() == {("a", "b"), ("a", "c")}
+    rounds = _distributed_rounds(monkeypatch)
+    assert reach() == {("a", "b"), ("a", "c")}
+    assert set().union(*rounds) == {("a", "b"), ("a", "c")}

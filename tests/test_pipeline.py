@@ -13,7 +13,8 @@ from pyspark.sql import functions as F
 from rdf_rdfa_spark import corpus
 from rdf_rdfa_spark.pipeline.expand import entail
 from rdf_rdfa_spark.pipeline.extract import extract_triples
-from rdf_rdfa_spark.pipeline.link import connected_components
+from rdf_rdfa_spark.pipeline.link import (
+    SAMEAS_PREDICATES, _BOTH_WAYS, sameas_clusters)
 from rdf_rdfa_spark.pipeline import bgpq, materialize
 from rdf_rdfa_spark.rdfa.terms import bnode, iri, literal
 from rdf_rdfa_spark.rdfa.vocab import tbox_closures
@@ -90,27 +91,38 @@ def test_entail_equals_fixpoint(spark):
     assert ("u", "p3", "v") in fast
 
 
-def test_connected_components(spark):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("d", "e"), ("f", "f")],
-        "src string, dst string",
-    )
-    cc = {r["node"]: r["component"] for r in connected_components(edges).collect()}
-    assert cc["a"] == cc["b"] == cc["c"] == "a"
-    assert cc["d"] == cc["e"] == "d"
-    assert cc["f"] == "f"
+def _sameas(spark, edges):
+    """owl:sameAs triples between IRIs, one per (src, dst) edge."""
+    return spark.createDataFrame(
+        [(a, SAMEAS_PREDICATES[0], b, "iri") for a, b in edges],
+        "subj string, pred string, obj string, obj_kind string")
+
+
+def _clusters(triples):
+    return {r["entity"]: r["canonical"]
+            for r in sameas_clusters(triples).collect()}
+
+
+def test_connected_components(spark, monkeypatch):
+    """sameAs clusters are the undirected components, each labelled by
+    its lexicographic-min member, on the driver and distributed."""
+    triples = _sameas(spark, [("a", "b"), ("c", "b"), ("d", "e"),
+                              ("f", "f")]).unionByName(spark.createDataFrame(
+        [("a", SAMEAS_PREDICATES[1], "lit", "literal"),
+         ("a", "http://e/p", "z", "iri")],
+        "subj string, pred string, obj string, obj_kind string"))
+    want = {"a": "a", "b": "a", "c": "a", "d": "d", "e": "d", "f": "f"}
+    assert _clusters(triples) == want
+    monkeypatch.setattr(bgpq, "_DRIVER_EDGES", 0)
+    assert _clusters(triples) == want
 
 
 def test_connected_components_long_chain(spark):
-    """Pointer-jumping convergence: a 120-node path graph (diameter
-    119) must fully converge well inside max_iter=20 — pure
-    neighbor-min would need 119 rounds — and still label every node
+    """A 120-node path graph (diameter 119, beyond the distributed
+    loop's 64-round cap) clusters on the driver, every node labelled
     with the lexicographic-min member ('n000')."""
-    edges = spark.createDataFrame(
-        [("n%03d" % i, "n%03d" % (i + 1)) for i in range(119)],
-        "src string, dst string",
-    )
-    cc = {r["node"]: r["component"] for r in connected_components(edges).collect()}
+    cc = _clusters(_sameas(spark, [("n%03d" % (i + 1), "n%03d" % i)
+                                   for i in range(119)]))
     assert len(cc) == 120
     assert set(cc.values()) == {"n000"}
 
@@ -128,15 +140,18 @@ _ONE_ROUND = {
         spark.createDataFrame([(a, SPO, b) for a, b in _CHAIN],
                               "sub string, rel string, sup string"),
         max_iters=1),
-    "connected_components": lambda spark: connected_components(
-        spark.createDataFrame(_CHAIN, "src string, dst string"), max_iter=1),
+    # sameas_clusters' closure above the driver bound
+    "connected_components": lambda spark: bgpq._closure(
+        _sameas(spark, _CHAIN), _BOTH_WAYS, None, reflexive=False,
+        max_iters=1),
 }
 
 
 @pytest.mark.parametrize("loop", list(_ONE_ROUND))
-def test_fixpoint_loop_raises_at_cap(spark, loop):
+def test_fixpoint_loop_raises_at_cap(spark, monkeypatch, loop):
     """A loop that hits its iteration cap fails loudly instead of
-    returning a partial answer."""
+    returning a partial answer (closures: the distributed branch)."""
+    monkeypatch.setattr(bgpq, "_DRIVER_EDGES", 0)
     with pytest.raises(ValueError, match="did not converge"):
         _ONE_ROUND[loop](spark)
 
@@ -159,11 +174,11 @@ def test_link_entities_leaves_session_conf_alone(spark, monkeypatch):
     assert calls == []
 
 
-def test_link_entities_broadcast_and_shuffle_paths(spark):
+def test_link_entities_broadcast_and_shuffle_paths(spark, monkeypatch):
     """link_entities must rewrite identically whether the cluster map
     is broadcast (default) or falls back to a shuffle join above the
-    max_broadcast_rows guard."""
-    from rdf_rdfa_spark.pipeline.link import link_entities
+    _MAX_BROADCAST_ROWS guard."""
+    from rdf_rdfa_spark.pipeline import link
 
     rows = [
         ("u1", "http://e/a", "http://www.w3.org/2002/07/owl#sameAs",
@@ -179,8 +194,9 @@ def test_link_entities_broadcast_and_shuffle_paths(spark):
         return sorted((r["subj"], r["pred"], r["obj"])
                       for r in df.collect())
 
-    broadcast = canon(link_entities(triples))
-    shuffled = canon(link_entities(triples, max_broadcast_rows=0))
+    broadcast = canon(link.link_entities(triples))
+    monkeypatch.setattr(link, "_MAX_BROADCAST_ROWS", 0)
+    shuffled = canon(link.link_entities(triples))
     assert broadcast == shuffled
     # a and b collapse to the lexicographic min (http://e/a)
     assert ("http://e/a", "http://e/p", "val") in broadcast
@@ -1111,10 +1127,11 @@ def test_bgp_construct(spark):
     assert got2 == {("a", "sameAs", "m1")}
 
 
-def test_path_closure_matches_python_reference(spark):
+def test_path_closure_matches_python_reference(spark, monkeypatch):
     """Free-endpoint p+ vs a pure-Python Warshall reference on three
     pseudo-random graphs (fixed seeds — deterministic), evaluated as
-    one closure over disjoint node names and compared graph by graph."""
+    one closure over disjoint node names and compared graph by graph,
+    on the driver and distributed."""
     import random
 
     from rdf_rdfa_spark.pipeline.bgpq import bgp_select, one_or_more, var
@@ -1128,8 +1145,13 @@ def test_path_closure_matches_python_reference(spark):
     triples = spark.createDataFrame(
         [(s, "p", o) for edges in graphs.values() for s, o in edges],
         "subj string, pred string, obj string")
-    got = {(r["s"], r["o"]) for r in bgp_select(
-        triples, [(var("s"), one_or_more("p"), var("o"))]).collect()}
+    def closure():
+        return {(r["s"], r["o"]) for r in bgp_select(
+            triples, [(var("s"), one_or_more("p"), var("o"))]).collect()}
+
+    got = closure()
+    monkeypatch.setattr(bgpq, "_DRIVER_EDGES", 0)
+    assert closure() == got
     for seed, edges in graphs.items():
         want = set(edges)
         grew = True

@@ -90,6 +90,36 @@ def test_union(kg):
         }""").count() == 4  # a,b,c,m1
 
 
+def test_union_arms_bind_different_variables(kg):
+    # an arm that does not bind a variable leaves it unbound (NULL)
+    union = "{ ?d s:mirror ?v } UNION { ?d s:next ?w }"
+    rows = sparql(kg, P + "SELECT * WHERE { %s }" % union).collect()
+    assert {(r["d"], r["v"], r["w"]) for r in rows} == {
+        ("a", "m1", None), ("a", None, "b"), ("b", None, "c")}
+    rows = sparql(kg, P + "SELECT ?d ?v WHERE { %s }" % union).collect()
+    assert {tuple(r) for r in rows} == {("a", "m1"), ("a", None),
+                                        ("b", None)}
+    # a projected variable that no arm binds is still an error
+    with pytest.raises(SparqlSyntaxError, match=r"\?nope\b"):
+        sparql(kg, P + "SELECT ?d ?nope WHERE { %s }" % union)
+
+
+def test_reported_analysis_error_is_not_logged(kg, capfd, monkeypatch):
+    """An unresolved variable is reported once, as a SparqlSyntaxError,
+    and pyspark does not also log the analyzer's error on stderr."""
+    import sys
+
+    from pyspark.logger import PySparkLogger
+
+    for name in ("SQLQueryContextLogger", "DataFrameQueryContextLogger"):
+        # point each handler at the stderr this test captures
+        for handler in PySparkLogger.getLogger(name).handlers:
+            monkeypatch.setattr(handler, "stream", sys.stderr)
+    with pytest.raises(SparqlSyntaxError, match=r"\?nope\b"):
+        sparql(kg, "SELECT ?s WHERE { ?s ?p ?o } ORDER BY ?nope")
+    assert "UNRESOLVED_COLUMN" not in capfd.readouterr().err
+
+
 def test_values_bind_regex_exists(kg):
     rows = sparql(kg, P + """
         SELECT ?d ?ll WHERE {
