@@ -48,11 +48,9 @@ def lit(value: str, lang: str | None = None,
 # bound OBJECT runs the inverted path forward.  A ``None`` frontier is
 # unseeded: a step from it yields the path's whole edge relation, so a
 # pattern with two free endpoints runs through the same evaluator.
-# Closures (p+ / p*) are solved on the driver when the inner path's edge
-# relation fits in ``_DRIVER_EDGES`` rows; a larger one iterates one
-# semi-naive loop to fixpoint: one frontier ⋈ edges shuffle and one
-# anti-join against the visited set per round, lineage truncated per
-# round with a lazy localCheckpoint.
+# Closures (p+ / p*) are solved on the driver when they fit (``_closure``),
+# else by one semi-naive loop, lineage truncated per round with a lazy
+# localCheckpoint.
 
 class Path:
     __slots__ = ("op", "parts")
@@ -60,6 +58,13 @@ class Path:
     def __init__(self, op: str, parts):
         self.op = op
         self.parts = parts
+
+    def __eq__(self, other):  # by value: ^(…) re-inverts every round
+        return isinstance(other, Path) and (
+            self.op, self.parts) == (other.op, other.parts)
+
+    def __hash__(self):
+        return hash((self.op, self.parts))
 
 
 def seq(*parts) -> Path:
@@ -115,11 +120,10 @@ def negated(*preds, inverse=()) -> Path:
     return parts[0] if len(parts) == 1 else Path("alt", tuple(parts))
 
 
-#: the most rows a closure collects to solve on the driver.  On a 4-core
-#: host a million IRI pairs collect in ~4 s and solve in 1.5-6 s with
-#: ~0.8 GB of driver RSS, the cost of a few distributed rounds (each
-#: ~0.6 s of scheduling however few rows it moves)
-_DRIVER_EDGES = 1_000_000
+#: the most rows a closure collects or reaches on the driver: on a
+#: 4-core host 10⁵ IRI pairs collect in ~0.7 s and solve in 0.5-2 s
+#: (~0.2 GB RSS), about two distributed rounds of ~0.6 s scheduling
+_DRIVER_EDGES = 100_000
 
 
 def _invert(path):
@@ -163,11 +167,11 @@ def _identity(triples: DataFrame, frontier) -> DataFrame:
     return nodes.select(F.col("n").alias("seed"), "n")
 
 
-def _step(triples: DataFrame, path, frontier) -> DataFrame:
+def _step(triples: DataFrame, path, frontier, fitted=None) -> DataFrame:
     """Apply ``path`` once from ``frontier`` (seed, n) → (seed, n);
     ``frontier=None`` is unseeded and yields the path's full edge
     relation.  Bare predicates join the frontier against a
-    pred-filtered scan; closures run the fixpoint loop."""
+    pred-filtered scan; closures run ``_closure`` (``fitted``)."""
     if isinstance(path, str) or (isinstance(path, Path)
                                  and path.op == "inv"
                                  and isinstance(path.parts[0], str)):
@@ -178,26 +182,26 @@ def _step(triples: DataFrame, path, frontier) -> DataFrame:
     if not isinstance(path, Path):
         raise TypeError("not a path: %r" % (path,))
     if path.op == "inv":
-        return _step(triples, _invert(path.parts[0]), frontier)
+        return _step(triples, _invert(path.parts[0]), frontier, fitted)
     if path.op == "seq":
         if not path.parts:
             raise ValueError("empty seq path")
         cur = frontier
         for part in path.parts:
-            cur = _step(triples, part, cur)
+            cur = _step(triples, part, cur, fitted)
         return cur
     if path.op == "alt":
-        outs = [_step(triples, p, frontier) for p in path.parts]
+        outs = [_step(triples, p, frontier, fitted) for p in path.parts]
         out = outs[0]
         for nxt in outs[1:]:
             out = out.unionByName(nxt)
         return out.distinct()
     if path.op in ("plus", "star"):
         return _closure(triples, path.parts[0], frontier,
-                        reflexive=path.op == "star")
+                        reflexive=path.op == "star", fitted=fitted)
     if path.op == "opt":
         return (_identity(triples, frontier)
-                .unionByName(_step(triples, path.parts[0], frontier))
+                .unionByName(_step(triples, path.parts[0], frontier, fitted))
                 .distinct())
     if path.op in ("neg", "neginv"):
         return _hop(frontier,
@@ -207,20 +211,21 @@ def _step(triples: DataFrame, path, frontier) -> DataFrame:
 
 
 def _fits(df: DataFrame):
-    """``df``'s rows when it has at most ``_DRIVER_EDGES`` of them (one
-    bounded collect), else None."""
+    """``df``'s rows if at most ``_DRIVER_EDGES``, else None (one bounded
+    collect: a relation too big ships ``_DRIVER_EDGES + 1`` rows)."""
     rows = df.limit(_DRIVER_EDGES + 1).collect()
     return rows if len(rows) <= _DRIVER_EDGES else None
 
 
-def _reach(spark, edges, starts) -> DataFrame:
-    """(seed, n) rows one or more ``edges`` steps from the frontier
-    ``starts``, by one driver BFS per distinct start node."""
+def _reach(spark, edges, starts):
+    """(seed, n) rows one or more ``edges`` steps from ``starts``, by a
+    driver BFS per start node; None once rows or BFS sets pass
+    ``_DRIVER_EDGES`` (few edges can reach quadratically many pairs)."""
     succ: dict = {}
     for s, o in edges:
         succ.setdefault(s, []).append(o)
     memo: dict = {}
-    out = set()
+    out, held = set(), 0
     for seed, start in starts:
         if start not in memo:
             seen, todo = set(), [start]
@@ -230,52 +235,53 @@ def _reach(spark, edges, starts) -> DataFrame:
                         seen.add(o)
                         todo.append(o)
             memo[start] = seen
+            held += len(seen)
         out.update((seed, n) for n in memo[start])
+        if max(len(out), held) > _DRIVER_EDGES:
+            return None
     return spark.createDataFrame(list(out), "seed string, n string")
 
 
 def _closure(triples: DataFrame, inner, seeds, reflexive: bool,
-             max_iters: int = 64) -> DataFrame:
+             max_iters: int = 64, fitted=None) -> DataFrame:
     """``inner``+ (``inner``* when ``reflexive``) from ``seeds``.
 
-    When the inner edge relation and the frontier each fit in
-    ``_DRIVER_EDGES`` rows, both are collected once and solved on the
-    driver (unseeded, every edge source is a start node): no rounds,
-    but the whole edge relation is read, whatever the seeds.  Otherwise
-    semi-naive BFS: per round one frontier ⋈ edges shuffle plus an
-    anti-join against the visited set — only here is the work ∝ edges
-    of the reachable component, over rounds = its diameter + 1 (web-KG
-    diameters are small).  Unseeded (``seeds=None``), the first round is
-    the edge relation itself."""
+    If the inner edge relation, the frontier and the rows reached each
+    fit in ``_DRIVER_EDGES``, it is solved on the driver: no rounds, but
+    the whole edge relation is read, whatever the seeds.  Otherwise
+    semi-naive BFS, whose work is ∝ edges of the reachable component
+    over its diameter + 1 rounds.  ``fitted`` maps each inner path this
+    evaluation has sized to its edges (None: too big), so a closure
+    nested in another's rounds is sized once, not once per round."""
     if seeds is not None:
         seeds = seeds.distinct().localCheckpoint(eager=False)
-    edges = _fits(_step(triples, inner, None))
-    starts = None
-    if edges is not None:
-        starts = ([(s, s) for s in {s for s, _o in edges}]
-                  if seeds is None else _fits(seeds))
-    if starts is not None:
-        visited = _reach(triples.sparkSession, edges, starts)
-    else:
-        visited = _semi_naive(triples, inner, seeds, max_iters)
+    fitted = {} if fitted is None else fitted
+    if inner not in fitted:
+        fitted[inner] = _fits(_step(triples, inner, None, fitted))
+    edges = fitted[inner]
+    starts = None if edges is None else (
+        {(s, s) for s, _o in edges} if seeds is None else _fits(seeds))
+    visited = (None if starts is None
+               else _reach(triples.sparkSession, edges, starts))
+    if visited is None:
+        visited = _semi_naive(triples, inner, seeds, max_iters, fitted)
     if reflexive:
-        # zero-length component: a SEED relates to itself (per the
-        # SPARQL zero-length-path semantics for a bound term — note
-        # this holds even when the term has no edges in the graph,
-        # where the unseeded all-nodes evaluation would drop it)
+        # zero-length: a SEED relates to itself, even without edges
+        # (SPARQL zero-length-path semantics for a bound term)
         visited = visited.unionByName(_identity(triples, seeds)).distinct()
     return visited
 
 
-def _semi_naive(triples: DataFrame, inner, seeds,
-                max_iters: int) -> DataFrame:
-    """The distributed closure loop; raises ValueError when the
-    frontier still grows after ``max_iters`` rounds."""
+def _semi_naive(triples: DataFrame, inner, seeds, max_iters: int,
+                fitted=None) -> DataFrame:
+    """The distributed closure loop: per round one frontier ⋈ edges
+    shuffle and one anti-join against the visited set (unseeded, round
+    one is the edge relation); ValueError if still growing at the cap."""
     visited = None
     frontier = seeds
     n_new = 1
     for _ in range(max_iters):
-        step = _step(triples, inner, frontier)
+        step = _step(triples, inner, frontier, fitted)
         if visited is not None:
             step = step.join(visited, ["seed", "n"], "left_anti")
         step = step.localCheckpoint(eager=False)

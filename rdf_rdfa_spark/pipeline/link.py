@@ -7,7 +7,7 @@ owl:sameAs/schema:sameAs edges.  An edge relation that fits on the
 driver (``bgpq._DRIVER_EDGES`` rows) is collected once and labelled by
 union-find, with no Spark round — SparkER and MinoanER (EDBT 2019)
 likewise cluster on the driver once the graph fits.  A larger one runs
-``bgpq._closure``, the library's one distributed fixpoint loop.
+``bgpq._semi_naive``, the library's one distributed fixpoint loop.
 `link_entities` rewrites subj/obj to each cluster's canonical
 (lexicographic-min) IRI.
 """
@@ -57,19 +57,20 @@ def sameas_clusters(triples: DataFrame) -> DataFrame:
     lexicographic-min member.
 
     At most ``bgpq._DRIVER_EDGES`` edges are collected once and labelled
-    on the driver by union-find.  Above that bound ``bgpq._closure``
-    runs over sameAs in both directions and each node takes the min it
-    reaches: Σ|component|² reach rows and diameter + 1 rounds (cap 64,
-    then ValueError), where min-label propagation with pointer jumping
-    needs O(edges) rows and O(log diameter) rounds — the price of one
-    fixpoint loop, paid only on a relation too big for the driver."""
+    on the driver by union-find.  Above that bound ``bgpq._semi_naive``
+    (``bgpq._closure``'s distributed loop) steps over sameAs in both
+    directions and each node takes the min it reaches: Σ|component|²
+    reach rows and diameter + 1 rounds (cap 64, then ValueError), where
+    min-label propagation with pointer jumping needs O(edges) rows and
+    O(log diameter) rounds — the price of one fixpoint loop, paid only
+    on a relation too big for the driver."""
     rows = triples.filter(F.col("pred").isin(*SAMEAS_PREDICATES)
                           & (F.col("obj_kind") == "iri"))
     edges = bgpq._fits(rows.select("subj", "obj").distinct())
     if edges is None:
         # checkpointed: every round steps over the rows again
-        return (bgpq._closure(rows.localCheckpoint(), _BOTH_WAYS, None,
-                              reflexive=False)
+        return (bgpq._semi_naive(rows.localCheckpoint(), _BOTH_WAYS, None,
+                                 max_iters=64)
                 .groupBy(F.col("seed").alias("entity"))
                 .agg(F.min("n").alias("canonical")))
     return triples.sparkSession.createDataFrame(
@@ -79,29 +80,19 @@ def sameas_clusters(triples: DataFrame) -> DataFrame:
 def link_entities(triples: DataFrame) -> DataFrame:
     """Rewrite subj/obj to canonical entity IRIs.
 
-    The cluster map is usually tiny relative to the corpus (only
-    entities participating in sameAs edges); broadcast it so the
-    100 TB triples table is never shuffled — two broadcast hash joins,
-    zero exchanges on the big side.  Above ``_MAX_BROADCAST_ROWS`` the
-    joins fall back to shuffle hash joins — slower, but they can't OOM
-    an executor.
-    """
+    The cluster map (only entities in sameAs edges) is usually tiny
+    next to the corpus, so two broadcast hash joins never shuffle the
+    triples table.  Above ``_MAX_BROADCAST_ROWS`` they fall back to
+    shuffle hash joins — slower, but they can't OOM an executor."""
     cmap = sameas_clusters(triples)
     side = F.broadcast
     if cmap.count() > _MAX_BROADCAST_ROWS:
         side = lambda df: df.hint("shuffle_hash")  # noqa: E731
-    out = (
-        triples.join(side(cmap), triples["subj"] == cmap["entity"], "left")
-        .withColumn("subj", F.coalesce("canonical", "subj"))
-        .drop("entity", "canonical")
-    )
-    cmap2 = cmap.withColumnRenamed("entity", "entity2").withColumnRenamed(
-        "canonical", "canonical2")
-    out = (
-        out.join(side(cmap2),
-                 (out["obj"] == cmap2["entity2"]) & (out["obj_kind"] == "iri"),
-                 "left")
-        .withColumn("obj", F.coalesce("canonical2", "obj"))
-        .drop("entity2", "canonical2")
-    )
-    return out
+    out = (triples.join(side(cmap), triples["subj"] == cmap["entity"], "left")
+           .withColumn("subj", F.coalesce("canonical", "subj"))
+           .drop("entity", "canonical"))
+    obj = cmap.toDF("entity2", "canonical2")
+    return (out.join(side(obj), (out["obj"] == obj["entity2"])
+                     & (out["obj_kind"] == "iri"), "left")
+            .withColumn("obj", F.coalesce("canonical2", "obj"))
+            .drop("entity2", "canonical2"))

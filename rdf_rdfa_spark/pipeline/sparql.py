@@ -982,6 +982,12 @@ def _apply_modifiers(out: DataFrame, q) -> DataFrame:
     return out
 
 
+def _binds(patterns) -> set:
+    """The variables a plain pattern group binds: its ``var`` terms."""
+    return {t[1] for pat in patterns for t in pat
+            if isinstance(t, tuple) and t[0] == "var"}
+
+
 def _where(triples: DataFrame, g, buckets=None, select=None,
            meta=False) -> DataFrame:
     """A parsed WHERE group → its DISTINCT solutions (``select``
@@ -1000,8 +1006,12 @@ def _where(triples: DataFrame, g, buckets=None, select=None,
             for sq in g["subqueries"]]
     with _scoped(triples, "WHERE"):
         if g["union"] is not None:
-            # an arm leaves the variables it does not bind unbound (NULL)
-            arms = [bgp_select(triples, arm, buckets=buckets, meta=meta)
+            # an arm projects the selected variables it binds and
+            # leaves the rest unbound (NULL); the last select still
+            # raises for a variable no arm binds
+            arms = [bgp_select(triples, arm, buckets=buckets, meta=meta,
+                               select=None if select is None else
+                               [v for v in select if v in _binds(arm)])
                     for arm in g["union"]]
             out = arms[0]
             for nxt in arms[1:]:

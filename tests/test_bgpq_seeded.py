@@ -38,8 +38,8 @@ def _distributed_rounds(monkeypatch):
     monkeypatch.setattr(bgpq, "_DRIVER_EDGES", 0)
     rounds, real = [], bgpq._step
 
-    def step(triples, path, frontier):
-        out = real(triples, path, frontier)
+    def step(triples, path, frontier, fitted=None):
+        out = real(triples, path, frontier, fitted)
         closure = isinstance(path, bgpq.Path) and path.op in ("plus", "star")
         if frontier is not None and not closure:
             rounds.append({tuple(r) for r in out.collect()})
@@ -124,6 +124,61 @@ def test_seeded_seq_of_closures(spark, two_components):
         two_components,
         [("a", seq(one_or_more("p"), "q"), var("y"))]).collect()}
     assert got == {"z"}
+
+
+def _counting(monkeypatch, name):
+    """Wrap ``bgpq.<name>`` so the test sees how often it is called."""
+    calls, real = [], getattr(bgpq, name)
+
+    def wrapped(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(bgpq, name, wrapped)
+    return calls
+
+
+def test_dense_closure_falls_back_to_distributed_loop(spark, monkeypatch):
+    """A few edges can reach quadratically many pairs: a 6-cycle's 6
+    edges fit a bound of 10, its 36 closure rows do not, so the driver
+    BFS gives up and the distributed loop answers instead."""
+    nodes = ["c%d" % i for i in range(6)]
+    cycle = spark.createDataFrame(
+        [(n, "p", nodes[(i + 1) % 6]) for i, n in enumerate(nodes)],
+        "subj string, pred string, obj string")
+    monkeypatch.setattr(bgpq, "_DRIVER_EDGES", 10)
+    loops = _counting(monkeypatch, "_semi_naive")
+    got = {(r["x"], r["y"]) for r in bgp_select(
+        cycle, [(var("x"), one_or_more("p"), var("y"))]).collect()}
+    assert got == {(a, b) for a in nodes for b in nodes}
+    assert len(loops) == 1
+    # seeded, the 6 rows it reaches fit: solved on the driver
+    got = {r["y"] for r in bgp_select(
+        cycle, [("c0", one_or_more("p"), var("y"))]).collect()}
+    assert got == set(nodes)
+    assert len(loops) == 1
+
+
+@pytest.mark.parametrize("bound", ["default", 0])
+def test_nested_closure_sized_once(spark, monkeypatch, bound):
+    """(p+/q)+ runs one outer round per q hop; its nested p+ decides
+    whether its edges fit once, not once per outer round."""
+    chain = ["x%d" % i for i in range(7)]
+    triples = spark.createDataFrame(
+        [(a, "pq"[i % 2], b) for i, (a, b) in enumerate(zip(chain,
+                                                              chain[1:]))],
+        "subj string, pred string, obj string")
+    if bound == 0:
+        monkeypatch.setattr(bgpq, "_DRIVER_EDGES", 0)
+    probes = _counting(monkeypatch, "_fits")
+    got = {(r["x"], r["y"]) for r in bgp_select(
+        triples,
+        [(var("x"), one_or_more(seq(one_or_more("p"), "q")),
+          var("y"))]).collect()}
+    evens = chain[::2]
+    assert got == {(a, b) for i, a in enumerate(evens) for b in evens[i + 1:]}
+    # one probe for the nested p+, one for the outer closure's edges
+    assert len(probes) == 2
 
 
 def _ask(triples, patterns) -> bool:

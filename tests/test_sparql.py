@@ -2,6 +2,8 @@
 the declarative bgpq operators; semantics verified against hand-built
 bgp_select calls and known answers."""
 
+import re
+
 import pytest
 
 from rdf_rdfa_spark.pipeline.sparql import SparqlSyntaxError, sparql
@@ -99,6 +101,11 @@ def test_union_arms_bind_different_variables(kg):
     rows = sparql(kg, P + "SELECT ?d ?v WHERE { %s }" % union).collect()
     assert {tuple(r) for r in rows} == {("a", "m1"), ("a", None),
                                         ("b", None)}
+    # each arm dedups only the projected variables it binds
+    plan = sparql(kg, P + "SELECT ?d WHERE { %s }" % union)._jdf \
+        .queryExecution().optimizedPlan().toString()
+    keys = re.findall(r"Aggregate \[([^\]]*)\]", plan)
+    assert keys and all(re.fullmatch(r"d#\d+", k) for k in keys), plan
     # a projected variable that no arm binds is still an error
     with pytest.raises(SparqlSyntaxError, match=r"\?nope\b"):
         sparql(kg, P + "SELECT ?d ?nope WHERE { %s }" % union)
