@@ -10,8 +10,8 @@ filtered projection of the triples table with its variables as
 columns; patterns join on shared variables (Catalyst then reorders /
 broadcasts as stats dictate — the plan is fully declarative). That is
 exactly how SPARQL engines over columnar stores execute (property
-tables aside), and on the subject-bucketed store a subject-variable
-join prunes to co-located buckets.
+tables aside), and on the subject-bucketed store a constant subject
+scans only its bucket's row groups.
 """
 
 from __future__ import annotations
@@ -375,9 +375,9 @@ def _pattern_df(triples: DataFrame, s_p_o, buckets=None,
 
     ``buckets``: the materialized store's subject-bucketing modulus
     (materialize.store_buckets) — a CONSTANT-subject pattern then also
-    filters the ``bucket`` PARTITION column, so the scan prunes to one
-    bucket directory (1/buckets of the store) before touching a row
-    group.  Point lookups on a 100 TB store read 1/64th of it.
+    filters the ``bucket`` data column.  The filter is pushed to the
+    parquet scan, and since every store file is sorted by bucket, the
+    row-group min/max statistics skip the other buckets' rows.
 
     ``seeded``: {variable: constants} for variables the group's VALUES
     binds to a fixed set; a path endpoint bound that way seeds the

@@ -1,10 +1,11 @@
-"""Partitioned triple store with snapshot manifests and resumable
+"""Subject-bucketed triple store with snapshot manifests and resumable
 ingest (SURVEY.md S10; north_rule stages 4-5).
 
-Layout (parquet; Iceberg-shaped — bucketed on subject so point lookups
-and subject-grouped joins prune partitions):
+Layout (parquet; Iceberg-shaped — rows carry their subject ``bucket``,
+whose row-group stats prune point lookups; no commit shuffles):
 
-    <root>/triples/graph=<output|processor>/bucket=<k>/*.parquet
+    <root>/triples/*.parquet           one file per write task, sorted
+                                       by (graph, bucket, pred, subj)
     <root>/_snapshots/v<N>.json        snapshot N's manifest
     <root>/_snapshots/HEAD             the current snapshot id
 
@@ -28,12 +29,9 @@ from __future__ import annotations
 
 import glob
 import json
-import operator
 import os
 import threading
 import time
-from functools import reduce
-from urllib.parse import unquote
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame, Observation, functions as F
@@ -42,23 +40,33 @@ from pyspark.sql.types import IntegerType, StructField, StructType
 from .extract import extract_triples
 from .schema import PAGES_SCHEMA, TRIPLES_SCHEMA
 
-# the columns and types a directory read of the store infers: the data
-# columns, then the graph/bucket partition columns
+# the columns and types of the store's files: the triple columns, then
+# the subject bucket
 _STORE_SCHEMA = StructType(
     [StructField(f.name, f.dataType) for f in TRIPLES_SCHEMA.fields]
     + [StructField("bucket", IntegerType())])
 
 
 def subject_bucket(subj, buckets: int) -> Column:
-    """The store's subject bucket.  On a literal subject
-    (``F.lit(iri)``) Catalyst constant-folds it, so a filter on it
-    prunes the scan to one bucket directory at planning time."""
-    return F.pmod(F.xxhash64(subj), F.lit(buckets))
+    """The store's subject bucket, an int.  On a literal subject
+    (``F.lit(iri)``) Catalyst constant-folds it, so a filter on it is
+    pushed to the parquet scan, whose row-group statistics skip the
+    other buckets."""
+    return F.pmod(F.xxhash64(subj), F.lit(buckets)).cast("int")
 
 
 def _store_files(tdir: str) -> set:
-    return {os.path.relpath(p, tdir) for p in glob.glob(
-        os.path.join(tdir, "graph=*", "bucket=*", "*.parquet"))}
+    return {os.path.basename(p)
+            for p in glob.glob(os.path.join(tdir, "*.parquet"))}
+
+
+def _flat_layout(root: str, head: dict) -> dict:
+    # a graph=/bucket= directory store reads with NULL graph and
+    # bucket, so every lookup would silently miss
+    if any(os.sep in f for f in head["files"]):
+        raise ValueError("store at %s has the old graph=/bucket= directory "
+                         "layout; rebuild it from its inputs" % root)
+    return head
 
 
 def current_snapshot(root: str) -> int:
@@ -104,8 +112,10 @@ def write_triples(triples: DataFrame, root: str, buckets: int = 64,
     deletes them."""
     started = time.time()
     head = _manifest(root)
+    if mode == "append":
+        _flat_layout(root, head)
     # appending with a different modulus than the store was written
-    # with would leave old rows in old-modulus partition dirs while
+    # with would leave old rows under old-modulus buckets while
     # bucket-pruned queries hash with the new one — silently missing
     # rows.  Refuse up front.
     if mode == "append" and head["buckets"] not in (None, buckets):
@@ -120,16 +130,14 @@ def write_triples(triples: DataFrame, root: str, buckets: int = 64,
     for rel in _store_files(tdir) - live:
         os.remove(os.path.join(tdir, rel))
     counted = Observation()
-    # repartition on the partition key: at most one file per partition
-    # per commit.  sortWithinPartitions(pred, subj) clusters each
-    # file's row groups by predicate, so a pred-filtered scan (every
-    # BGP pattern) skips row groups via min/max stats — the poor man's
-    # z-order for the two columns every query filters on
+    # no shuffle: each task sorts its rows and writes one file.  The
+    # sort clusters row groups by bucket (then predicate), so a
+    # constant-subject scan skips row groups via min/max stats
     (triples.observe(counted, F.count(F.lit(1)).alias("triples"))
      .withColumn("graph", F.coalesce("graph", F.lit("output")))
      .withColumn("bucket", subject_bucket("subj", buckets))
-     .repartition("graph", "bucket").sortWithinPartitions("pred", "subj")
-     .write.mode("append").partitionBy("graph", "bucket").parquet(tdir))
+     .sortWithinPartitions("graph", "bucket", "pred", "subj")
+     .write.mode("append").parquet(tdir))
     stats = {"triples": 0}
     for obs in (counted, *observed):
         try:
@@ -137,6 +145,10 @@ def write_triples(triples: DataFrame, root: str, buckets: int = 64,
         except Py4JJavaError:  # Catalyst pruned an input it proved
             pass               # empty, and the observation with it
     added = _store_files(tdir) - live
+    if not stats["triples"]:  # Spark writes a schema-only file
+        for rel in added:
+            os.remove(os.path.join(tdir, rel))
+        added = set()
     if mode == "overwrite":
         replaces, head["inputs"] = live, []
     n = head["snapshot"] + 1
@@ -170,16 +182,17 @@ _READS_LOCK = threading.Lock()
 
 def read_triples(spark, root: str, snapshot: int | None = None) -> DataFrame:
     """Read the store at HEAD — or TIME-TRAVEL to a snapshot id: only
-    the data files that snapshot's manifest lists are scanned (basePath
-    keeps the graph/bucket partition columns), exactly the Iceberg
-    snapshot-read semantics on this manifest layout.
+    the data files that snapshot's manifest lists are scanned, exactly
+    the Iceberg snapshot-read semantics on this manifest layout.  A
+    store in the old graph=/bucket= directory layout raises
+    ``ValueError``.
 
     The DataFrame is memoized per root on the session and the set of
     live files: Spark gives every file it writes a unique name, so an
     equal set means equal data, and a repeated read skips the file
     listing."""
     tdir = os.path.join(root, "triples")
-    files = _manifest(root, snapshot)["files"]
+    files = _flat_layout(root, _manifest(root, snapshot))["files"]
     if snapshot is not None:
         # compaction physically deletes replaced files, so a
         # pre-compaction snapshot read is PARTIAL (exactly as after an
@@ -190,11 +203,8 @@ def read_triples(spark, root: str, snapshot: int | None = None) -> DataFrame:
     with _READS_LOCK:
         hit = _READS.get(key)
         if hit is None or hit[0] is not spark or hit[1] != live:
-            reader = spark.read.schema(_STORE_SCHEMA)
-            if files:  # an empty store reads as no paths, no basePath
-                reader = reader.option("basePath", tdir)
-            hit = (spark, live,
-                   reader.parquet(*[os.path.join(tdir, f) for f in files]))
+            hit = (spark, live, spark.read.schema(_STORE_SCHEMA).parquet(
+                *[os.path.join(tdir, f) for f in files]))
             _READS.pop(key, None)
             _READS[key] = hit
             if len(_READS) > _READS_MAX:  # forget the longest-unchanged
@@ -252,35 +262,23 @@ def lineage_summary(root: str) -> dict:
             "triples": sum(c.get("triples", 0) for c in chunks)}
 
 
-def compact_store(spark, root: str, max_files_per_partition: int = 1) -> dict:
-    """Small-file compaction: every (graph, bucket) partition holding
-    more than ``max_files_per_partition`` live files is rewritten in ONE
-    Spark job (``read_triples`` plus a partition filter, one
-    ``write_triples`` commit of kind ``compact`` that replaces those
-    files and deletes them after its HEAD swap) — Iceberg's
-    rewrite_data_files + expire_snapshots in one op, so time travel to
-    pre-compaction snapshots becomes partial.  Every ingest commit adds
-    a file per partition; periodic compaction keeps scan task counts
-    flat at crawl scale."""
+def compact_store(spark, root: str) -> dict:
+    """Small-file compaction: rewrite every live file in ONE
+    ``write_triples`` commit of kind ``compact`` that replaces them
+    (Iceberg's rewrite_data_files + expire_snapshots in one op, so time
+    travel to pre-compaction snapshots becomes partial).  Spark packs
+    the small files into read splits and writes one sorted file per
+    split.  When HEAD's own commit added every live file (a fresh
+    ingest, an overwrite, a compaction) it starts no Spark job."""
     head = _manifest(root)
-    by_part: dict[str, list] = {}
-    for rel in head["files"]:
-        by_part.setdefault(os.path.dirname(rel), []).append(rel)
-    oversized = sorted(p for p, fs in by_part.items()
-                       if len(fs) > max_files_per_partition)
-    if not oversized:
-        return {"rewritten_partitions": [], "snapshot": head["snapshot"]}
-    keys = [[kv.split("=", 1)[1] for kv in p.split(os.sep)]
-            for p in oversized]
-    cond = reduce(operator.or_, [
-        (F.col("graph") == unquote(g)) & (F.col("bucket") == int(b))
-        for g, b in keys])
-    replaced = [f for p in oversized for f in by_part[p]]
-    snap = write_triples(read_triples(spark, root).filter(cond), root,
+    live = head["files"]
+    if not set(live) & set(_manifest(root, head.get("parent") or 0)["files"]):
+        return {"snapshot": head["snapshot"], "files_removed": 0,
+                "files_added": 0}
+    snap = write_triples(read_triples(spark, root), root,
                          buckets=head["buckets"], kind="compact",
-                         replaces=replaced)
-    return {"rewritten_partitions": oversized, "snapshot": snap,
-            "files_removed": len(replaced),
+                         replaces=live)
+    return {"snapshot": snap, "files_removed": len(live),
             "files_added": _manifest(root, snap)["files_added"]}
 
 

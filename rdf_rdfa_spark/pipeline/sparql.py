@@ -1121,7 +1121,7 @@ def sparql(triples: DataFrame, query: str, buckets: int | None = None):
 
     ``buckets``: the materialized store's subject-bucketing modulus
     (``materialize.store_buckets(root)``) — constant-subject patterns
-    then prune the scan to one bucket PARTITION directory."""
+    then push a ``bucket`` filter down to the parquet scan."""
     q = _Parser(query).parse_query()
     g = q["group"]
     with _scoped(triples, "the query"):

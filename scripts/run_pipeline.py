@@ -49,7 +49,7 @@ def main():
                     help="rewrite subj/obj to canonical sameAs-cluster IRIs")
     ap.add_argument("--compact", action="store_true",
                     help="compact small store files after materialization "
-                         "(one file per partition, committed as a snapshot)")
+                         "(rewritten as one snapshot)")
     ap.add_argument("--export-pages", action="store_true",
                     help="re-emit the (refined) store as RDFa pages "
                          "(distributed writer, one doc per url)")

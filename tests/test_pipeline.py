@@ -253,6 +253,71 @@ def test_write_triples_counts_empty_input(spark, tmp_path):
     assert head["files"] == [] and head["inputs"] == ["x"]
 
 
+def test_write_triples_sorts_each_file(spark, tmp_path):
+    """A multi-task commit writes one file per task, each sorted by
+    (graph, bucket, pred, subj) with both keys as data columns."""
+    import pyarrow.parquet as pq
+
+    t = spark.createDataFrame(
+        [("u", "http://x/s%d" % (i % 37), "http://x/p%d" % (i % 5), "o",
+          "literal", None, None, "processor" if i % 7 == 0 else None)
+         for i in range(400)],
+        "url string, subj string, pred string, obj string, "
+        "obj_kind string, lang string, datatype string, graph string"
+    ).repartition(4)
+    root = str(tmp_path / "store")
+    materialize.write_triples(t, root, buckets=8)
+    files = materialize._manifest(root)["files"]
+    assert len(files) == 4
+    rows = 0
+    for f in files:
+        tab = pq.read_table(os.path.join(root, "triples", f))
+        keys = list(zip(*(tab.column(c).to_pylist()
+                          for c in ("graph", "bucket", "pred", "subj"))))
+        assert keys == sorted(keys) and len(keys) > 0, f
+        assert {g for g, *_ in keys} <= {"output", "processor"}
+        rows += len(keys)
+    assert rows == 400
+
+
+def test_old_layout_store_is_refused(spark, tmp_path):
+    """A store whose manifest lists graph=/bucket= directory files
+    would read with NULL graph and bucket (every lookup missing), so
+    reads and appends refuse it; an overwrite rebuilds it."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from rdf_rdfa_spark.pipeline.schema import TRIPLES_SCHEMA
+
+    root = str(tmp_path / "store")
+    rel = os.path.join("graph=output", "bucket=0", "part-0.parquet")
+    os.makedirs(os.path.join(root, "triples", os.path.dirname(rel)))
+    pq.write_table(pa.table({c: ["x"] for c in (
+        "url", "subj", "pred", "obj", "obj_kind")}),
+        os.path.join(root, "triples", rel))
+    os.makedirs(os.path.join(root, "_snapshots"))
+    with open(os.path.join(root, "_snapshots", "v1.json"), "w") as fh:
+        json.dump({"snapshot": 1, "parent": None, "kind": "append",
+                   "chunk": None, "buckets": 1, "stats": {},
+                   "files_added": 1, "files_removed": 0,
+                   "files": [rel], "inputs": []}, fh)
+    with open(os.path.join(root, "_snapshots", "HEAD"), "w") as fh:
+        fh.write("1")
+    t = spark.createDataFrame(
+        [("u", "http://x/s", "http://x/p", "o", "literal", None, None,
+          None)], TRIPLES_SCHEMA)
+    with pytest.raises(ValueError, match="rebuild"):
+        materialize.read_triples(spark, root)
+    with pytest.raises(ValueError, match="rebuild"):
+        materialize.write_triples(t, root, buckets=1)
+    assert materialize.current_snapshot(root) == 1
+    materialize.write_triples(t, root, buckets=1, mode="overwrite")
+    assert [r["subj"] for r in materialize.read_triples(
+        spark, root).collect()] == ["http://x/s"]
+
+
 def test_materialize_resumable(spark, sf_dir, tmp_path, monkeypatch):
     pages = corpus.pages_df(spark, sf_dir).limit(60).cache()
     root = str(tmp_path / "store")
@@ -324,26 +389,41 @@ def test_materialize_resumable_refuses_changed_chunk_count(
     assert _rows(spark, root) == _rows(spark, clean)
 
 
-def test_materialize_resumable_one_commit_needs_no_compaction(
-        spark, sf_dir, tmp_path):
-    """A fresh run is one snapshot holding one file per (graph, bucket)
-    directory, so compaction finds nothing to rewrite and starts no
-    Spark job."""
-    pages = corpus.pages_df(spark, sf_dir).limit(60)
-    root = str(tmp_path / "store")
-    materialize.materialize_resumable(pages, root, chunks=4)
-    assert materialize.current_snapshot(root) == 1
-    dirs = [os.path.dirname(f) for f in materialize._manifest(root)["files"]]
-    assert dirs and len(dirs) == len(set(dirs))
-    sc = spark.sparkContext
-    sc.setJobGroup("compact-probe", "compact_store after one commit")
+def _group_jobs(sc, group, fn):
+    """Run ``fn()`` under Spark job group ``group``; returns its jobs'
+    ids and its result."""
+    sc.setJobGroup(group, group)
     try:
-        out = materialize.compact_store(spark, root)
+        out = fn()
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(key, None)
-    assert out == {"rewritten_partitions": [], "snapshot": 1}
-    assert sc.statusTracker().getJobIdsForGroup("compact-probe") == []
+    return sc.statusTracker().getJobIdsForGroup(group), out
+
+
+def test_materialize_resumable_one_commit_needs_no_compaction(
+        spark, sf_dir, tmp_path):
+    """A fresh run is one snapshot written by one Spark job, with one
+    file per write task, so compaction finds nothing to rewrite and
+    starts no Spark job."""
+    pages = corpus.pages_df(spark, sf_dir).limit(60)
+    root = str(tmp_path / "store")
+    sc = spark.sparkContext
+    jobs, _ = _group_jobs(sc, "ingest-probe", lambda: (
+        materialize.materialize_resumable(pages, root, chunks=4)))
+    assert materialize.current_snapshot(root) == 1
+    files = materialize._manifest(root)["files"]
+    # Spark names a task's file part-<task partition>-...: one per task
+    tasks = [f.split("-")[1] for f in files]
+    assert files and len(tasks) == len(set(tasks))
+    assert len(jobs) == 1
+    stages = sc.statusTracker().getJobInfo(jobs[0]).stageIds
+    assert len(files) <= sum(sc.statusTracker().getStageInfo(st).numTasks
+                             for st in stages)
+    jobs, out = _group_jobs(sc, "compact-probe",
+                            lambda: materialize.compact_store(spark, root))
+    assert out == {"snapshot": 1, "files_removed": 0, "files_added": 0}
+    assert jobs == []
 
 
 def test_expansion_spec_rules(spark):
@@ -467,6 +547,15 @@ def test_streaming_matches_batch(spark, sf_dir, tmp_path):
     assert materialize.read_triples(spark, root).count() == len(got)
 
 
+def _pushes_bucket(plan: str) -> bool:
+    """The scan's pushed data filters test ``bucket`` for equality, so
+    parquet row-group statistics skip the other buckets."""
+    import re
+
+    return re.search(r"PushedFilters: \[[^\]]*EqualTo\(bucket,", plan) \
+        is not None
+
+
 def _lookup(spark, root, subj):
     """Constant-subject SPARQL at the store's own modulus: the point
     lookup every caller uses."""
@@ -488,10 +577,9 @@ def test_subject_lookup_prunes(spark, sf_dir, tmp_path):
     assert rows and rows == {
         (r["pred"], r["obj"]) for r in
         store.filter(F.col("subj") == target).collect()}
-    # the physical plan must show a partition filter on bucket
+    # the bucket filter must reach the parquet scan
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan.split(
-        "PartitionFilters", 1)[1][:200], plan
+    assert _pushes_bucket(plan), plan
 
 
 def test_writer_curie_compression():
@@ -585,7 +673,7 @@ def test_snapshot_time_travel(spark, sf_dir, tmp_path):
               for k in (1, 2, 3)]
     assert counts[0] > 0 and counts == sorted(counts)
     assert counts[2] == total
-    # snapshot reads keep the partition columns for pruning
+    # snapshot reads keep the graph and bucket columns for pruning
     cols = materialize.read_triples(spark, root, snapshot=1).columns
     assert "graph" in cols and "bucket" in cols
     # snapshot 2 must equal commits 0+1's lineage triple counts
@@ -619,7 +707,7 @@ def test_stream_materialize_and_compact(spark, sf_dir, tmp_path):
 
     pre = set(materialize._manifest(root)["files"])
     res = materialize.compact_store(spark, root)
-    assert res["rewritten_partitions"]
+    assert res["files_removed"] == len(pre)
     # the compact commit records the rows it rewrote
     compact = materialize._manifest(root, res["snapshot"])
     rewritten = spark.read.parquet(*[
@@ -630,12 +718,12 @@ def test_stream_materialize_and_compact(spark, sf_dir, tmp_path):
     assert materialize.read_triples(spark, root).count() == total
     assert materialize.read_triples(
         spark, root, snapshot=res["snapshot"]).count() == total
-    # every live partition now holds at most one data file
-    from rdf_rdfa_spark.pipeline.materialize import _store_files
-    per_part = {}
-    for rel in _store_files(root + "/triples"):
-        per_part[os.path.dirname(rel)] = per_part.get(os.path.dirname(rel), 0) + 1
-    assert max(per_part.values()) == 1
+    # every live file was added by the compact commit, so a second
+    # compaction has nothing to rewrite
+    live = materialize._store_files(root + "/triples")
+    assert live == set(compact["files"]) and not live & pre
+    assert materialize.compact_store(spark, root) == {
+        "snapshot": res["snapshot"], "files_removed": 0, "files_added": 0}
 
 
 def test_bgp_select_semantics(spark):
@@ -777,8 +865,7 @@ def test_stream_materialize_reconciles_orphan_files(spark, sf_dir, tmp_path):
     q.awaitTermination()
     tracked = materialize.read_triples(spark, root).count()
     # simulate a crashed attempt: copy a data file to an untracked name
-    some = glob.glob(os.path.join(root, "triples", "graph=*", "bucket=*",
-                                  "*.parquet"))[0]
+    some = glob.glob(os.path.join(root, "triples", "*.parquet"))[0]
     orphan = os.path.join(os.path.dirname(some), "part-orphan.c000.parquet")
     shutil.copyfile(some, orphan)
     # no manifest lists the orphan, so no read sees it
@@ -994,7 +1081,7 @@ def test_precompaction_snapshot_read_is_partial(spark, sf_dir, tmp_path):
                                   root)
     pre = materialize.current_snapshot(root)
     full = materialize.read_triples(spark, root, snapshot=pre).count()
-    assert materialize.compact_store(spark, root)["rewritten_partitions"]
+    assert materialize.compact_store(spark, root)["files_removed"]
     # the old snapshot still reads (possibly partial), never raises
     partial = materialize.read_triples(spark, root, snapshot=pre).count()
     assert 0 <= partial <= full
@@ -1208,10 +1295,10 @@ def test_free_endpoint_paths_match_python_reference(spark):
 
 
 def test_sparql_bucket_pruning_on_store(spark, sf_dir, tmp_path):
-    """Constant-subject SPARQL over the materialized store prunes to
-    ONE bucket partition directory: the partition filter on `bucket`
-    reaches the scan — a point lookup on a 100 TB store reads
-    1/buckets of it."""
+    """Constant-subject SPARQL over the materialized store filters ONE
+    bucket: the filter on `bucket` is pushed to the parquet scan, whose
+    row-group statistics skip the bucket-sorted row groups of the
+    others."""
     from rdf_rdfa_spark.pipeline import materialize
     from rdf_rdfa_spark.pipeline.sparql import sparql
 
@@ -1224,8 +1311,7 @@ def test_sparql_bucket_pruning_on_store(spark, sf_dir, tmp_path):
     q = 'SELECT ?p ?o WHERE { <%s> ?p ?o }' % subj
     pruned = sparql(store, q, buckets=16)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan.split(
-        "PartitionFilters", 1)[1][:200], plan
+    assert _pushes_bucket(plan), plan
     # same answers as the unpruned query
     a = {tuple(r) for r in pruned.collect()}
     b = {tuple(r) for r in sparql(store, q).collect()}
